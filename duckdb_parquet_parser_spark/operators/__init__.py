@@ -125,11 +125,6 @@ def collect_queries() -> tuple[dict[str, QueryFn], dict[str, str]]:
 # bound.
 # 41 + 1 + 8 = 50; the window is exactly full.
 #
-# Also this round: ns_dedup_minhash_salted RETIRED from the registered
-# surface (VERDICT r16 #3 — one plan under two names since the r16
-# swap; the sf1 n_blocks sweep showed no distinct operating point worth
-# a second registration). 150 + 8 - 1 = 157 registered queries.
-#
 # Re-certification rule (refined round 10, unchanged): queries whose
 # EXECUTABLE code or oracle changed must sit in the head;
 # docstring-only edits do not count.

@@ -404,26 +404,6 @@ def _verify_jaccard_pairs(
     )
 
 
-def q_ns_dedup_minhash_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ns_dedup_minhash with skew-salted candidate generation.
-
-    RETIRED from the registered surface in round 17 (VERDICT r16 #3 /
-    REVIEW_r16 #2): since the r16 swap made ``ns_dedup_minhash`` itself
-    run the salted generator, this row registered ONE plan under TWO
-    names — the bench priced it twice and two cert slots paid for one
-    pipeline. The sf1 ``n_blocks`` sweep (scripts/salt_blocks_study.py,
-    BENCH_NOTES) adjudicated the alternative: an explicit operating
-    point buys only a few percent of wall past the knee at the default
-    8, so no distinct measured plan justifies a second registration.
-    ``lsh_candidate_pairs_salted(n_blocks=...)`` remains the sized
-    library knob, and this function remains the Spark-vs-Spark test
-    seam (tests/test_r16_fixes.py); cert history: green r13–r16
-    (ledger note in COVERAGE.md)."""
-    sigs = _cached_signatures(spark, sf_dir)
-    pairs = lsh_candidate_pairs_salted(sigs)
-    return _verify_jaccard_pairs(spark, sf_dir, pairs)
-
-
 def verified_jaccard(words: DataFrame, pairs: DataFrame) -> DataFrame:
     """Exact Jaccard for candidate pairs only (verification stage)."""
     sizes = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -471,9 +451,7 @@ def q_ns_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~linear with no conf change and was faster at fixture scale too
     (5.4 vs 7.1 s driver walls). The plain generator remains library
     surface (:func:`lsh_candidate_pairs`) for graphs without hot
-    clusters; this query has run the salted plan since r16 (the
-    duplicate ``ns_dedup_minhash_salted`` registration was retired in
-    r17 — its docstring holds the adjudication).
+    clusters; this query has run the salted plan since r16.
     """
     sigs = _cached_signatures(spark, sf_dir)
     pairs = lsh_candidate_pairs_salted(sigs, with_sizes=True)
@@ -1081,11 +1059,9 @@ def _simhash_pairs_materialized(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs
 
 
-CC_ROUNDS = 4  # doubling rounds; covers component diameter ≥ 2^4 (test-
-#                verified fixpoint: rounds 3/4/5 agree on the fixtures)
-
-
-CC_CHECKPOINT_EVERY = 2  # lineage-cut cadence, see connected_components
+CC_ROUNDS = 4  # rounds per block for the text and video graphs, and the
+#                rounds the unrolled SQL oracles run (the fixture graphs
+#                reach their fixpoint within one such block)
 
 # Convergent-CC runaway guard FLOOR for the text queries: doubling
 # covers diameter ~2^rounds and the SimHash fixtures converge in ONE
@@ -1114,132 +1090,6 @@ def _text_cc_ceiling(n_edges: int) -> int:
     return max(TEXT_CC_MAX_ROUNDS, math.ceil(math.log2(2 * n_edges)) + 4)
 
 
-def connected_components(
-    edges: DataFrame,
-    rounds: int = CC_ROUNDS,
-    checkpoint_every: int = CC_CHECKPOINT_EVERY,
-    edges_materialized: bool = False,
-    cut_final: bool = True,
-    final_doubling: bool = True,
-) -> DataFrame:
-    """(doc, component): connected components of an undirected pair graph,
-    component id = min doc_id in the component. FIXED-ROUND FAST PATH —
-    demoted round 13 (VERDICT r12 #3): the certified text and embedding
-    queries run ``connected_components_converged`` below; this variant is
-    for callers with a VERIFIED diameter bound and a guard. It is only
-    correct when ``rounds`` covers the graph's diameter, and it cannot
-    tell you when that stops being true — every remaining consumer must
-    pin a fixpoint-margin test on its own graph family (the media cluster
-    pipelines do: their class-clique / frame-match graphs have
-    closed-form diameter ≤ 3, tests/test_multimodal_dedup.py margins,
-    plus the converged-vs-fast-path equality check in
-    tests/test_dedup_scale.py). Do NOT point it at an unknown-shape graph
-    — that is the round-11 dead end (both the query AND an unrolled
-    oracle under-converge identically; parity cannot see it).
-
-    Algorithm: synchronous min-label propagation with pointer doubling —
-    each round every node takes the min label over {self} ∪ neighbors
-    (the self-loop in ``adj`` folds "own label" into the same groupBy),
-    then one label-of-label join halves the remaining path length (the
-    classic Shiloach-Vishkin / MapReduce-CC trick; see "Connected
-    Components in MapReduce and Beyond"). A FIXED round count replaces the
-    per-round convergence probe: doubling covers diameter ~2^rounds, the
-    media duplicate graphs are near-cliques (diameter ≤ 3 by
-    construction), and skipping the probe saves one job per block —
-    worth it ONLY under the guards above.
-
-    Scale shape (100 TB): every step is an equi-join or groupBy keyed on
-    doc id — hash-partitioned, AQE-balanced, no global ordering anywhere.
-    The expensive input (the near-dup pair graph) is materialized exactly
-    once, as is the small adjacency+self-loop list reused by every round;
-    per-round lineage stays one checkpoint deep. ``checkpoint_df``
-    (session.py) picks the durability: executor-local blocks by default,
-    a reliable ``spark.graft.checkpointDir`` checkpoint on clusters where
-    an executor loss must not kill the iteration.
-    """
-    from ..session import checkpoint_df
-
-    # `edges_materialized=True` tells us the caller hands an already
-    # lineage-cut frame (e.g. the memoized pair table) — re-checkpointing
-    # it would spend one whole job re-writing identical blocks.
-    ed = edges.select("doc_a", "doc_b")
-    if not edges_materialized:
-        ed = checkpoint_df(ed, eager=True)
-    bi = ed.select(F.col("doc_a").alias("doc"), F.col("doc_b").alias("nbr")).union(
-        ed.select(F.col("doc_b"), F.col("doc_a"))
-    )
-    # Hash-partition the adjacency on the propagation join key ONCE —
-    # localCheckpoint preserves the partitioning, so every round's
-    # adj⋈labels join exchanges only the (tiny) label frame while the
-    # |2E+V|-row adjacency never reshuffles (the Pregel layout: partition
-    # the graph once, ship only messages).
-    adj = checkpoint_df(
-        bi.union(
-            bi.select("doc").distinct().select("doc", F.col("doc").alias("nbr"))
-        ).repartition(F.col("nbr")),
-        eager=True,
-    )
-    labels = adj.filter(F.col("doc") == F.col("nbr")).select(
-        "doc", F.col("doc").alias("label")
-    )
-    for r in range(rounds):
-        # min over {self} ∪ neighbors' labels (self-loop carries own label)
-        if r == 0:
-            # Round-1 specialization (round 9): labels is still the
-            # IDENTITY mapping, so the labels join would pair every nbr
-            # with itself — an algebraic no-op costing a whole AQE
-            # exchange at the per-job scheduling floor. min(label over
-            # {self} ∪ N) with identity labels IS min(nbr) over the
-            # self-looped adjacency. Identical labels for every graph;
-            # measured 16 → 14 stage-jobs and -3.1 s at sf0.1.
-            prop = adj.groupBy("doc").agg(F.min("nbr").alias("label"))
-        else:
-            prop = (
-                adj.join(labels.withColumnRenamed("doc", "nbr"), "nbr")
-                .groupBy("doc")
-                .agg(F.min("label").alias("label"))
-            )
-        if r == rounds - 1 and not final_doubling:
-            # `final_doubling=False` ends on the propagation step: the
-            # last pointer-doubling join (one more label-keyed exchange =
-            # one more stage-job) buys coverage the caller has verified it
-            # does not need — the fixpoint-margin test asserts rounds and
-            # rounds+1 agree UNDER THIS SETTING, so a graph that ever
-            # needed the dropped join fails the guard instead of silently
-            # mislabeling. Default keeps the doubling (full 2^rounds-ish
-            # coverage — the adversarial long-path tests rely on it).
-            labels = prop
-        else:
-            # pointer doubling: label := min(label, label(label))
-            parent = prop.select(
-                F.col("doc").alias("p_doc"), F.col("label").alias("p_label")
-            )
-            labels = prop.join(parent, prop.label == parent.p_doc, "left").select(
-                "doc",
-                F.least("label", F.coalesce("p_label", "label")).alias("label"),
-            )
-        # Lineage cut every `checkpoint_every` rounds, not every round
-        # (VERDICT r5 #3): an eager checkpoint is a full job, and at the
-        # AQE stage-job floor the per-round materializations — not the
-        # data — dominated the wall clock at bench SF. Unrolling K rounds
-        # under ONE query lets AQE plan/reuse across them (the doubling
-        # join's both sides are the same subplan → ReusedExchange) and
-        # halves the job count at K=2; lineage depth stays bounded at K
-        # rounds. `cut_final=False` additionally skips the LAST cut for
-        # callers that consume the labels exactly once right away (the
-        # components query): the final checkpoint job disappears and the
-        # consumer's single execution carries the unrolled rounds —
-        # measured 3.5 s → 2.6 s at sf0.1 (round 8, BENCH_NOTES). The
-        # default keeps the cut so library callers never inherit an
-        # unbounded plan. Labels are identical either way — only where
-        # the lineage is cut changes.
-        if (r + 1) % checkpoint_every == 0 and r != rounds - 1:
-            labels = checkpoint_df(labels, eager=True)
-        elif r == rounds - 1 and cut_final:
-            labels = checkpoint_df(labels, eager=True)
-    return labels.select("doc", F.col("label").alias("component"))
-
-
 def connected_components_converged(
     edges: DataFrame,
     max_rounds: int = 64,
@@ -1247,42 +1097,62 @@ def connected_components_converged(
     edges_materialized: bool = False,
     extend_max_rounds=None,
 ) -> tuple[DataFrame, int]:
-    """(doc, component) + rounds used: min-label propagation with pointer
-    doubling ITERATED TO CONVERGENCE — the principled CC primitive, home
-    of every certified graph consumer since round 13 (text components /
-    canonical via ``q_ns_dedup_components``/``q_ns_dedup_cluster_
-    canonical``, embeddings via embed_cluster.py). Round 11 proved that a
-    fixed round budget silently under-converges on unknown-diameter
-    graphs (a sparse cosine CHAIN) and that an oracle unrolling the SAME
-    rounds agrees with the wrong answer — so the fixed-round
-    ``connected_components`` above is demoted to a guarded fast path and
-    the certified queries run this variant.
+    """(doc, component) + rounds used: connected components of an
+    undirected pair graph, component id = min doc_id in the component,
+    by min-label propagation with pointer doubling ITERATED TO
+    CONVERGENCE. The engine's one CC primitive: text components and
+    canonical selection, the media cluster pipelines
+    (multimodal_dedup.py) and embedding clusters (embed_cluster.py) all
+    run it. A fixed round budget is not safe on graphs of unknown
+    diameter: it silently under-converges on chains, and an oracle
+    unrolling the same rounds agrees with the wrong answer.
 
-    Round structure: ``probe_every`` propagation+doubling rounds run
-    UNROLLED under one lineage cut (AQE reuses the doubling join's twin
-    subplans), then ONE probe job decides convergence. The round-13 probe
-    is a STATIONARITY CHECK, not the r12 sum compare. Round 17 states it
-    in its cheapest equivalent form: count edges whose endpoints carry
-    DIFFERENT labels. For a labeling ``l`` with ``l(x) ≤ x``
-    (monotonicity from the identity start), one synchronous
-    min-propagation round strictly decreases some label iff some
-    adjacency pair has ``l(v) < l(u)`` — and the adjacency carries every
-    edge in BOTH orientations, so that is iff some edge has
-    ``l(u) ≠ l(v)``. Zero differing edges therefore proves the EXACT
-    fixpoint in one observation: labels are constant on every component;
-    the component's min id m has ``l(m) ≤ m``, hence the constant IS m —
-    the true CC labeling. The r13 spelling ran the propagation round for
-    real (adjacency join + groupBy + label join); the edge-disagreement
-    count skips the groupBy exchange and probes the E-row edge frame
-    instead of the 2E+V-row adjacency — same verdict, measured 8 → 5
-    probe jobs at sf0.1 (OPTIMIZATION_r17.md). As before, a graph
-    converging in the FINAL block of ``max_rounds`` is detected by that
-    block's probe instead of raising.
+    Round: every node takes the min label over {self} ∪ neighbors (the
+    self-loop in ``adj`` folds "own label" into the same groupBy) —
+    call that ``P`` — then one label-of-label join halves the remaining
+    path length: ``new(x) = least(P(x), P(P(x)))`` (the classic
+    Shiloach-Vishkin / MapReduce-CC trick; see "Connected Components in
+    MapReduce and Beyond"). ``probe_every`` rounds run UNROLLED under
+    one eager label checkpoint (AQE reuses the doubling join's twin
+    subplans), then the stop rule decides convergence.
+
+    Stop rule. Labels start at the identity and only decrease, so
+    ``l(x) ≤ x`` and every label is an id in x's component. A labeling
+    is the exact CC answer iff it is STATIONARY — one more propagation
+    round changes nothing: then no edge has ``l(u) ≠ l(v)`` (the
+    adjacency carries both orientations), labels are constant on each
+    component, and the component's min id m has ``l(m) ≤ m``, so the
+    constant IS m. Two checks establish stationarity of the block's
+    output, cheapest first:
+
+    1. Observed, free. The block's last round also takes each doc's
+       input label ``l`` as ``min(label) where nbr == doc`` (the
+       self-loop row, no extra exchange), and an ``Observation`` on the
+       label checkpoint counts the docs x with ``new(x) ≠ l(x)`` or
+       ``P(P(x)) ≠ l(P(x))``. If none, the input was already the
+       fixpoint: ``P(x) ≤ l(x)`` through the self-loop and ``new ≤ P``,
+       so ``new == l`` forces ``P == l``; and the output equals that
+       input. The second term cannot make a zero count non-zero: when
+       ``new == l`` everywhere, ``P == l`` holds at ``P(x)`` too.
+    2. Probed, one job chain. Otherwise count the edges whose endpoints
+       carry different labels in the output; zero proves stationarity
+       by the argument above. This probes the E-row edge frame instead
+       of re-running a propagation round over the 2E+V-row adjacency.
+
+    Check 1 only ever skips a probe that would have returned zero, so
+    the stop block, ``rounds_done`` and the labels are exactly those of
+    probing every block. A graph converging in the FINAL block of
+    ``max_rounds`` is detected by that block's checks instead of
+    raising. The same observation also counts the label rows; if that
+    count differs from the vertex count observed on the adjacency
+    checkpoint (or both read zero over a non-empty graph) the
+    observation never ran — a lazy checkpoint reports zeros — and the
+    call raises instead of reading "nothing changed" as converged.
 
     Raises ``RuntimeError`` if ``max_rounds`` propagation rounds don't
     reach the fixpoint — doubling covers diameter ~2^rounds, so the
     default 64 is a runaway guard (an unstable edge list, not a real
-    graph), not a tuning knob. ``extend_max_rounds`` (r17): an optional
+    graph), not a tuning knob. ``extend_max_rounds``: an optional
     ``() -> int`` callable consulted ONCE, only when the budget is
     exhausted without a fixpoint — the scale-aware ceiling
     (``_text_cc_ceiling`` over an edge count) moves out of the happy
@@ -1290,24 +1160,19 @@ def connected_components_converged(
     pathological one extends the budget (work done so far is kept) and
     raises only if the extended ceiling is exhausted too.
 
-    Scale shape (100 TB): identical to the fast path — the adjacency is
-    hash-partitioned once and checkpointed, every round exchanges only
-    the (doc, label) frame, O(log diameter) rounds; the probe is one more
-    label-frame join per block. ``edges_materialized=True`` skips the
-    edge lineage cut when the caller hands an already-checkpointed frame
-    (the memoized pair table) — same contract as the fast path.
+    Scale shape (100 TB): every step is an equi-join or groupBy keyed on
+    doc id — hash-partitioned, AQE-balanced, no global ordering. The
+    adjacency+self-loop list is hash-partitioned on the propagation key
+    once and checkpointed (localCheckpoint preserves the partitioning),
+    so every round exchanges only the (doc, label) frame — the Pregel
+    layout: partition the graph once, ship only messages. Per-block
+    lineage stays one checkpoint deep; ``checkpoint_df`` (session.py)
+    picks executor-local or reliable durability. ``edges_materialized=
+    True`` skips the edge lineage cut when re-reading the edges is
+    cheaper than one more job (an already-checkpointed pair table, or a
+    band join over a small checkpointed signature frame)."""
+    from pyspark.sql import Observation
 
-    Job budget per block: 1 label checkpoint + ~4 stationarity-probe AQE
-    jobs + the block's internal AQE stage materializations (≤ 16 at
-    bench SF, tests/test_plans.py embed budget). Text near-clique graphs
-    converge at block 1 with ``probe_every=CC_ROUNDS``; the full
-    components pipeline measures 29 jobs at sf0.1 (restated waiver
-    budget ≤ 30 — the probe and the surfaced block-checkpoint jobs are
-    the convergence price; the wall is BETTER: the checkpointed labels
-    left the warm_shared leg flat-to-better across windows — 2.79 s in
-    the same-tree probe window, 3.23 s in the shipped BENCH_FULL window
-    vs r12's 3.38 s; warm_vs_med 1.30 ≤ the 1.5 condition —
-    BENCH_NOTES r13)."""
     from ..session import checkpoint_df
 
     if probe_every < 1:
@@ -1320,12 +1185,17 @@ def connected_components_converged(
     bi = ed.select(F.col("doc_a").alias("doc"), F.col("doc_b").alias("nbr")).union(
         ed.select(F.col("doc_b"), F.col("doc_a"))
     )
+    vertices = Observation()
     adj = checkpoint_df(
         bi.union(
-            bi.select("doc").distinct().select("doc", F.col("doc").alias("nbr"))
+            bi.select("doc")
+            .distinct()
+            .observe(vertices, F.count(F.lit(1)).alias("n"))
+            .select("doc", F.col("doc").alias("nbr"))
         ).repartition(F.col("nbr")),
         eager=True,
     )
+    n_vertices = vertices.get["n"]
     labels: DataFrame | None = None
     rounds_done = 0
     extended = extend_max_rounds is None
@@ -1334,42 +1204,48 @@ def connected_components_converged(
         cur = labels
         for _ in range(block):
             if cur is None:
-                # identity labels: min over {self} ∪ N is min(nbr) over
-                # the self-looped adjacency (the fast path's round-1
-                # specialization — the labels join algebraically elided)
-                prop = adj.groupBy("doc").agg(F.min("nbr").alias("label"))
+                # identity labels: label(nbr) is nbr itself, so the
+                # labels join is elided and the round reads adj alone
+                src, lab = adj, "nbr"
             else:
-                prop = (
-                    adj.join(cur.withColumnRenamed("doc", "nbr"), "nbr")
-                    .groupBy("doc")
-                    .agg(F.min("label").alias("label"))
-                )
-            parent = prop.select(
-                F.col("doc").alias("p_doc"), F.col("label").alias("p_label")
+                src, lab = adj.join(cur.withColumnRenamed("doc", "nbr"), "nbr"), "label"
+            # `prev`, the doc's input label, rides on its self-loop row;
+            # only the block's last round is observed, so column pruning
+            # drops it from the rounds before
+            own = F.when(F.col("nbr") == F.col("doc"), F.col(lab))
+            prop = src.groupBy("doc").agg(
+                F.min(lab).alias("label"), F.min(own).alias("prev")
             )
+            parent = prop.select(*(F.col(c).alias(f"p_{c}") for c in prop.columns))
             cur = prop.join(parent, prop.label == parent.p_doc, "left").select(
                 "doc",
                 F.least("label", F.coalesce("p_label", "label")).alias("label"),
+                "prev",
+                "p_label",
+                "p_prev",
             )
-        nxt = checkpoint_df(cur, eager=True)
-        rounds_done += block
-        # stationarity probe, edge-disagreement form (docstring proof):
-        # an edge whose endpoints disagree exists iff one more
-        # synchronous propagation round would strictly decrease a label.
-        # Probes the E-row edge frame (labels broadcast-joined onto it at
-        # runtime) instead of re-running a propagation round over the
-        # 2E+V-row adjacency — same verdict, fewer exchanges. A zero-edge
-        # graph probes an empty frame: changed = 0, converged on block 1
-        # (no sentinel dance — count, not a nullable sum).
-        la = nxt.select(F.col("doc").alias("doc_a"), F.col("label").alias("l_a"))
-        lb = nxt.select(F.col("doc").alias("doc_b"), F.col("label").alias("l_b"))
-        changed = (
-            ed.join(la, "doc_a")
-            .join(lb, "doc_b")
-            .filter(F.col("l_a") != F.col("l_b"))
-            .count()
+        # The parent's propagation is observed too, so both sides of the
+        # doubling join aggregate the same columns and AQE runs their
+        # exchange once; the zero test is unchanged (docstring, 1.)
+        moved = (F.col("label") != F.col("prev")) | (F.col("p_label") != F.col("p_prev"))
+        stats = Observation()
+        nxt = checkpoint_df(
+            cur.observe(
+                stats,
+                F.count(F.lit(1)).alias("n"),
+                F.count(F.when(moved, 1)).alias("changed"),
+            ).select("doc", "label"),
+            eager=True,
         )
-        if changed == 0:
+        rounds_done += block
+        seen = stats.get
+        if seen["n"] != n_vertices or (n_vertices == 0 and not adj.isEmpty()):
+            raise RuntimeError(
+                f"connected_components_converged: the label checkpoint "
+                f"observed {seen['n']} rows for {n_vertices} vertices — "
+                "checkpoint_df must materialize eagerly"
+            )
+        if seen["changed"] == 0 or _disagreeing_edges(ed, nxt) == 0:
             out = nxt.select("doc", F.col("label").alias("component"))
             # propagate the checkpoint's persisted-RDD tag (ADVICE r8)
             # through the rename so memo/bench callers can promptly free
@@ -1389,6 +1265,19 @@ def connected_components_converged(
         f"connected_components_converged: no fixpoint within "
         f"{max_rounds} rounds — the graph has pathological diameter or "
         "the edge list is unstable between evaluations"
+    )
+
+
+def _disagreeing_edges(ed: DataFrame, labels: DataFrame) -> int:
+    """Edges whose endpoints carry different labels (the stop rule's
+    probe; labels are broadcast-joined onto the edge frame at runtime)."""
+    la = labels.select(F.col("doc").alias("doc_a"), F.col("label").alias("l_a"))
+    lb = labels.select(F.col("doc").alias("doc_b"), F.col("label").alias("l_b"))
+    return (
+        ed.join(la, "doc_a")
+        .join(lb, "doc_b")
+        .filter(F.col("l_a") != F.col("l_b"))
+        .count()
     )
 
 
@@ -1434,48 +1323,24 @@ def q_ns_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (representative = min id). This is the step that turns pairwise
     near-dup evidence into actual drop decisions in a training pipeline.
 
-    Round 13 migrates the labeling to ``connected_components_converged``
-    (VERDICT r12 #3): the fixed-round variant's correctness rested on a
-    graph-shape argument (SimHash near-dup graphs are near-cliques ⇒
-    diameter ≤ 3) that round 11's embed-chain dead end proved can break
-    silently — and when it breaks, an oracle unrolling the same rounds
-    agrees with the wrong answer. Convergent CC runs ``CC_ROUNDS`` rounds
-    unrolled per block (the same single-consumer AQE-reuse shape the
-    fixed-round config had), then one stationarity probe; the fixture
-    graphs converge at block 1. Job cost over the old plan: the label
-    checkpoint + the probe, plus the block's AQE materializations now
-    surfacing as their own jobs instead of folding into the consumer —
-    20 → 29 measured at sf0.1, restated waiver budget ≤ 30
-    (tests/test_plans.py; floor-normalized 30 × 0.164 ≈ 4.9 s, still
-    under the waiver's 5 s leg) — while the WALL improves: warm_shared
-    flat-to-better (2.79 s same-tree probe / 3.23 s shipped window vs
-    r12's 3.38 s; the consumer reads checkpointed labels instead of
-    re-carrying four unrolled rounds). The oracle stays
-    the linear unrolled min-label chain (bench-runnable where the
-    recursive closure is quadratic in the giant cluster); the parity
-    check is now STRONGER than fixed-vs-unrolled ever was: the Spark side
-    provably converges, so if ``CC_ROUNDS`` unrolled oracle rounds ever
-    under-converge, the hash comparison trips instead of both sides
-    agreeing on the wrong labels. And it DID trip, the same round: the
-    first post-migration randomized sweep caught the 4-round oracle
-    under-converging on seed 22's random duplicate graph (the exact
-    round-11 masking failure, now surfaced on the ORACLE side by the
-    convergent query). Consequence, pinned in tests/test_randomized_
-    docs.py: the unrolled oracle is valid exactly where the margin test
-    pins the input at its 4-round fixpoint (driver fixtures, bench SF);
-    randomized families adjudicate this pipeline against EXACT
-    ``WITH RECURSIVE`` closures instead. ``ns_dedup_components_
-    converged`` (curation.py) runs this same pipeline against the
-    recursive fixpoint oracle at the driver gate too — two independent
-    oracle techniques over one implementation.
-
-    Fixed-round history, kept for the fast path's guard rationale: round
-    8/9 tuned the unrolled no-cut config (16 → 14 stage-jobs, 7.7 → 4.6 s
-    cold CC tail at sf0.1); ``final_doubling=False`` was shipped briefly
-    and REVERTED — the base-5000 randomized sweep found a graph (docs
-    seed 5003, an 83-edge chain-y cluster, pinned in
-    tests/test_randomized_docs.py) where doubling-3 + one hop
-    under-converges while full doubling-4 is exact."""
+    Labels come from ``connected_components_converged`` with
+    ``CC_ROUNDS``-round blocks; the fixture graphs converge within the
+    first block (on the smaller lakes its last round changes nothing and
+    the observed stop rule skips the edge probe). The oracle is the
+    linear unrolled min-label chain (bench-runnable where the recursive
+    closure is quadratic in the giant cluster), ``CC_ROUNDS`` rounds
+    deep. Because the Spark side provably converges, parity is a real
+    check: if the unrolled oracle rounds ever under-converge, the hash
+    comparison trips instead of both sides agreeing on the wrong labels.
+    It did trip once: randomized seed 22's duplicate graph needs more
+    than four rounds. Consequence, pinned in tests/test_randomized_
+    docs.py: the unrolled oracle is valid exactly where the
+    convergence-bound test pins the input within one ``CC_ROUNDS`` block
+    (the fixture SFs, bench SF); randomized families adjudicate this
+    pipeline against EXACT ``WITH RECURSIVE`` closures instead.
+    ``ns_dedup_components_converged`` (curation.py) runs this same
+    pipeline against the recursive fixpoint oracle at the parity gate
+    too — two independent oracle techniques over one implementation."""
     comp = _text_components_materialized(spark, sf_dir)
     w_size = F.count(F.lit(1)).over(Window.partitionBy("component"))
     return comp.select(
@@ -1712,9 +1577,6 @@ ORACLES = {
     """,
 }
 
-# ns_dedup_minhash_salted: retired r17 (see its docstring) — no
-# registration, no oracle row; the plain row IS the salted plan.
-
 # Incremental dedup: same signature/band/verify pipeline, but candidate
 # generation restricts the join's right side to the new batch (b.doc_id %
 # INCR_MOD = INCR_REM) — the corpus never pairs with itself.
@@ -1768,14 +1630,14 @@ ORACLES["ns_dedup_incremental"] = f"""
 # so the in-session oracle certifies it too.
 ORACLES["ns_dedup_incremental_persisted"] = ORACLES["ns_dedup_incremental"]
 
-# Connected components: the SAME fixed-round min-label-propagation +
-# pointer-doubling the Spark side runs, unrolled to CC_ROUNDS SQL stages.
+# Connected components: the SAME min-label-propagation + pointer-doubling
+# round the Spark side runs, unrolled to CC_ROUNDS SQL stages.
 # Each stage is one equi-join + groupBy and one label-of-label join — both
 # LINEAR in |edges| — so the oracle is bench-feasible at sf0.1, unlike the
 # previous recursive-CTE transitive closure (quadratic in the largest
 # duplicate cluster: every (node, reachable-node) pair is enumerated).
-# Both engines run past the fixpoint (tests assert rounds/rounds+1 agree),
-# so results match exactly.
+# The Spark side iterates to the fixpoint; the tests pin that the fixture
+# graphs reach it within CC_ROUNDS rounds, so results match exactly.
 # AS MATERIALIZED is load-bearing: n{k}/l{k} are each referenced twice, so
 # an inlining planner would double the whole upstream pipeline per round —
 # 2^CC_ROUNDS copies of the simhash+band join (measured: 29 s instead of

@@ -7,8 +7,8 @@ Round 10 certified near-duplicate PAIR detection for all three modalities
 evidence into actual keep/drop decisions — no certified query resolved
 media pairs into clusters. This module closes that loop by composing the
 EXISTING machinery: the shared banded-Hamming pair engine
-(multimodal.py ``_banded_hash_pairs``) feeds the modality-agnostic
-``connected_components`` + keep-best rank from dedup.py — zero new
+(multimodal.py ``_banded_hash_pairs``) feeds the engine's one CC primitive
+``connected_components_converged`` + keep-best rank from dedup.py — zero new
 algorithmic surface, one new composition, which is exactly why it lives
 in its OWN module: dedup.py / multimodal.py / multimodal_synth.py were
 all driver-certified in round 10 with unchanged plans, and the
@@ -31,7 +31,9 @@ the Python decode runs exactly once (the round-6/round-10 self-join
 recompute lesson, plan-asserted for the pair queries in
 tests/test_plans.py); candidates come from ONE (band, key) equi-join
 shuffling 8-byte longs; components are O(log diameter) equi-join rounds
-(dedup.py:850, the fixed-round fast path — correct here because these graphs carry closed-form diameter bounds; the certified text queries run the convergent variant, dedup.py:976); the canonical pick is one
+iterated to their provable fixpoint (dedup.py
+``connected_components_converged``), so a real near-duplicate chain of
+any length resolves to one cluster; the canonical pick is one
 hash exchange on ``component`` driving both window functions. No
 all-pairs anywhere — the oracles' quadratic self-joins are sf0.01
 yardsticks only.
@@ -58,7 +60,7 @@ from pyspark.sql.window import Window
 
 # Composition-only imports: these modules' own plans and oracles are
 # untouched (see module docstring — certified r10, must stay parked).
-from .dedup import _CC_ROUND_CTES, CC_ROUNDS, connected_components
+from .dedup import _CC_ROUND_CTES, CC_ROUNDS, connected_components_converged
 from .multimodal import (
     AHASH_HAMMING_MAX,
     VIDEO_MATCH_FRAC,
@@ -79,56 +81,31 @@ from .multimodal_synth import (
 )
 
 
-# Round 13: connected_components_converged moved to dedup.py — the graph
-# primitives live together and the circular-import trap (dedup's certified
-# text queries now RUN the convergent variant) dissolves. Re-exported here
-# because this module introduced it (r12) and tests/docs reference it.
-from .dedup import connected_components_converged  # noqa: F401
-
-
-#: Fixed CC round budget for the CLIQUE-shaped image/audio pair graphs
-#: (r17, guide §1.2 — shrink the plan to what the graph needs): same-class
-#: decodable docs sit pairwise within the banding radius by construction
-#: (the variant XOR flips keep Hamming ≤ 3), so every component is a
-#: COMPLETE graph of diameter 1, at any scale factor. One min-label
-#: propagation round over a clique already hands every member the min id;
-#: rounds=2 runs a full extra propagation+doubling round as margin (the
-#: same rounds-vs-rounds+1 margin the fixture tests pin). The previous
-#: CC_ROUNDS=4 budget doubled the unrolled consumer plan twice more for
-#: coverage no clique can need — measured 11 → 7 scheduled jobs for the
-#: image CC tail at sf0.1, identical labels (OPTIMIZATION_r17.md).
+#: Rounds per CC block for the CLIQUE-shaped image/audio pair graphs:
+#: same-class decodable docs sit pairwise within the banding radius by
+#: construction (the variant XOR flips keep Hamming ≤ 3), so every
+#: component is a complete graph and the first round already hands every
+#: member the min id. The block's second round then changes nothing, so
+#: the observed stop rule confirms the fixpoint without an edge probe.
+#: The video graph is irregular and runs ``CC_ROUNDS``-round blocks, the
+#: rounds its unrolled oracle runs. Either way the block size only sets
+#: the cadence of the stop rule: a graph needing more rounds runs more
+#: blocks.
 MEDIA_CLIQUE_CC_ROUNDS = 2
-
-#: Fixed CC round budget for the IRREGULAR video match-fraction graph —
-#: pinned to ``CC_ROUNDS`` because the oracle unrolls EXACTLY that many
-#: min-label+doubling rounds (``_CC_ROUND_CTES`` → ``l{CC_ROUNDS}``): on
-#: an irregular graph the cross-engine contract is round SYMMETRY, not a
-#: diameter argument. The r17 attempt to cut this to 3 (the deterministic
-#: fixtures fixpoint at round 3) was reverted the same round: randomized
-#: fixture seed 11 builds a video graph that still changes labels in
-#: round 4, so Spark@3 ≠ oracle@4 — the round-11 lesson (differential
-#: testing cannot see under-convergence unless both sides run the same
-#: rounds) applies to any budget cut below the oracle's unroll. Only the
-#: CLIQUE graphs above may run fewer rounds, because their oracle is
-#: closed-form (class groups) and their diameter-1 structure is proved by
-#: the generator (pairwise variant flips ≤ 3 bits), not measured on one
-#: fixture.
-VIDEO_CC_ROUNDS = CC_ROUNDS
 
 
 def media_cluster_canonical(
     sig: DataFrame,
     hash_col: str,
     hamming_max: int = AHASH_HAMMING_MAX,
-    rounds: int = MEDIA_CLIQUE_CC_ROUNDS,
 ) -> DataFrame:
     """(doc_id, <hash_col>) signatures → per-cluster canonical pick.
 
     Pipeline: banded exact-recall Hamming pairs → connected components
-    (min-label propagation + doubling) → keep-best rank within each
-    component (most signature bits set, then lowest doc_id). Returns one
-    row per cluster: ``(component, canonical_doc, canonical_bits,
-    cluster_size, n_dropped)``.
+    (min-label propagation + doubling to the fixpoint) → keep-best rank
+    within each component (most signature bits set, then lowest doc_id).
+    Returns one row per cluster: ``(component, canonical_doc,
+    canonical_bits, cluster_size, n_dropped)``.
 
     The caller hands the signature frame; it is materialized here ONCE
     (eager localCheckpoint) because THREE subtrees consume it — both
@@ -138,20 +115,16 @@ def media_cluster_canonical(
     sig = sig.localCheckpoint(eager=True)
     pairs = _banded_hash_pairs(sig, hash_col, hamming_max)
     # edges_materialized=True here does NOT mean the pairs are
-    # checkpointed — it tells connected_components not to spend a whole
-    # stage-job materializing them: the band join reads the 16-byte/row
-    # checkpointed sig, so recomputing it inside the adjacency checkpoint
-    # is cheaper than one more job at the scheduling floor (measured
-    # 21 → 20 jobs at sf0.1). The VIDEO cluster keeps the edge
-    # checkpoint: its pair pipeline is six stages deep and must run once.
-    # cut_final=False: the labels are consumed exactly once right below
-    # (the components query's own config — dedup.py:1130 discussion).
-    comp = connected_components(
+    # checkpointed — it skips one stage-job materializing them: the band
+    # join reads the 16-byte/row checkpointed sig, so recomputing it
+    # inside the adjacency checkpoint (and the rare edge probe) is
+    # cheaper than one more job at the scheduling floor. The VIDEO
+    # cluster keeps the edge checkpoint: its pair pipeline is six stages
+    # deep and must run once.
+    comp, _rounds = connected_components_converged(
         pairs.select("doc_a", "doc_b"),
-        rounds=rounds,
-        checkpoint_every=rounds,
+        probe_every=MEDIA_CLIQUE_CC_ROUNDS,
         edges_materialized=True,
-        cut_final=False,
     )
     quality = sig.select(
         "doc_id", F.bit_count(F.col(hash_col)).alias("q_bits")
@@ -208,10 +181,13 @@ def q_ns_mm_video_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     admits some same-class pairs and rejects others (perturbed odd
     generations), so the pair graph is IRREGULAR and the generic
     propagation machinery is doing real work. The oracle therefore runs
-    the same unrolled min-label + doubling rounds in SQL that
+    ``CC_ROUNDS`` unrolled min-label + doubling rounds in SQL, the chain
     ``ns_dedup_components``' oracle uses (dedup.py ``_CC_ROUND_CTES``,
     imported — the two chains can never drift), over the closed-form
-    video pair set.
+    video pair set. The query iterates to the fixpoint, so the oracle is
+    valid where the graph converges within one ``CC_ROUNDS`` block
+    (pinned in tests/test_multimodal_dedup.py); past that, parity trips
+    instead of both sides agreeing on under-converged labels.
 
     Output shape mirrors ``ns_dedup_components``: per graph member, its
     component (min doc_id), cluster size, and the min-id keep decision.
@@ -225,11 +201,8 @@ def q_ns_mm_video_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_video_table(spark, sf_dir),
         frames=ensure_frames_artifact(spark, sf_dir),
     )
-    comp = connected_components(
-        pairs.select("doc_a", "doc_b"),
-        rounds=VIDEO_CC_ROUNDS,
-        checkpoint_every=VIDEO_CC_ROUNDS,
-        cut_final=False,
+    comp, _rounds = connected_components_converged(
+        pairs.select("doc_a", "doc_b"), probe_every=CC_ROUNDS
     )
     w_size = F.count(F.lit(1)).over(Window.partitionBy("component"))
     return comp.select(

@@ -75,7 +75,7 @@ def _with_partition_index(df: DataFrame) -> DataFrame:
     the pass-2 partitions (caught by tests/test_positional_fuzz.py). One
     bounded materialization of the projected columns buys plan-independent
     correctness for any input — the same checkpoint-between-passes pattern
-    as ``dedup.connected_components``. ``checkpoint_df`` picks the
+    as ``dedup.connected_components_converged``. ``checkpoint_df`` picks the
     durability level (executor-local by default; reliable on clusters via
     ``spark.graft.checkpointDir`` — see session.py).
 

@@ -20,7 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_parquet_parser_spark.catalog import load_table
-from duckdb_parquet_parser_spark.operators.dedup import connected_components
+from duckdb_parquet_parser_spark.operators.dedup import connected_components_converged
 from duckdb_parquet_parser_spark.operators.positional import (
     file_order_positions,
 )
@@ -55,14 +55,18 @@ def test_checkpoint_df_defaults_to_local(spark, tmp_path):
     assert out.agg(F.sum("v")).collect()[0][0] == 50 * 51 // 2
 
 
-def test_connected_components_identical_on_reliable_path(spark, reliable_dir):
+@pytest.mark.parametrize("probe_every", [1, 2, 4])
+def test_connected_components_identical_on_reliable_path(
+    spark, reliable_dir, probe_every
+):
+    """Reliable checkpoints report the stop rule's observed row and
+    changed-label counts exactly as local ones do: every block size
+    (each stop-rule exit) returns the same labels."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 20), (4, 3)], ["doc_a", "doc_b"]
     )
-    got = {
-        (r["doc"], r["component"])
-        for r in connected_components(edges).collect()
-    }
+    comp, _rounds = connected_components_converged(edges, probe_every=probe_every)
+    got = {(r["doc"], r["component"]) for r in comp.collect()}
     assert got == {
         (1, 1),
         (2, 1),
@@ -72,6 +76,23 @@ def test_connected_components_identical_on_reliable_path(spark, reliable_dir):
         (11, 10),
         (20, 20),
     }
+
+
+def test_connected_components_refuses_lazy_label_checkpoint(spark, monkeypatch):
+    """A lazy checkpoint never runs the label frame's observation, which
+    then reads zero rows and zero changed labels. The converged engine
+    must raise instead of reading that as "nothing changed, converged"."""
+    from duckdb_parquet_parser_spark import session
+
+    eager_checkpoint = session.checkpoint_df
+    monkeypatch.setattr(
+        session, "checkpoint_df", lambda df, eager=True: eager_checkpoint(df, eager=False)
+    )
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(10)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="materialize eagerly"):
+        connected_components_converged(edges)
 
 
 def test_positional_identical_on_reliable_path(spark, reliable_dir, sf_smoke):

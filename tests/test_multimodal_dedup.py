@@ -1,16 +1,21 @@
 """Media dedup cluster resolution (operators/multimodal_dedup.py):
-fixpoint margins on the media pair graphs, structural invariants of the
-canonical picks, and the image/audio closed-form component structure the
-oracles rely on. The query↔oracle hash parity itself runs in
-tests/test_oracle_parity.py and the randomized doc-population family."""
+convergence bounds on the media pair graphs, long-chain resolution,
+structural invariants of the canonical picks, and the image/audio
+closed-form component structure the oracles rely on. The query↔oracle
+hash parity itself runs in tests/test_oracle_parity.py and the
+randomized doc-population family."""
 
 from __future__ import annotations
 
+import random
+
+from cc_reference import union_find_labels
 from pyspark.sql import functions as F
 
+from duckdb_parquet_parser_spark.operators import dedup
 from duckdb_parquet_parser_spark.operators.dedup import (
     CC_ROUNDS,
-    connected_components,
+    connected_components_converged,
 )
 from duckdb_parquet_parser_spark.operators.multimodal import (
     image_neardup_pairs,
@@ -18,7 +23,7 @@ from duckdb_parquet_parser_spark.operators.multimodal import (
 )
 from duckdb_parquet_parser_spark.operators.multimodal_dedup import (
     MEDIA_CLIQUE_CC_ROUNDS,
-    VIDEO_CC_ROUNDS,
+    media_cluster_canonical,
     q_ns_mm_audio_dedup_cluster,
     q_ns_mm_image_dedup_cluster,
     q_ns_mm_video_dedup_cluster,
@@ -31,64 +36,54 @@ from duckdb_parquet_parser_spark.operators.multimodal_synth import (
 )
 
 
-def _fixpoint_margin(pairs, rounds: int = CC_ROUNDS) -> int:
-    at = connected_components(pairs, rounds=rounds)
-    past = connected_components(
-        pairs, rounds=rounds + 1
-    ).withColumnRenamed("component", "component2")
-    return (
-        at.join(past, "doc")
-        .filter(F.col("component") != F.col("component2"))
-        .count()
-    )
+def _no_probe(ed, labels):
+    raise AssertionError("edge probe ran; the observed stop rule should end the block")
 
 
 def test_video_graph_fixpoint_margin(spark, sf_smoke):
     """The video pair graph is IRREGULAR (the match-fraction gate drops
-    some same-class pairs), so the fixed round budget needs its own
-    margin guard — same discipline as the SimHash graph
-    (tests/test_dedup_scale.py): one extra round must change nothing.
-    Pinned AT THE BUDGET THE QUERY RUNS (VIDEO_CC_ROUNDS = CC_ROUNDS —
-    the oracle unrolls exactly that many rounds, see the constant's
-    docstring for why the r17 cut to 3 was reverted)."""
+    some same-class pairs), so its convergence is measured, not proved:
+    it must reach the fixpoint within ONE ``CC_ROUNDS``-round block. The
+    video oracle unrolls exactly ``CC_ROUNDS`` rounds, so this pins the
+    oracle's validity on the fixture."""
     pairs = (
         video_neardup_pairs(build_video_table(spark, sf_smoke))
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )
-    assert _fixpoint_margin(pairs, VIDEO_CC_ROUNDS) == 0
+    _comp, rounds = connected_components_converged(pairs, probe_every=CC_ROUNDS)
+    assert rounds == CC_ROUNDS, rounds
 
 
-def test_image_graph_fixpoint_margin(spark, sf_smoke):
-    """Pinned at MEDIA_CLIQUE_CC_ROUNDS (r17): same-class decodable docs
-    pair pairwise by construction, so components are cliques of diameter
-    1 — one propagation round converges, the second round is margin."""
+def test_image_graph_fixpoint_margin(spark, sf_smoke, monkeypatch):
+    """Same-class decodable docs pair pairwise by construction, so
+    components are cliques: the first round converges, and the second
+    round of the ``MEDIA_CLIQUE_CC_ROUNDS`` block changes nothing — the
+    observed stop rule ends the first block without an edge probe."""
+    monkeypatch.setattr(dedup, "_disagreeing_edges", _no_probe)
     pairs = (
         image_neardup_pairs(build_image_table(spark, sf_smoke))
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )
-    assert _fixpoint_margin(pairs, MEDIA_CLIQUE_CC_ROUNDS) == 0
+    _comp, rounds = connected_components_converged(
+        pairs, probe_every=MEDIA_CLIQUE_CC_ROUNDS
+    )
+    assert rounds == MEDIA_CLIQUE_CC_ROUNDS, rounds
 
 
 def test_embed_graph_is_not_fixed_round_clusterable(spark, sf_smoke):
     """Round-11 dead-end, pinned as knowledge: an `ns_embed_dedup_cluster`
-    query (CC over the ns_embed_neardup pair graph) was built and
-    REVERTED. The synthetic embeddings are near-random (max pairwise
-    cosine ≈ 0.5), so the 0.3-threshold graph is a sparse CHAIN: at
-    sf0.001 the CC_ROUNDS=4 doubling budget leaves >100 mislabels (the
-    oracle, unrolling the same rounds, agrees — parity alone masks
-    under-convergence, which is exactly what the fixpoint-margin guard
-    exists to catch), small-SF fixpoint needs ~12 rounds, and at sf0.1
-    the graph collapses into ONE 1999-node component. This test pins
-    the diagnosis: the graph IS connected-chain-shaped — which is WHY
-    the certified query (`ns_embed_dedup_cluster`, embed_cluster.py,
-    round 12) runs iterate-to-convergence CC against a WITH RECURSIVE
-    fixpoint oracle: two INDEPENDENT convergence rules, so parity is a
-    real check again. Do not re-land the fixed-round version; if this
-    assertion ever flips (margin hits zero) the fixed-round pipeline
-    became sufficient for THIS fixture, but the convergent query stays —
-    real corpora don't promise bounded diameters either."""
+    query over a FIXED round budget was built and REVERTED. The synthetic
+    embeddings are near-random (max pairwise cosine ≈ 0.5), so the
+    0.3-threshold graph is a sparse CHAIN: at sf0.001 one ``CC_ROUNDS``
+    block does not reach the fixpoint (an oracle unrolling the same
+    rounds agrees with the under-converged labels — parity alone masks
+    it), and at sf0.1 the graph collapses into ONE 1999-node component.
+    This pins the diagnosis: the graph needs more than one block, which
+    is why the certified query (embed_cluster.py) iterates to
+    convergence against a WITH RECURSIVE fixpoint oracle — two
+    INDEPENDENT convergence rules, so parity is a real check."""
     from duckdb_parquet_parser_spark.operators.similarity import (
         q_ns_embed_neardup,
     )
@@ -100,22 +95,13 @@ def test_embed_graph_is_not_fixed_round_clusterable(spark, sf_smoke):
         )
         .localCheckpoint(eager=True)
     )
-    margin = _fixpoint_margin(pairs)
-    assert margin > 0, (
-        "the embed pair graph now converges within CC_ROUNDS — the "
-        "fixed-round pipeline became sufficient for this fixture; the "
-        "convergent ns_embed_dedup_cluster stays (see docstring)"
-    )
+    _comp, rounds = connected_components_converged(pairs, probe_every=CC_ROUNDS)
+    assert rounds > CC_ROUNDS, rounds
 
 
 def test_converged_cc_reaches_fixpoint_on_the_chain_graph(spark, sf_smoke):
-    """The convergent variant must label the exact graph the fixed-round
-    pipeline cannot: the embed cosine chain. Ground truth = a fixed-round
-    run at a budget safely past the measured fixpoint (~12 rounds at the
-    fixture SFs)."""
-    from duckdb_parquet_parser_spark.operators.multimodal_dedup import (
-        connected_components_converged,
-    )
+    """The convergent engine must label the exact graph a fixed round
+    budget cannot: the embed cosine chain, against union-find."""
     from duckdb_parquet_parser_spark.operators.similarity import (
         q_ns_embed_neardup,
     )
@@ -128,27 +114,60 @@ def test_converged_cc_reaches_fixpoint_on_the_chain_graph(spark, sf_smoke):
         .localCheckpoint(eager=True)
     )
     conv, rounds = connected_components_converged(pairs)
-    truth = connected_components(pairs, rounds=16).withColumnRenamed(
-        "component", "truth"
-    )
-    diff = (
-        conv.join(truth, "doc")
-        .filter(F.col("component") != F.col("truth"))
-        .count()
-    )
-    assert diff == 0
+    edges = [(r.doc_a, r.doc_b) for r in pairs.collect()]
+    got = {r.doc: r.component for r in conv.collect()}
+    assert got == union_find_labels(edges)
     assert 2 <= rounds <= 16, rounds
-    # every label is a real min: no node points above itself
-    assert conv.filter(F.col("component") > F.col("doc")).count() == 0
+
+
+def _signed64(h: int) -> int:
+    return h - (1 << 64) if h >= 1 << 63 else h
+
+
+def test_media_cluster_canonical_resolves_long_chains(spark):
+    """A near-duplicate CHAIN, the shape real media dedup graphs take
+    and the synthetic class cliques never do: each signature sets one
+    more bit than the last, so neighbours within 3 steps pair and the
+    graph's diameter grows with its length. 40 documents must form ONE
+    cluster, with the canonical pick, size and n_dropped a union-find
+    over the exact Hamming ≤ 3 pairs gives. Chains: hash_i = 2^i - 1,
+    plus two seeded random bit orders on shuffled doc ids."""
+    n = 40
+    chains = {"low_bits_first": (list(range(n)), [(1 << i) - 1 for i in range(n)])}
+    for seed in (5, 29):
+        rng = random.Random(seed)
+        order = rng.sample(range(64), n)
+        hashes, h = [], 0
+        for bit in order:
+            h |= 1 << bit
+            hashes.append(h)
+        chains[f"walk_{seed}"] = (rng.sample(range(10_000), n), hashes)
+    for name, (docs, hashes) in chains.items():
+        pairs = [
+            (a, b)
+            for (a, ha) in zip(docs, hashes)
+            for (b, hb) in zip(docs, hashes)
+            if a < b and bin(ha ^ hb).count("1") <= 3
+        ]
+        members = union_find_labels(pairs, docs)
+        assert len(set(members.values())) == 1, name  # the chain connects
+        bits = dict(zip(docs, (bin(h).count("1") for h in hashes)))
+        canonical = min(docs, key=lambda d: (-bits[d], d))
+        sig = spark.createDataFrame(
+            [(d, _signed64(h)) for d, h in zip(docs, hashes)],
+            "doc_id long, ahash long",
+        )
+        rows = media_cluster_canonical(sig, "ahash").collect()
+        got = [
+            (r.component, r.canonical_doc, r.canonical_bits, r.cluster_size, r.n_dropped)
+            for r in rows
+        ]
+        assert got == [(min(docs), canonical, bits[canonical], n, n - 1)], name
 
 
 def test_converged_cc_adversarial_long_path(spark):
     """A 200-node pure path — diameter far beyond CC_ROUNDS coverage —
     must resolve to ONE component labeled by its minimum node."""
-    from duckdb_parquet_parser_spark.operators.multimodal_dedup import (
-        connected_components_converged,
-    )
-
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(199)], "doc_a long, doc_b long"
     )
@@ -219,31 +238,10 @@ def test_video_cluster_keep_is_min_id(spark, sf_smoke):
 
 def test_converged_cc_matches_union_find_on_random_graphs(spark):
     """The convergent variant against an exact union-find on SEEDED
-    RANDOM graphs — unlike the fixed-round test (test_dedup_scale.py),
-    no rounds budget is supplied at all: convergence itself must find
-    the right stopping point on every shape (paths glued to cliques,
-    stars, sparse noise), and the probe must never stop early."""
-    import random
-
-    from duckdb_parquet_parser_spark.operators.multimodal_dedup import (
-        connected_components_converged,
-    )
-
-    def exact(edges, nodes):
-        parent = {n: n for n in nodes}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        return {n: find(n) for n in nodes}
-
+    RANDOM graphs with the default block size and no rounds budget:
+    convergence itself must find the right stopping point on every shape
+    (paths glued to cliques, stars, sparse noise), and the stop rule
+    must never stop early."""
     for seed in (11, 23, 47):
         rng = random.Random(seed)
         edges = [(rng.randrange(70), rng.randrange(70)) for _ in range(50)]
@@ -253,7 +251,7 @@ def test_converged_cc_matches_union_find_on_random_graphs(spark):
         edges += [(125, 200)]  # path end → clique: one long component
         edges = [(a, b) for a, b in edges if a != b]
         nodes = sorted({x for e in edges for x in e})
-        want = exact(edges, nodes)
+        want = union_find_labels(edges, nodes)
         df = spark.createDataFrame(edges, "doc_a long, doc_b long")
         comp, rounds = connected_components_converged(df)
         got = {r["doc"]: r["component"] for r in comp.collect()}
@@ -268,10 +266,6 @@ def test_converged_cc_empty_edge_set(spark):
     burn max_rounds and raise — F.sum over an empty frame is NULL, which
     the sentinel-based probe must treat as a comparable value (code
     review r12)."""
-    from duckdb_parquet_parser_spark.operators.multimodal_dedup import (
-        connected_components_converged,
-    )
-
     empty = spark.createDataFrame([], "doc_a long, doc_b long")
     comp, rounds = connected_components_converged(empty)
     assert comp.count() == 0

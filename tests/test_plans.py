@@ -490,16 +490,13 @@ def test_components_pipeline_job_budget(spark, sf_smoke):
     "name,budget",
     [
         # Stated-up-front job budgets for the media cluster pipelines
-        # (VERDICT r10 #2 condition), RESTATED round 17 after the CC
-        # round-budget right-sizing (MEDIA_CLIQUE_CC_ROUNDS=2 for the
-        # clique-shaped image/audio graphs): measured at sf0.1
-        # image/audio = 16 (was 20 at CC_ROUNDS=4). The video budget cut
-        # (VIDEO_CC_ROUNDS=3) was REVERTED the same round — the oracle
-        # unrolls CC_ROUNDS rounds and randomized seed 11 proved the
-        # graph needs round 4 (multimodal_dedup.py VIDEO_CC_ROUNDS
-        # docstring) — so video keeps its r16 budget. Same
-        # machine-independent guard discipline as the
-        # ns_dedup_components waiver.
+        # (VERDICT r10 #2 condition), last restated round 17 (measured
+        # image/audio 16 at sf0.1). They now run the converged CC engine
+        # (image/audio in 2-round blocks, video in CC_ROUNDS-round
+        # blocks); its observed stop rule skips the edge probe when a
+        # block's last round changed nothing, which keeps them inside
+        # the same budgets. Same machine-independent guard discipline as
+        # the ns_dedup_components waiver.
         ("ns_mm_image_dedup_cluster", 18),
         ("ns_mm_audio_dedup_cluster", 18),
         ("ns_mm_video_dedup_cluster", 24),

@@ -97,31 +97,36 @@ def test_multimodal_queries_match_oracles_on_random_fixtures(
 
 @pytest.mark.parametrize("seed", [11, 47, 83])
 def test_clique_graphs_stationary_at_round_one_on_random_fixtures(
-    spark, tmp_path, seed
+    spark, tmp_path, monkeypatch, seed
 ):
-    """MEDIA_CLIQUE_CC_ROUNDS = 2 rests on a structural proof — every
-    image/audio component is a clique (same-class variants pair pairwise,
-    XOR flips ≤ 3 bits), so min-label propagation is stationary after ONE
-    round. The video leg of the r17 round-budget cut was caught red by a
+    """The media cluster queries run image/audio CC in
+    ``MEDIA_CLIQUE_CC_ROUNDS = 2``-round blocks on a structural proof:
+    every image/audio component is a clique (same-class variants pair
+    pairwise, XOR flips ≤ 3 bits), so min-label propagation is
+    stationary after ONE round and the block's second round changes
+    nothing. The video leg of an earlier round-budget cut was caught by a
     RANDOMIZED population (seed 11), not the fixtures; this pins the
-    image/audio proof with the same net (VERDICT r17 #6): on random
-    sparse/shuffled id sets the round-1 labels must already equal the
-    round-2 labels. If a generator change ever breaks the clique
-    structure, this fails before an under-converged budget can ship."""
-    from pyspark.sql import functions as F
-
-    from duckdb_parquet_parser_spark.operators.dedup import (
-        connected_components,
-    )
+    image/audio proof with the same net: on random sparse/shuffled id
+    sets one 2-round block must reach the fixpoint, its second round
+    changing nothing (so no edge probe runs). If a generator change ever
+    breaks the clique structure, this fails loudly."""
+    from duckdb_parquet_parser_spark.operators import dedup
     from duckdb_parquet_parser_spark.operators.multimodal import (
         audio_neardup_pairs,
         image_neardup_pairs,
+    )
+    from duckdb_parquet_parser_spark.operators.multimodal_dedup import (
+        MEDIA_CLIQUE_CC_ROUNDS,
     )
     from duckdb_parquet_parser_spark.operators.multimodal_synth import (
         build_audio_sig_table,
         build_image_table,
     )
 
+    def no_probe(ed, labels):
+        raise AssertionError("a clique block's second round changed labels")
+
+    monkeypatch.setattr(dedup, "_disagreeing_edges", no_probe)
     sf_dir = _make_fixture(tmp_path, seed)
     graphs = {
         "image": image_neardup_pairs(build_image_table(spark, sf_dir)),
@@ -130,13 +135,7 @@ def test_clique_graphs_stationary_at_round_one_on_random_fixtures(
     for modality, pairs in graphs.items():
         edges = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
         assert edges.count() > 0, (modality, seed)  # graph non-trivial
-        one = connected_components(edges, rounds=1)
-        two = connected_components(edges, rounds=2).withColumnRenamed(
-            "component", "component2"
+        _comp, rounds = dedup.connected_components_converged(
+            edges, probe_every=MEDIA_CLIQUE_CC_ROUNDS
         )
-        diverged = (
-            one.join(two, "doc")
-            .filter(F.col("component") != F.col("component2"))
-            .count()
-        )
-        assert diverged == 0, (modality, seed, diverged)
+        assert rounds == MEDIA_CLIQUE_CC_ROUNDS, (modality, seed, rounds)
