@@ -280,51 +280,30 @@ def run_spark(
     out = clustered_documents(spark, sf_dir)
     regex_manifest(spark, out, "text", MANIFEST_PATTERN)
     stage_events(spark, sf_dir)
-    # The two-snapshot dedup's corpus-signature artifact is the output of
-    # the PREVIOUS ingestion run — build it unmeasured if this machine has
-    # never run one (content-fingerprint keyed, so a stale artifact can
-    # never answer for rewritten data).
-    import os as _os
+    # The persisted artifacts are the output of the PREVIOUS ingestion run
+    # — build them unmeasured if this machine has never run one (content-
+    # fingerprint keyed, so a stale artifact can never answer for
+    # rewritten data):
+    # - the two-snapshot dedup's corpus signatures;
+    # - the components labels (r16: the droprate row reads persisted
+    #   labels — building them is dedup-job work priced by the
+    #   ns_dedup_components row, not telemetry work);
+    # - the video frame hashes (r17: the near-dup / dedup-cluster rows
+    #   join persisted frame hashes — the media landing job of the
+    #   PREVIOUS run decoded them). The Y4M decode is therefore NOT in
+    #   the 65-row HEADLINE total (VERDICT r17 #7 correction — the
+    #   registered, oracle-certified ns_mm_video_framehashes query still
+    #   decodes live, but it is not a HEADLINE row): the decode wall is
+    #   measured and reported separately as video.decode_cold/
+    #   decode_steady below, the per-ingest artifact-build cost alongside
+    #   the recurring join rows.
+    from duckdb_parquet_parser_spark.cache import ensure_artifact
+    from duckdb_parquet_parser_spark.operators.curation import COMPONENTS
+    from duckdb_parquet_parser_spark.operators.dedup import SIGNATURES
+    from duckdb_parquet_parser_spark.operators.multimodal_synth import VIDEO_FRAMES
 
-    from duckdb_parquet_parser_spark.operators.dedup import (
-        SIG_ARTIFACT_META,
-        _artifact_uri,
-        _incremental_artifact_path,
-        write_signature_artifact,
-    )
-
-    art = _incremental_artifact_path(sf_dir)
-    if not _os.path.exists(_os.path.join(art, SIG_ARTIFACT_META)):
-        write_signature_artifact(spark, sf_dir, _artifact_uri(art))
-    # Same contract for the components-label artifact (r16: the droprate
-    # row reads persisted labels — the dedup job of the PREVIOUS run
-    # wrote them; building them is dedup-job work priced by the
-    # ns_dedup_components row, not telemetry work).
-    from duckdb_parquet_parser_spark.operators.curation import (
-        _comp_artifact_path,
-        write_components_artifact,
-    )
-
-    comp_art = _comp_artifact_path(sf_dir)
-    if not _os.path.exists(_os.path.join(comp_art, SIG_ARTIFACT_META)):
-        write_components_artifact(spark, sf_dir, _artifact_uri(comp_art))
-    # Same contract for the video frames artifact (r17: the near-dup /
-    # dedup-cluster rows join persisted frame hashes — the media
-    # landing job of the PREVIOUS run decoded them). The Y4M decode is
-    # therefore NOT in the 65-row HEADLINE total (VERDICT r17 #7
-    # correction — the registered, oracle-certified
-    # ns_mm_video_framehashes query still decodes live, but it is not a
-    # HEADLINE row): the decode wall is measured and reported separately
-    # as video.decode_cold/decode_steady below, the per-ingest
-    # artifact-build cost alongside the recurring join rows.
-    from duckdb_parquet_parser_spark.operators.staged_r17_video import (
-        frames_artifact_path,
-        write_frames_artifact,
-    )
-
-    vframes_art = frames_artifact_path(sf_dir)
-    if not _os.path.exists(_os.path.join(vframes_art, SIG_ARTIFACT_META)):
-        write_frames_artifact(spark, sf_dir, _artifact_uri(vframes_art))
+    for kind in (SIGNATURES, COMPONENTS, VIDEO_FRAMES):
+        ensure_artifact(spark, kind, sf_dir)
 
     from duckdb_parquet_parser_spark.operators.dedup import clear_simhash_memos
 

@@ -1,5 +1,7 @@
-"""Per-user on-disk cache directories for derived artifacts (dedup
-signature tables, staged media corpora).
+"""On-disk caches for derived data: per-user cache directories, the
+content-keyed entry paths, and the persisted-artifact protocol (dedup
+signatures, component labels, video frame hashes, HLL registers) —
+one write/read path that checks a JSON sidecar before any data is read.
 
 One shared implementation of the security/keying discipline (extracted
 round 10 after two near-copies diverged — code review finding):
@@ -37,10 +39,19 @@ wrong #2):
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 import tempfile
 import time
+from collections.abc import Callable
+from dataclasses import dataclass
+
+from pyspark.sql import DataFrame, SparkSession
+
+from .catalog import read_parquet_cached_schema
+from .fsmeta import docs_fingerprint
+from .sources.layout import _fs_read_text, _fs_write_text, _hadoop_fs
 
 
 def per_user_cache_dir(prefix: str) -> str:
@@ -60,18 +71,16 @@ def per_user_cache_dir(prefix: str) -> str:
 
 def content_tags(sf_dir: str) -> tuple[str, str]:
     """(path tag, content-fingerprint tag) for a fixture directory."""
-    from .operators.dedup import _docs_fingerprint
-
     path_tag = hashlib.md5(
         os.path.abspath(sf_dir).encode()
     ).hexdigest()[:12]
-    fp_tag = hashlib.md5(_docs_fingerprint(sf_dir).encode()).hexdigest()[:12]
+    fp_tag = hashlib.md5(docs_fingerprint(sf_dir).encode()).hexdigest()[:12]
     return path_tag, fp_tag
 
 
 #: Operator-chosen artifact root (REVIEW_r16 #6): when set, persisted
-#: artifacts (dedup signatures, component labels, video frame hashes)
-#: land under ``$SPARK_GRAFT_ARTIFACT_ROOT/<prefix>/<key>`` instead of
+#: artifacts (dedup signatures, component labels, video frame hashes,
+#: HLL registers) land under ``$SPARK_GRAFT_ARTIFACT_ROOT/<prefix>/<key>`` instead of
 #: the driver-local per-user cache dir. A scheme-qualified URI
 #: (hdfs://, s3a://, file://…) is passed straight through to the
 #: artifact read/write paths, which already ride the Hadoop FS API —
@@ -81,11 +90,10 @@ ARTIFACT_ROOT_ENV = "SPARK_GRAFT_ARTIFACT_ROOT"
 
 def artifact_entry_path(prefix: str, sf_dir: str) -> str:
     """Deterministic parquet-artifact location per (table path, content
-    fingerprint) under the ``prefix`` namespace — the shared prune-and-key
-    loop behind the dedup signature, components-label and video frame-hash
-    artifacts (consolidated round 16 after the third and fourth verbatim
-    copies appeared — ADVICE r15; same lesson as the round-10/round-12
-    consolidations above).
+    fingerprint) under the ``prefix`` namespace — the prune-and-key loop
+    behind every :class:`ArtifactKind` (consolidated round 16 after the
+    third and fourth verbatim copies appeared — ADVICE r15; same lesson
+    as the round-10/round-12 consolidations above).
 
     A content change in the source table yields a NEW path, so a stale
     prior-run artifact can never answer for rewritten data; under
@@ -237,3 +245,147 @@ def publish_atomic(tmp: str, out: str) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.exists(os.path.join(out, MARKER_NAME)):
             raise
+
+
+# --- Persisted artifacts ---------------------------------------------------
+#
+# A derived table that one run writes and later runs reopen (VERDICT r8 #5:
+# the cross-run contract is the part in-session emulation skips). Every
+# kind shares one file contract, the reference's writer/reader contract
+# (footer checked before any data, parquet_reader.cpp:14-39): a parquet
+# directory plus a JSON sidecar whose params must match the engine's
+# exactly, then every column's name and type, all before a row is read.
+# The sidecar rather than a per-row column is the version channel, so a
+# stale format is rejected from metadata alone. All sidecar I/O rides the
+# Hadoop FS API (VERDICT r9 #5): the artifact works on any scheme Spark
+# reaches, and the sidecar never strands on the driver's disk while the
+# parquet half lives in the object store. Artifacts are SINGLE-WRITER by
+# contract (one ingestion job owns each), the shape every table format
+# assumes without a commit coordinator.
+
+#: Sidecar file name, shared by every artifact kind.
+ARTIFACT_META = "_sig_meta.json"
+
+
+@dataclass(frozen=True)
+class ArtifactKind:
+    """One persisted-artifact kind.
+
+    ``prefix`` is its cache namespace (``artifact_entry_path``);
+    ``columns`` maps each column to its Spark type string (``df.dtypes``
+    form); ``params`` are the sidecar entries that must match exactly
+    (format version first); ``build(spark, sf_dir)`` computes the table
+    from the fixture directory the entry is keyed on."""
+
+    name: str
+    prefix: str
+    columns: dict[str, str]
+    params: dict[str, object]
+    build: Callable[[SparkSession, str], DataFrame]
+
+
+def ensure_artifact(
+    spark: SparkSession, kind: ArtifactKind, sf_dir: str
+) -> DataFrame:
+    """The validated ``kind`` table for this exact content of ``sf_dir``,
+    written first iff no sidecar exists yet (that write IS the prior
+    run). Content keying makes staleness impossible: rewritten source
+    data resolves to a different entry."""
+    uri = _artifact_uri(artifact_entry_path(kind.prefix, sf_dir))
+    fs, meta = _hadoop_fs(spark, _artifact_meta_path(uri))
+    if not fs.exists(meta):
+        write_artifact(spark, kind, sf_dir, uri)
+    return read_artifact(spark, kind, uri)
+
+
+def write_artifact(
+    spark: SparkSession, kind: ArtifactKind, sf_dir: str, path: str
+) -> None:
+    """Build and persist ``kind`` for ``sf_dir`` at ``path``: parquet
+    first, then the sidecar (params plus the source fingerprint) moved
+    into place atomically — a crash mid-write must not leave a torn
+    sidecar that wedges every later run while the artifact looks staged
+    (code review r10)."""
+    df = kind.build(spark, sf_dir).select(*kind.columns)
+    df.write.mode("overwrite").parquet(path)
+    meta = {**kind.params, "source_fingerprint": docs_fingerprint(sf_dir)}
+    _fs_move_text_into_place(spark, _artifact_meta_path(path), json.dumps(meta))
+
+
+def read_artifact(spark: SparkSession, kind: ArtifactKind, path: str) -> DataFrame:
+    """Reopen a persisted ``kind`` artifact. Every sidecar param, then
+    every column name and type, is checked BEFORE any data is read: an
+    artifact from an incompatible engine (or with a column rewritten to
+    another type, which unions and joins would silently coerce) fails
+    loudly here instead of producing plausible garbage downstream."""
+    meta = _read_artifact_meta(spark, kind, path)
+    for key, want in kind.params.items():
+        if meta.get(key) != want:
+            raise ValueError(
+                f"{kind.name} artifact at {path}: sidecar {key}="
+                f"{meta.get(key)!r}, engine expects {want!r}"
+            )
+    df = read_parquet_cached_schema(spark, path)
+    types = dict(df.dtypes)
+    missing = [c for c in kind.columns if c not in types]
+    if missing:
+        raise ValueError(f"{kind.name} artifact at {path} missing columns {missing}")
+    drift = {c: types[c] for c, t in kind.columns.items() if types[c] != t}
+    if drift:
+        raise ValueError(
+            f"{kind.name} artifact at {path} has drifted column types "
+            f"{drift}; expected {kind.columns}"
+        )
+    return df.select(*kind.columns)
+
+
+def append_artifact(
+    spark: SparkSession, kind: ArtifactKind, path: str, rows: DataFrame
+) -> None:
+    """Add ``rows`` to a validated artifact as NEW part-files (existing
+    data is never rewritten, so an append is O(batch) at any size) and
+    bump the sidecar's ``snapshots`` counter. The bump is a
+    read-modify-write through the atomic move: the worst interleaving
+    leaves a momentarily MISSING sidecar, which readers reject loudly,
+    never a torn one."""
+    read_artifact(spark, kind, path)  # contract gate before any write
+    rows.select(*kind.columns).write.mode("append").parquet(path)
+    meta = _read_artifact_meta(spark, kind, path)
+    meta["snapshots"] = int(meta.get("snapshots", 1)) + 1
+    _fs_move_text_into_place(spark, _artifact_meta_path(path), json.dumps(meta))
+
+
+def _read_artifact_meta(spark: SparkSession, kind: ArtifactKind, path: str) -> dict:
+    text = _fs_read_text(spark, _artifact_meta_path(path))
+    if text is None:
+        raise ValueError(f"{kind.name} artifact at {path} has no {ARTIFACT_META}")
+    return json.loads(text)
+
+
+def _fs_move_text_into_place(spark: SparkSession, dst_path: str, text: str) -> None:
+    """Write ``text`` to ``dst_path + '.tmp'`` and rename into place —
+    readers can observe the old sidecar, a momentarily missing one, or
+    the new one, never a torn half-write. Local/HDFS rename won't
+    clobber an existing destination, so the old file is deleted first."""
+    tmp_path = dst_path + ".tmp"
+    _fs_write_text(spark, tmp_path, text)
+    fs, dst = _hadoop_fs(spark, dst_path)
+    _, tmp = _hadoop_fs(spark, tmp_path)
+    fs.delete(dst, False)
+    if not fs.rename(tmp, dst):
+        raise IOError(f"could not move {tmp_path} into place at {dst_path}")
+
+
+def _artifact_meta_path(path: str) -> str:
+    """Scheme-agnostic sidecar location: plain '/' join keeps file:, hdfs:
+    and s3a: URIs intact where ``os.path.join`` is local-only."""
+    return f"{path.rstrip('/')}/{ARTIFACT_META}"
+
+
+def _artifact_uri(path: str) -> str:
+    """Qualify a local artifact path with an explicit ``file:`` scheme so
+    every Hadoop-FS call resolves against the LOCAL filesystem even when
+    ``fs.defaultFS`` points at hdfs:/s3a: — the directory management
+    above is local, and a scheme-less path would silently split the
+    artifact across two filesystems (code review r10)."""
+    return path if "://" in path else "file://" + os.path.abspath(path)

@@ -9,6 +9,7 @@ events documents embeddings.
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,8 +56,11 @@ def table_path(sf_dir: str, name: str) -> str:
 # skip the memo entirely. This caches METADATA only — never rows, never
 # intermediates — so the bench's cold-row protocol (clearCache + memo
 # clears of DATA frames) is unaffected: every row still scans parquet
-# from disk.
-_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+# from disk. The memo holds at most ``_SCHEMA_MEMO_MAX`` schemas and
+# evicts the least recently used one at a time, so a long session that
+# touches many paths keeps its hot tables' schemas.
+_SCHEMA_MEMO: OrderedDict[tuple, T.StructType] = OrderedDict()
+_SCHEMA_MEMO_MAX = 512
 
 
 def _schema_memo_key(spark: SparkSession, path: str):
@@ -81,17 +85,7 @@ def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     does not see leaf changes, so those readers use
     :func:`read_parquet_cached_schema_tree` (leaf-file fingerprint,
     r18) instead."""
-    key = _schema_memo_key(spark, path)
-    if key is None:
-        return spark.read.parquet(path)
-    schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        if len(_SCHEMA_MEMO) >= 512:
-            _SCHEMA_MEMO.clear()
-        df = spark.read.parquet(path)
-        _SCHEMA_MEMO[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    return _read_memoized(spark, _schema_memo_key(spark, path), path)
 
 
 def _tree_fingerprint_key(spark: SparkSession, paths: tuple[str, ...]):
@@ -150,17 +144,25 @@ def read_parquet_cached_schema_tree(spark: SparkSession, *paths: str) -> DataFra
     directory names), so results are bit-identical; any leaf change
     changes the fingerprint and re-infers. Metadata only — rows are
     never cached (the bench's cold-row protocol is untouched)."""
-    key = _tree_fingerprint_key(spark, tuple(paths))
+    return _read_memoized(spark, _tree_fingerprint_key(spark, tuple(paths)), *paths)
+
+
+def _read_memoized(spark: SparkSession, key, *paths: str) -> DataFrame:
+    """Read ``paths`` with the memoized schema under ``key`` (None: no
+    memo, plain inference). A hit passes the schema explicitly and marks
+    the entry most recently used; a miss infers, memoizes, and evicts
+    the least recently used entry past ``_SCHEMA_MEMO_MAX``."""
     if key is None:
         return spark.read.parquet(*paths)
     schema = _SCHEMA_MEMO.get(key)
-    if schema is None:
-        if len(_SCHEMA_MEMO) >= 512:
-            _SCHEMA_MEMO.clear()
-        df = spark.read.parquet(*paths)
-        _SCHEMA_MEMO[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(*paths)
+    if schema is not None:
+        _SCHEMA_MEMO.move_to_end(key)
+        return spark.read.schema(schema).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    _SCHEMA_MEMO[key] = df.schema
+    if len(_SCHEMA_MEMO) > _SCHEMA_MEMO_MAX:
+        _SCHEMA_MEMO.popitem(last=False)
+    return df
 
 
 @lru_cache(maxsize=256)

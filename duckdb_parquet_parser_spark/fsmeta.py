@@ -1,18 +1,16 @@
-"""Scheme-agnostic file metadata through the Hadoop FS API.
+"""Table content fingerprints: the identity behind every content-keyed
+cache entry and memo in the engine.
 
-Round-16 prep (REVIEW_r14.md #2): ``dedup._docs_fingerprint`` walks the
-documents table with ``os.stat``/``os.walk``, which silently returns an
-EMPTY fingerprint for any non-local scheme (hdfs://, s3a://, …) — every
-content version of a remote corpus then maps to the same persisted
-signature artifact and memo key, defeating the staleness checks. This
-module provides the replacement primitive now, tested and staged, so
-the round-16 edit to the certified dedup module (scheduled for the
-r13-block rotation, the zero-cost re-cert moment) is a one-line swap.
-
-Kept OUT of dedup.py deliberately this round: importing it there would
-change certified executable paths mid-window."""
+``docs_fingerprint`` fingerprints a fixture's documents table (os.stat
+for local paths, the Hadoop FS API for any other scheme);
+``fs_content_fingerprint`` is the scheme-agnostic primitive it uses for
+remote paths. Both change whenever a file under the table is added,
+removed or rewritten, so a key built from them never answers for stale
+content."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import SparkSession
 
@@ -33,9 +31,9 @@ def fs_content_fingerprint(spark: SparkSession, path: str) -> str:
 
     Resolution contract: Hadoop reports millisecond mtimes, so a
     same-size rewrite within one millisecond is invisible — strictly
-    coarser than ``os.stat``'s nanoseconds. The round-16 dedup swap
-    must therefore keep the os.stat path for LOCAL directories and use
-    this only where os.stat cannot see at all (REVIEW_r14.md #2).
+    coarser than ``os.stat``'s nanoseconds, so ``docs_fingerprint``
+    keeps the os.stat walk for LOCAL directories and uses this only
+    where os.stat cannot see at all (REVIEW_r14.md #2).
 
     Encoding contract (ADVICE r14): each per-file record is
     length-prefixed — ``len(rel):rel:mtime:size`` — so a path containing
@@ -62,4 +60,40 @@ def fs_content_fingerprint(spark: SparkSession, path: str) -> str:
             f"{len(rel)}:{rel}:{st.getModificationTime()}:{st.getLen()}"
         )
     parts.sort()
+    return "|".join(parts)
+
+
+def docs_fingerprint(sf_dir: str) -> str:
+    """Cheap content fingerprint of the documents table: (mtime_ns, size)
+    of every file under documents.parquet (file or directory).
+
+    A table on a NON-LOCAL scheme (hdfs://, s3a://, file://…) is
+    fingerprinted through the Hadoop FS API — an os.stat walk returns an
+    EMPTY string there, which would map every content version of a
+    remote corpus to the same persisted-artifact key and memo key
+    (REVIEW_r14 #2). Local paths keep the os.stat walk: nanosecond
+    mtimes are strictly finer than Hadoop's milliseconds. The remote
+    branch needs a live SparkSession for the FS handle; a remote path
+    with no active session fails loudly rather than degrading to the
+    empty fingerprint."""
+    if "://" in sf_dir:
+        spark = SparkSession.getActiveSession()
+        if spark is None:
+            raise RuntimeError(
+                f"fingerprinting remote path {sf_dir!r} requires an active "
+                "SparkSession (Hadoop FS access)"
+            )
+        return fs_content_fingerprint(
+            spark, f"{sf_dir.rstrip('/')}/documents.parquet"
+        )
+    path = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
+    parts = []
+    if os.path.isdir(path):
+        for root, _, files in sorted(os.walk(path)):
+            for f in sorted(files):
+                st = os.stat(os.path.join(root, f))
+                parts.append(f"{f}:{st.st_mtime_ns}:{st.st_size}")
+    elif os.path.exists(path):
+        st = os.stat(path)
+        parts.append(f"{st.st_mtime_ns}:{st.st_size}")
     return "|".join(parts)

@@ -105,8 +105,8 @@ def collect_queries() -> tuple[dict[str, QueryFn], dict[str, str]]:
 # below;
 # (2) ns_mm_video_neardup (r15-certified, re-heads EARLY because its
 # executable call chain changed: it now consumes the persisted frames
-# artifact — staged_r17_video.ensure_frames_artifact — instead of
-# re-decoding per query; the refined round-10 rule. The plan forecast
+# artifact — multimodal_synth.VIDEO_FRAMES, through
+# cache.ensure_artifact — instead of re-decoding per query; the refined round-10 rule. The plan forecast
 # two video re-heads, but q_ns_mm_video_framehashes calls
 # extract_video_frame_hashes DIRECTLY — neither that function nor the
 # query changed, so its r15 certs park on the byte-identical basis and

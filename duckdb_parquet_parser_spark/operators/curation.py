@@ -48,9 +48,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache import ArtifactKind, ensure_artifact
 from ..catalog import load_table
 from ..functions import DEC
 from ..session import checkpoint_df
+from .dedup import _text_components_materialized
 from .ngram_stats import LOGIT_SQL, q_ns_quality_logit
 
 SOURCE_CAP = 10
@@ -161,73 +163,15 @@ def q_rel_returned_top_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-COMP_ARTIFACT_VERSION = 1
-_COMP_ARTIFACT_COLUMNS = ["doc", "component"]
-
-
-def _comp_artifact_path(sf_dir: str) -> str:
-    """Per-(table path, content fingerprint) label-artifact location —
-    the shared ``cache.artifact_entry_path`` prune-and-key discipline
-    under a separate namespace so signature and label artifacts never
-    collide."""
-    from ..cache import artifact_entry_path
-
-    return artifact_entry_path("sg_comp", sf_dir)
-
-
-def write_components_artifact(
-    spark: SparkSession, sf_dir: str, path: str
-) -> None:
-    """Run-N of the telemetry pipeline: persist the converged component
-    labels (doc, component) with the versioned JSON sidecar — the same
-    atomic-sidecar protocol as ``dedup.write_signature_artifact``."""
-    import json
-
-    from .dedup import (
-        _artifact_meta_path,
-        _fs_move_text_into_place,
-        _text_components_materialized,
-    )
-
-    comp = _text_components_materialized(spark, sf_dir)
-    comp.select(*_COMP_ARTIFACT_COLUMNS).write.mode("overwrite").parquet(
-        path
-    )
-    meta = {"comp_version": COMP_ARTIFACT_VERSION}
-    _fs_move_text_into_place(
-        spark, _artifact_meta_path(path), json.dumps(meta)
-    )
-
-
-def read_components_artifact(spark: SparkSession, path: str) -> DataFrame:
-    """Reopen a persisted label artifact, validating the sidecar BEFORE
-    any data read — version mismatch or missing sidecar/columns fail
-    loudly (a silently-wrong label table produces plausible telemetry)."""
-    import json
-
-    from ..sources.layout import _fs_read_text
-    from .dedup import SIG_ARTIFACT_META, _artifact_meta_path
-
-    text = _fs_read_text(spark, _artifact_meta_path(path))
-    if text is None:
-        raise ValueError(
-            f"components artifact at {path} has no {SIG_ARTIFACT_META}"
-        )
-    meta = json.loads(text)
-    if meta.get("comp_version") != COMP_ARTIFACT_VERSION:
-        raise ValueError(
-            f"components artifact version {meta.get('comp_version')!r} at "
-            f"{path} != engine version {COMP_ARTIFACT_VERSION}"
-        )
-    from ..catalog import read_parquet_cached_schema
-
-    df = read_parquet_cached_schema(spark, path)
-    missing = [c for c in _COMP_ARTIFACT_COLUMNS if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"components artifact at {path} missing columns {missing}"
-        )
-    return df.select(*_COMP_ARTIFACT_COLUMNS)
+#: The converged component labels, persisted by the dedup job and
+#: reopened by curation telemetry.
+COMPONENTS = ArtifactKind(
+    name="components",
+    prefix="sg_comp",
+    columns={"doc": "bigint", "component": "bigint"},
+    params={"comp_version": 1},
+    build=_text_components_materialized,
+)
 
 
 def q_ns_source_droprate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,14 +195,7 @@ def q_ns_source_droprate(spark: SparkSession, sf_dir: str) -> DataFrame:
     run — the ``ns_dedup_incremental_persisted`` convention). Output and
     oracle are unchanged from the r13-certified row, so the r16 hash
     match certifies persisted ≡ recomputed."""
-    from ..sources.layout import _hadoop_fs
-    from .dedup import _artifact_meta_path, _artifact_uri
-
-    uri = _artifact_uri(_comp_artifact_path(sf_dir))
-    fs, meta_p = _hadoop_fs(spark, _artifact_meta_path(uri))
-    if not fs.exists(meta_p):
-        write_components_artifact(spark, sf_dir, uri)
-    comp = read_components_artifact(spark, uri).select(
+    comp = ensure_artifact(spark, COMPONENTS, sf_dir).select(
         F.col("doc").alias("doc_id"),
         (F.col("doc") == F.col("component")).alias("keep"),
     )

@@ -27,7 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache import ArtifactKind, append_artifact, ensure_artifact, write_artifact
 from ..catalog import load_table, scale_out
+from ..fsmeta import docs_fingerprint
 from .ngram_stats import LOGIT_SQL as _LOGIT_SQL_SRC
 
 N_HASHES = 16
@@ -289,8 +291,8 @@ def _cached_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (r18) so candidate generation can emit pair sizes and the
         # verify's size-ratio gate fires BEFORE the array joins — one
         # narrow long next to 16 hashes, not a schema change to the
-        # persisted artifact (write_signature_artifact builds its own
-        # frame and selects _SIG_ARTIFACT_COLUMNS)
+        # persisted artifact (SIGNATURES builds its own frame and
+        # selects its declared columns)
         .withColumn("nw", F.size("ws"))
         .drop("ws")
     )
@@ -550,169 +552,40 @@ def q_ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # schema is the cross-run contract, which is exactly the part the in-session
 # emulation skips (and the part production pipelines get wrong).
 
-SIG_ARTIFACT_VERSION = 1
-SIG_ARTIFACT_META = "_sig_meta.json"
-_SIG_ARTIFACT_COLUMNS = ["doc_id"] + [f"h{i}" for i in range(N_HASHES)]
 
-
-def write_signature_artifact(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Run-1 of the two-snapshot pipeline: persist the CORPUS slice's
-    minhash signature table as a parquet artifact plus a JSON sidecar
-    carrying the artifact-format version and hash parameters. The sidecar
-    (not a per-row column) is the version channel so validation never
-    needs a data scan — the reader rejects a stale format from metadata
-    alone, the same pattern table formats use for their protocol version.
-
-    All sidecar I/O rides the Hadoop FS API (VERDICT r9 #5), so the
-    artifact works against any scheme Spark itself reaches (file:, hdfs:,
-    s3a:, ...) — a local-only ``open()`` would strand the sidecar on the
-    driver's disk while the parquet half lived in the object store."""
-    import json
-
-    from ..sources.layout import _fs_write_text
-
+def _corpus_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The CORPUS slice's minhash signature table — the batch slice is
+    never persisted."""
     corpus = _doc_word_arrays(spark, sf_dir).filter(
         F.col("doc_id") % INCR_MOD != INCR_REM
     )
-    sigs = minhash_signatures_from_arrays(corpus).drop("ws")
-    sigs.write.mode("overwrite").parquet(path)
-    meta = {
-        "sig_version": SIG_ARTIFACT_VERSION,
-        "n_hashes": N_HASHES,
-        "source_fingerprint": _docs_fingerprint(sf_dir),
-    }
-    # Atomic like the append-time bump: a crash mid-write must not leave
-    # a torn sidecar that wedges every later run behind a JSONDecodeError
-    # while fs.exists() keeps saying the artifact is staged (code review
-    # r10).
-    _fs_move_text_into_place(
-        spark, _artifact_meta_path(path), json.dumps(meta)
-    )
+    return minhash_signatures_from_arrays(corpus)
 
 
-def read_signature_artifact(spark: SparkSession, path: str) -> DataFrame:
-    """Reopen a persisted signature artifact, validating the cross-run
-    contract BEFORE any data is read: the sidecar must exist and declare a
-    compatible format version + hash count, and the parquet schema must
-    carry every signature column. A run against an artifact written by an
-    incompatible engine version must fail loudly here — silently joining
-    mismatched signatures would produce garbage candidates downstream."""
-    import json
+#: The corpus signature artifact: run N writes it, run N+1 reopens it.
+SIGNATURES = ArtifactKind(
+    name="signature",
+    prefix="sg_sig",
+    columns={"doc_id": "bigint", **{f"h{i}": "string" for i in range(N_HASHES)}},
+    params={"sig_version": 1, "n_hashes": N_HASHES},
+    build=_corpus_signatures,
+)
 
-    from ..sources.layout import _fs_read_text
 
-    text = _fs_read_text(spark, _artifact_meta_path(path))
-    if text is None:
-        raise ValueError(f"signature artifact at {path} has no {SIG_ARTIFACT_META}")
-    meta = json.loads(text)
-    if meta.get("sig_version") != SIG_ARTIFACT_VERSION:
-        raise ValueError(
-            f"signature artifact version {meta.get('sig_version')!r} at {path} "
-            f"!= engine version {SIG_ARTIFACT_VERSION}"
-        )
-    if meta.get("n_hashes") != N_HASHES:
-        raise ValueError(
-            f"signature artifact has {meta.get('n_hashes')!r} hashes, engine "
-            f"expects {N_HASHES}"
-        )
-    from ..catalog import read_parquet_cached_schema
-
-    df = read_parquet_cached_schema(spark, path)
-    missing = [c for c in _SIG_ARTIFACT_COLUMNS if c not in df.columns]
-    if missing:
-        raise ValueError(f"signature artifact at {path} missing columns {missing}")
-    return df.select(*_SIG_ARTIFACT_COLUMNS)
+def write_signature_artifact(spark: SparkSession, sf_dir: str, path: str) -> None:
+    """Run 1 of the two-snapshot pipeline: persist the corpus signature
+    table at ``path`` (see :data:`SIGNATURES`)."""
+    write_artifact(spark, SIGNATURES, sf_dir, path)
 
 
 def append_signatures(spark: SparkSession, docs: DataFrame, path: str) -> None:
     """Close the recurring-ingestion loop: after a batch is deduped, its
     signatures join the corpus artifact so the NEXT run's band join sees
-    them as corpus. Validates the artifact contract first (the reader's
-    version/hash-count/schema checks), appends the batch's signature rows
-    as NEW parquet part-files — existing data is never rewritten, the
-    append is O(batch) at any corpus size — and bumps the sidecar's
-    snapshot counter. ``docs`` is a (doc_id, ws) frame as produced by
-    :func:`_doc_word_arrays` (filtered to the batch by the caller).
-
-    The sidecar bump writes the new JSON to a temp name and renames it
-    into place (ADVICE r9): a reader can never observe a torn,
-    half-written sidecar. Local/HDFS rename won't clobber an existing
-    destination, so the old sidecar is deleted first — the worst
-    interleaving leaves a MISSING sidecar for a moment, which readers
-    reject loudly ("no _sig_meta.json"), never silently misparse. The
-    artifact is SINGLE-WRITER by contract (one ingestion job owns it, the
-    shape every table format assumes without a commit coordinator):
-    concurrent appends could interleave on the read-modify-write snapshot
-    counter and each raises the loud missing-sidecar error if it reads
-    inside the other's rename gap."""
-    import json
-
-    from ..sources.layout import _fs_read_text
-
-    read_signature_artifact(spark, path)  # contract gate before any write
-    sigs = minhash_signatures_from_arrays(docs).drop("ws")
-    sigs.select(*_SIG_ARTIFACT_COLUMNS).write.mode("append").parquet(path)
-    meta_path = _artifact_meta_path(path)
-    text = _fs_read_text(spark, meta_path)
-    if text is None:  # another writer's rename gap — loud, per contract
-        raise ValueError(
-            f"signature artifact at {path} has no {SIG_ARTIFACT_META}"
-        )
-    meta = json.loads(text)
-    meta["snapshots"] = int(meta.get("snapshots", 1)) + 1
-    _fs_move_text_into_place(spark, meta_path, json.dumps(meta))
-
-
-def _fs_move_text_into_place(spark: SparkSession, dst_path: str, text: str) -> None:
-    """Write ``text`` to ``dst_path + '.tmp'`` and rename into place —
-    readers can observe the old sidecar, a momentarily missing one, or
-    the new one, never a torn half-write."""
-    from ..sources.layout import _fs_write_text, _hadoop_fs
-
-    tmp_path = dst_path + ".tmp"
-    _fs_write_text(spark, tmp_path, text)
-    fs, dst = _hadoop_fs(spark, dst_path)
-    _, tmp = _hadoop_fs(spark, tmp_path)
-    fs.delete(dst, False)
-    if not fs.rename(tmp, dst):
-        raise IOError(f"could not move {tmp_path} into place at {dst_path}")
-
-
-def _artifact_meta_path(path: str) -> str:
-    """Scheme-agnostic sidecar location: plain '/' join keeps file:, hdfs:
-    and s3a: URIs intact where ``os.path.join`` is local-only."""
-    return f"{path.rstrip('/')}/{SIG_ARTIFACT_META}"
-
-
-def _incremental_artifact_path(sf_dir: str) -> str:
-    """Deterministic artifact location per (table path, content
-    fingerprint) — a content change in the documents table yields a NEW
-    path, so a stale prior-run artifact can never answer for rewritten
-    data.
-
-    Artifacts live under a PER-USER 0o700 cache dir with verified
-    ownership (ADVICE r9: a world-shared predictable /tmp name lets
-    another local user pre-create the path or plant a tampered artifact
-    that passes the sidecar checks) — shared discipline in cache.py. The
-    name splits into a path tag and a fingerprint tag so stale
-    fingerprints of the SAME source path — by definition outdated
-    content — are pruned on the way in, bounding accumulation (the
-    shared ``cache.artifact_entry_path`` prune-and-key discipline,
-    consolidated r16 — ADVICE r15)."""
-    from ..cache import artifact_entry_path
-
-    return artifact_entry_path("sg_sig", sf_dir)
-
-
-def _artifact_uri(path: str) -> str:
-    """Qualify a local artifact path with an explicit ``file:`` scheme so
-    every Hadoop-FS call resolves against the LOCAL filesystem even when
-    ``fs.defaultFS`` points at hdfs:/s3a: — the os/shutil directory
-    management above is local, and a scheme-less path would silently
-    split the artifact across two filesystems (code review r10)."""
-    import os
-
-    return path if "://" in path else "file://" + os.path.abspath(path)
+    them as corpus. ``docs`` is a (doc_id, ws) frame as produced by
+    :func:`_doc_word_arrays` (filtered to the batch by the caller); the
+    contract gate, part-file append and ``snapshots`` bump are
+    :func:`~duckdb_parquet_parser_spark.cache.append_artifact`'s."""
+    append_artifact(spark, SIGNATURES, path, minhash_signatures_from_arrays(docs))
 
 
 def q_ns_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -725,15 +598,7 @@ def q_ns_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFr
     join's left side is (persisted corpus ∪ fresh batch) signatures, the
     right side only the batch — so the results match `ns_dedup_incremental`
     row for row and the same DuckDB oracle certifies both."""
-    from ..sources.layout import _hadoop_fs
-
-    # file:-qualified so every Hadoop-FS/Spark call resolves locally even
-    # when fs.defaultFS is remote — the cache-dir management is local
-    uri = _artifact_uri(_incremental_artifact_path(sf_dir))
-    fs, meta_p = _hadoop_fs(spark, _artifact_meta_path(uri))
-    if not fs.exists(meta_p):
-        write_signature_artifact(spark, sf_dir, uri)
-    corpus_sigs = read_signature_artifact(spark, uri)
+    corpus_sigs = ensure_artifact(spark, SIGNATURES, sf_dir)
     is_new = F.col("doc_id") % INCR_MOD == INCR_REM
     batch_sigs = minhash_signatures_from_arrays(
         _doc_word_arrays(spark, sf_dir).filter(is_new)
@@ -846,50 +711,6 @@ _SIMHASH_PAIRS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 _CC_LABELS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
-def _docs_fingerprint(sf_dir: str) -> str:
-    """Cheap content fingerprint of the documents table: (mtime_ns, size)
-    of every file under documents.parquet (file or directory).
-
-    Landed r16 (REVIEW_r14 #2, staged as ``fsmeta`` in r15): a table on
-    a NON-LOCAL scheme (hdfs://, s3a://, file://…) is fingerprinted
-    through the Hadoop FS API — the os.stat walk below silently returned
-    an EMPTY string there, mapping every content version of a remote
-    corpus to the same persisted-artifact key and memo key, so a corpus
-    rewrite would reuse stale signatures. Local paths keep the os.stat
-    walk: nanosecond mtimes are strictly finer than Hadoop's
-    milliseconds (fsmeta.fs_content_fingerprint's resolution contract).
-    The remote branch needs a live SparkSession for the FS handle; a
-    remote path with no active session fails loudly rather than
-    degrading to the empty-fingerprint hazard this fix closes."""
-    import os
-
-    if "://" in sf_dir:
-        from pyspark.sql import SparkSession
-
-        from ..fsmeta import fs_content_fingerprint
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError(
-                f"fingerprinting remote path {sf_dir!r} requires an active "
-                "SparkSession (Hadoop FS access)"
-            )
-        return fs_content_fingerprint(
-            spark, f"{sf_dir.rstrip('/')}/documents.parquet"
-        )
-    path = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    parts = []
-    if os.path.isdir(path):
-        for root, _, files in sorted(os.walk(path)):
-            for f in sorted(files):
-                st = os.stat(os.path.join(root, f))
-                parts.append(f"{f}:{st.st_mtime_ns}:{st.st_size}")
-    elif os.path.exists(path):
-        st = os.stat(path)
-        parts.append(f"{st.st_mtime_ns}:{st.st_size}")
-    return "|".join(parts)
-
-
 def _unpersist_memoized(df) -> None:
     """Best-effort prompt free of a memoized frame's checkpointed blocks.
 
@@ -911,7 +732,7 @@ def _memo_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
 
     app_id = spark.sparkContext.applicationId
     path = os.path.abspath(sf_dir)
-    fp = _docs_fingerprint(sf_dir)
+    fp = docs_fingerprint(sf_dir)
     # Evict (a) entries left by stopped sessions — their checkpointed
     # blocks are gone with the old executors and must not pin memory or
     # answer — and (b) same-session entries for this PATH whose documents

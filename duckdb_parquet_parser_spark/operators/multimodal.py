@@ -587,15 +587,15 @@ def video_neardup_pairs(
     dominated). localCheckpoint pins the tiny (doc, idx, hash) table —
     ~20 bytes/frame — so the Python decode runs exactly once.
 
-    ``frames`` (r17, the staged_r17_video swap): a pre-computed
-    (doc_id, frame_idx, ahash) table — e.g. the persisted frames
-    artifact — replaces the in-line decode entirely. The recurring
-    near-dup/cluster cost then becomes the banded join + counts over a
-    parquet scan; no localCheckpoint is taken because the artifact is
-    already materialized storage and its four subtree reads are
-    pruned column scans, not Python decodes. The caller owns stride
-    consistency (``read_frames_artifact`` validates it against the
-    sidecar before any data read)."""
+    ``frames`` (r17): a pre-computed (doc_id, frame_idx, ahash) table —
+    e.g. the persisted ``multimodal_synth.VIDEO_FRAMES`` artifact —
+    replaces the in-line decode entirely. The recurring near-dup/cluster
+    cost then becomes the banded join + counts over a parquet scan; no
+    localCheckpoint is taken because the artifact is already
+    materialized storage and its four subtree reads are pruned column
+    scans, not Python decodes. The caller owns stride consistency (the
+    artifact's sidecar pins ``VIDEO_FRAME_STRIDE`` and is checked before
+    any data read)."""
     if frames is None:
         frames = extract_video_frame_hashes(
             df, stride=stride

@@ -60,6 +60,7 @@ from pyspark.sql.window import Window
 
 # Composition-only imports: these modules' own plans and oracles are
 # untouched (see module docstring — certified r10, must stay parked).
+from ..cache import ensure_artifact
 from .dedup import _CC_ROUND_CTES, CC_ROUNDS, connected_components_converged
 from .multimodal import (
     AHASH_HAMMING_MAX,
@@ -75,6 +76,7 @@ from .multimodal_synth import (
     _SIGNED64,
     _VIDEO_FRAME_CTE,
     IMG_POISON_MOD,
+    VIDEO_FRAMES,
     build_audio_sig_table,
     build_image_table,
     build_video_table,
@@ -191,15 +193,13 @@ def q_ns_mm_video_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output shape mirrors ``ns_dedup_components``: per graph member, its
     component (min doc_id), cluster size, and the min-id keep decision.
-    Frame hashes come from the persisted frames artifact (r17,
-    ``ensure_frames_artifact`` — decode once per table content), then
+    Frame hashes come from the persisted ``VIDEO_FRAMES`` artifact (r17,
+    multimodal_synth.py — decode once per table content), then
     pairs → CC — every step an equi-join or hash agg over the
     ~20-bytes/frame artifact scan."""
-    from .staged_r17_video import ensure_frames_artifact
-
     pairs = video_neardup_pairs(
         build_video_table(spark, sf_dir),
-        frames=ensure_frames_artifact(spark, sf_dir),
+        frames=ensure_artifact(spark, VIDEO_FRAMES, sf_dir),
     )
     comp, _rounds = connected_components_converged(
         pairs.select("doc_a", "doc_b"), probe_every=CC_ROUNDS

@@ -42,9 +42,11 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import ArtifactKind, ensure_artifact
 from ..catalog import load_table
 from .multimodal import (
     AUDIO_FP_BLOCKS,
+    VIDEO_FRAME_STRIDE,
     audio_neardup_pairs,
     encode_bmp,
     encode_ppm,
@@ -268,6 +270,22 @@ def q_ns_mm_video_framehashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_video_frame_hashes(build_video_table(spark, sf_dir))
 
 
+#: The (doc_id, frame_idx, ahash) table as a persisted artifact: decode
+#: once per table content (~20 bytes/frame), and let the recurring
+#: near-dup/cluster runs pay only the banded join + CC. The sidecar pins
+#: the sampling stride with the format version — hashes sampled at
+#: another stride are a different table, and silently change every
+#: downstream match fraction. Poison (undecodable) docs contribute no
+#: rows, exactly the certified decode contract.
+VIDEO_FRAMES = ArtifactKind(
+    name="frames",
+    prefix="sg_vframes",
+    columns={"doc_id": "bigint", "frame_idx": "int", "ahash": "bigint"},
+    params={"frames_version": 1, "stride": VIDEO_FRAME_STRIDE},
+    build=q_ns_mm_video_framehashes,
+)
+
+
 # A marker-less cache entry is either a CRASHED staging (prunable) or a
 # CONCURRENT one mid-write (must not be touched) — age disambiguates.
 # (Kept as a name for the lifecycle tests; the value lives in cache.py.)
@@ -405,16 +423,14 @@ def q_ns_mm_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame count. Perturbed odd-generation docs make some cross-parity
     pairs fail the threshold — the filter is load-bearing.
 
-    r17: frame hashes come from the persisted frames artifact
-    (``ensure_frames_artifact`` — decode once per table content, every
-    subsequent run pays only the banded join), so this row now prices
-    the join, not the Y4M decode. Output and oracle unchanged — the r17
-    hash match certifies artifact ≡ live decode end-to-end."""
-    from .staged_r17_video import ensure_frames_artifact
-
+    r17: frame hashes come from the persisted :data:`VIDEO_FRAMES`
+    artifact (decode once per table content, every subsequent run pays
+    only the banded join), so this row prices the join, not the Y4M
+    decode. Output and oracle unchanged — the r17 hash match certifies
+    artifact ≡ live decode end-to-end."""
     return video_neardup_pairs(
         build_video_table(spark, sf_dir),
-        frames=ensure_frames_artifact(spark, sf_dir),
+        frames=ensure_artifact(spark, VIDEO_FRAMES, sf_dir),
     )
 
 

@@ -77,8 +77,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache import ArtifactKind, ensure_artifact
 from ..catalog import load_table, scale_out
-from .corpus import _hex_digit_sql
+from .corpus import _HLL_FINAL_SQL, HLL_BUCKETS, HLL_RHO_CAP, _hex_digit_sql
 from .similarity import DIM, LSH_QUANTUM
 from .text import CONTAM_N, EVAL_MOD, _CONTAM_GRAM_EXPR, _word_ngrams
 
@@ -708,8 +709,6 @@ def q_ns_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
     output row (inner join, identical on both sides) — the query
     reports the algebra where there is overlap to estimate; an
     all-pairs report would LEFT-join and zero-fill instead."""
-    from .corpus import _HLL_FINAL_SQL, HLL_BUCKETS, HLL_RHO_CAP
-
     df = load_table(spark, sf_dir, "documents")
     words = df.filter(F.col("text").isNotNull()).select(
         "source", F.explode(F.split("text", " ")).alias("word")
@@ -802,34 +801,6 @@ def q_ns_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
 from .dedup import INCR_MOD as HLLI_MOD  # noqa: E402
 from .dedup import INCR_REM as HLLI_REM  # noqa: E402
 
-HLL_ARTIFACT_VERSION = 1
-HLL_ARTIFACT_META = "_hll_meta.json"
-
-
-def _hll_artifact_path(sf_dir: str) -> str:
-    """Content-keyed per-user artifact dir (the dedup-signature
-    discipline: cache.py ownership checks; stale fingerprints of the
-    same source path pruned on the way in).
-
-    Deliberate near-copy of dedup._incremental_artifact_path (review
-    pass): the prune loop differs only in the 'sg_hll' prefix, but
-    parameterizing the original means editing dedup.py (or cache.py),
-    and both back certified queries — the same certification-window
-    drag adjudicated at _rp_signs. Collapse all three into cache.py in
-    the round that next opens it."""
-    import os
-    import shutil
-
-    from ..cache import content_tags, per_user_cache_dir
-
-    base = per_user_cache_dir("sg_hll")
-    path_tag, fp_tag = content_tags(sf_dir)
-    name = f"{path_tag}_{fp_tag}"
-    for entry in os.listdir(base):
-        if entry.startswith(f"{path_tag}_") and entry != name:
-            shutil.rmtree(os.path.join(base, entry), ignore_errors=True)
-    return os.path.join(base, name)
-
 
 def _hll_source_registers(words: DataFrame) -> DataFrame:
     """(source, bucket, mr) HLL registers — the certified
@@ -846,6 +817,40 @@ def _hll_source_registers(words: DataFrame) -> DataFrame:
         .groupBy("source", "bucket")
         .agg(F.max("rho").alias("mr"))
     )
+
+
+def _hll_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, word) over the non-null documents."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
+    )
+
+
+def _hll_corpus_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _hll_source_registers(
+        _hll_words(spark, sf_dir).filter(F.col("doc_id") % HLLI_MOD != HLLI_REM)
+    )
+
+
+#: The corpus slice's per-source HLL registers. The corpus/batch split is
+#: part of the artifact's meaning: registers sketched under another split
+#: do NOT cover this run's corpus slice (review pass). Column TYPES are
+#: checked too: unionByName would coerce a string ``mr`` and turn the
+#: register merge into a silent lexicographic max.
+HLL_REGISTERS = ArtifactKind(
+    name="HLL",
+    prefix="sg_hll",
+    columns={"source": "string", "bucket": "int", "mr": "int"},
+    params={
+        "hll_version": 1,
+        "buckets": HLL_BUCKETS,
+        "rho_cap": HLL_RHO_CAP,
+        "split_mod": HLLI_MOD,
+        "split_rem": HLLI_REM,
+    },
+    build=_hll_corpus_registers,
+)
 
 
 def q_ns_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,86 +873,13 @@ def q_ns_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     run); on re-run only the batch is hashed. Scale: the artifact is
     ≤ #sources × 64 rows regardless of corpus size — incremental
     statistics cost O(batch) + O(state), never O(corpus)."""
-    import json
-
-    from ..sources.layout import _fs_read_text
-    from .dedup import _artifact_uri, _fs_move_text_into_place
-    from .corpus import HLL_BUCKETS, HLL_RHO_CAP, _HLL_FINAL_SQL
-
-    docs = load_table(spark, sf_dir, "documents")
-    words = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
-    )
-    path = _hll_artifact_path(sf_dir)
-    uri = _artifact_uri(path)
-    meta_uri = f"{uri.rstrip('/')}/{HLL_ARTIFACT_META}"
-    text = _fs_read_text(spark, meta_uri)
-    if text is None:
-        corpus_regs = _hll_source_registers(
-            words.filter(F.col("doc_id") % HLLI_MOD != HLLI_REM)
-        )
-        corpus_regs.write.mode("overwrite").parquet(uri)
-        _fs_move_text_into_place(
-            spark,
-            meta_uri,
-            json.dumps(
-                {
-                    "hll_version": HLL_ARTIFACT_VERSION,
-                    "buckets": HLL_BUCKETS,
-                    "rho_cap": HLL_RHO_CAP,
-                    # the split is part of the artifact's meaning: an
-                    # artifact sketched under a different corpus/batch
-                    # split does NOT cover this run's corpus slice
-                    # (review pass)
-                    "split_mod": HLLI_MOD,
-                    "split_rem": HLLI_REM,
-                }
-            ),
-        )
-        text = _fs_read_text(spark, meta_uri)
-    meta = json.loads(text)
-    if meta.get("hll_version") != HLL_ARTIFACT_VERSION:
-        raise ValueError(
-            f"HLL artifact version {meta.get('hll_version')!r} at {path}"
-            f" != engine version {HLL_ARTIFACT_VERSION}"
-        )
-    if (
-        meta.get("buckets") != HLL_BUCKETS
-        or meta.get("rho_cap") != HLL_RHO_CAP
-        or meta.get("split_mod") != HLLI_MOD
-        or meta.get("split_rem") != HLLI_REM
-    ):
-        raise ValueError(
-            f"HLL artifact params {meta!r} incompatible with engine "
-            f"(m={HLL_BUCKETS}, cap={HLL_RHO_CAP}, "
-            f"split={HLLI_MOD}/{HLLI_REM})"
-        )
-    stored = spark.read.parquet(uri)
-    missing = [
-        c for c in ("source", "bucket", "mr") if c not in stored.columns
-    ]
-    if missing:
-        raise ValueError(f"HLL artifact at {path} missing {missing}")
-    # TYPE validation, not just names (review pass): unionByName would
-    # coerce a string mr and turn the register merge into a silent
-    # lexicographic max — exactly the corruption the sidecar exists to
-    # refuse loudly
-    types = dict(stored.dtypes)
-    want = {"source": "string", "bucket": "int", "mr": "int"}
-    drift = {
-        c: types[c] for c, t in want.items() if types.get(c) != t
-    }
-    if drift:
-        raise ValueError(
-            f"HLL artifact at {path} has drifted column types {drift}; "
-            f"expected {want}"
-        )
+    stored = ensure_artifact(spark, HLL_REGISTERS, sf_dir)
+    words = _hll_words(spark, sf_dir)
     batch_regs = _hll_source_registers(
         words.filter(F.col("doc_id") % HLLI_MOD == HLLI_REM)
     )
     merged = (
-        stored.select("source", "bucket", "mr")
-        .unionByName(batch_regs)
+        stored.unionByName(batch_regs)
         .groupBy("source", "bucket")
         .agg(F.max("mr").alias("mr"))
     )
@@ -987,13 +919,7 @@ def _hll_incremental_oracle() -> str:
     """From-scratch registers over the FULL corpus — the oracle never
     sees the artifact; fingerprint equality IS the merge≡recompute
     certification."""
-    from .corpus import (
-        _HLL_BUCKET_SQL,
-        _HLL_FINAL_SQL,
-        _HLL_RHO_SQL,
-        HLL_BUCKETS,
-        HLL_RHO_CAP,
-    )
+    from .corpus import _HLL_BUCKET_SQL, _HLL_RHO_SQL
 
     scale = 2**HLL_RHO_CAP
     return f"""
@@ -1449,13 +1375,7 @@ ORACLES_PENDING_R15 = {
 
 
 def _hll_algebra_oracle() -> str:
-    from .corpus import (
-        _HLL_BUCKET_SQL,
-        _HLL_FINAL_SQL,
-        _HLL_RHO_SQL,
-        HLL_BUCKETS,
-        HLL_RHO_CAP,
-    )
+    from .corpus import _HLL_BUCKET_SQL, _HLL_RHO_SQL
 
     scale = 2**HLL_RHO_CAP
     ssum_v = (

@@ -18,7 +18,24 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+
+def env_positive_int(name: str, default: int) -> int:
+    """The positive integer in environment variable ``name``, or
+    ``default`` when it is unset. A malformed or non-positive value
+    raises ``ValueError`` naming the variable."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not an integer") from None
+    if value < 1:
+        raise ValueError(f"{name}={raw!r} must be a positive integer")
+    return value
+
+
+DEFAULT_SHUFFLE_PARTITIONS = env_positive_int("SPARK_GRAFT_SHUFFLE", 32)
 
 # Set to a durable (HDFS / object-store) directory to make every
 # lineage-cutting materialization in the engine survive executor loss.

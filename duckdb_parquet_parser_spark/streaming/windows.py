@@ -18,13 +18,13 @@ Two regimes:
 
 from __future__ import annotations
 
-import os
 import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.windows import sliding_agg, tumbling_agg
+from ..session import env_positive_int
 from .source import event_stream, stage_events
 
 #: State partition counts for the stateful streaming runs — the
@@ -38,11 +38,11 @@ from .source import event_stream, stage_events
 #: partition, so its commit bill scales steepest). At cluster scale set
 #: the env overrides to track cores / key cardinality — the constants
 #: are the local-fixture operating point, not a tuning ceiling.
-STREAM_AGG_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_AGG_PARTITIONS", "4")
+STREAM_AGG_STATE_PARTITIONS = env_positive_int(
+    "SPARK_GRAFT_STREAM_AGG_PARTITIONS", 4
 )
-STREAM_JOIN_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_JOIN_PARTITIONS", "2")
+STREAM_JOIN_STATE_PARTITIONS = env_positive_int(
+    "SPARK_GRAFT_STREAM_JOIN_PARTITIONS", 2
 )
 
 

@@ -170,3 +170,34 @@ def test_forced_hint_regime_actually_fires(spark, sf_smoke):
         assert "BroadcastHashJoin" not in plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+
+
+@pytest.mark.parametrize("raw", ["four", "0"])
+@pytest.mark.parametrize(
+    "knob, module",
+    [
+        ("SPARK_GRAFT_SHUFFLE", "duckdb_parquet_parser_spark.session"),
+        ("SPARK_GRAFT_STREAM_AGG_PARTITIONS", "duckdb_parquet_parser_spark.streaming.windows"),
+        ("SPARK_GRAFT_STREAM_JOIN_PARTITIONS", "duckdb_parquet_parser_spark.streaming.windows"),
+    ],
+)
+def test_bad_env_knob_fails_loudly_with_its_name(knob, module, raw):
+    """A malformed or zero partition knob stops the import with a
+    ValueError that names the variable, instead of a bare int() error
+    (malformed) or a session that fails later, far from the cause (zero)."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", f"import {module}"],
+        cwd=root,
+        env={**os.environ, knob: raw},
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode != 0
+    last = proc.stderr.strip().splitlines()[-1]
+    assert last.startswith("ValueError: ") and knob in last, last

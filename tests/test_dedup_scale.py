@@ -215,16 +215,16 @@ def test_persisted_incremental_matches_in_session_variant(spark, sf_smoke):
     corpus."""
     import os
 
+    from duckdb_parquet_parser_spark.cache import ARTIFACT_META, artifact_entry_path
     from duckdb_parquet_parser_spark.operators.dedup import (
-        SIG_ARTIFACT_META,
-        _incremental_artifact_path,
+        SIGNATURES,
         q_ns_dedup_incremental,
         q_ns_dedup_incremental_persisted,
     )
 
     import shutil
 
-    path = _incremental_artifact_path(sf_smoke)
+    path = artifact_entry_path(SIGNATURES.prefix, sf_smoke)
     shutil.rmtree(path, ignore_errors=True)  # force the run-1 write
 
     persisted = q_ns_dedup_incremental_persisted(spark, sf_smoke)
@@ -232,7 +232,7 @@ def test_persisted_incremental_matches_in_session_variant(spark, sf_smoke):
     assert persisted.exceptAll(in_session).count() == 0
     assert in_session.exceptAll(persisted).count() == 0
 
-    meta_path = os.path.join(path, SIG_ARTIFACT_META)
+    meta_path = os.path.join(path, ARTIFACT_META)
     assert os.path.exists(meta_path)
     mtime = os.path.getmtime(meta_path)
     again = q_ns_dedup_incremental_persisted(spark, sf_smoke)
@@ -249,11 +249,10 @@ def test_signature_artifact_read_path_validates_contract(spark, sf_smoke, tmp_pa
 
     import pytest
 
+    from duckdb_parquet_parser_spark.cache import ARTIFACT_META, read_artifact
     from duckdb_parquet_parser_spark.operators.dedup import (
         N_HASHES,
-        SIG_ARTIFACT_META,
-        SIG_ARTIFACT_VERSION,
-        read_signature_artifact,
+        SIGNATURES,
         write_signature_artifact,
     )
 
@@ -261,7 +260,7 @@ def test_signature_artifact_read_path_validates_contract(spark, sf_smoke, tmp_pa
     write_signature_artifact(spark, sf_smoke, path)
 
     # happy path: full signature schema comes back
-    df = read_signature_artifact(spark, path)
+    df = read_artifact(spark, SIGNATURES, path)
     assert df.columns == ["doc_id"] + [f"h{i}" for i in range(N_HASHES)]
     assert df.count() > 0
     # the artifact holds ONLY corpus docs — the batch slice is never persisted
@@ -275,38 +274,36 @@ def test_signature_artifact_read_path_validates_contract(spark, sf_smoke, tmp_pa
     # the contract's ValueError.
     from duckdb_parquet_parser_spark.sources.layout import _fs_write_text
 
-    meta_path = os.path.join(path, SIG_ARTIFACT_META)
+    meta_path = os.path.join(path, ARTIFACT_META)
     meta = json.load(open(meta_path))
 
     # (b) version mismatch
-    _fs_write_text(
-        spark, meta_path,
-        json.dumps({**meta, "sig_version": SIG_ARTIFACT_VERSION + 1}),
-    )
+    bumped = SIGNATURES.params["sig_version"] + 1
+    _fs_write_text(spark, meta_path, json.dumps({**meta, "sig_version": bumped}))
     with pytest.raises(ValueError, match="version"):
-        read_signature_artifact(spark, path)
+        read_artifact(spark, SIGNATURES, path)
 
     # (c) hash-count mismatch
     _fs_write_text(
         spark, meta_path, json.dumps({**meta, "n_hashes": N_HASHES * 2})
     )
     with pytest.raises(ValueError, match="hashes"):
-        read_signature_artifact(spark, path)
+        read_artifact(spark, SIGNATURES, path)
 
     # (a) missing sidecar
     os.remove(meta_path)
     with pytest.raises(ValueError, match="no _sig_meta"):
-        read_signature_artifact(spark, path)
+        read_artifact(spark, SIGNATURES, path)
 
     # (d) missing signature column
     _fs_write_text(spark, meta_path, json.dumps(meta))
     narrow = str(tmp_path / "sig_artifact_narrow")
     spark.read.parquet(path).drop("h3").write.parquet(narrow)
     _fs_write_text(
-        spark, os.path.join(narrow, SIG_ARTIFACT_META), json.dumps(meta)
+        spark, os.path.join(narrow, ARTIFACT_META), json.dumps(meta)
     )
     with pytest.raises(ValueError, match="missing columns"):
-        read_signature_artifact(spark, narrow)
+        read_artifact(spark, SIGNATURES, narrow)
 
 
 def test_append_signatures_grows_artifact_without_rewrite(spark, sf_smoke, tmp_path):
@@ -319,19 +316,19 @@ def test_append_signatures_grows_artifact_without_rewrite(spark, sf_smoke, tmp_p
     import json
     import os
 
+    from duckdb_parquet_parser_spark.cache import ARTIFACT_META, read_artifact
     from duckdb_parquet_parser_spark.operators.dedup import (
         INCR_MOD,
         INCR_REM,
-        SIG_ARTIFACT_META,
+        SIGNATURES,
         _doc_word_arrays,
         append_signatures,
-        read_signature_artifact,
         write_signature_artifact,
     )
 
     path = str(tmp_path / "grow_artifact")
     write_signature_artifact(spark, sf_smoke, path)
-    before = read_signature_artifact(spark, path)
+    before = read_artifact(spark, SIGNATURES, path)
     n_corpus = before.count()
     first_files = {
         f: os.path.getmtime(f) for f in glob.glob(os.path.join(path, "*.parquet"))
@@ -343,13 +340,13 @@ def test_append_signatures_grows_artifact_without_rewrite(spark, sf_smoke, tmp_p
     n_batch = batch.count()
     append_signatures(spark, batch, path)
 
-    after = read_signature_artifact(spark, path)
+    after = read_artifact(spark, SIGNATURES, path)
     assert after.count() == n_corpus + n_batch
     assert after.select("doc_id").distinct().count() == n_corpus + n_batch
     # original part-files are untouched (append added new ones)
     for f, mtime in first_files.items():
         assert os.path.getmtime(f) == mtime, f"append rewrote {f}"
-    meta = json.load(open(os.path.join(path, SIG_ARTIFACT_META)))
+    meta = json.load(open(os.path.join(path, ARTIFACT_META)))
     assert meta["snapshots"] == 2
 
     # contract gate: a version-bumped sidecar blocks the append (written
@@ -358,7 +355,7 @@ def test_append_signatures_grows_artifact_without_rewrite(spark, sf_smoke, tmp_p
 
     meta["sig_version"] = meta.get("sig_version", 1) + 1
     _fs_write_text(
-        spark, os.path.join(path, SIG_ARTIFACT_META), json.dumps(meta)
+        spark, os.path.join(path, ARTIFACT_META), json.dumps(meta)
     )
     import pytest
 
@@ -373,20 +370,20 @@ def test_signature_artifact_roundtrip_over_file_uri(spark, sf_smoke, tmp_path):
     test_layout.py uses for the maintenance paths."""
     import json
 
+    from duckdb_parquet_parser_spark.cache import ARTIFACT_META, read_artifact
     from duckdb_parquet_parser_spark.operators.dedup import (
         INCR_MOD,
         INCR_REM,
-        SIG_ARTIFACT_META,
+        SIGNATURES,
         _doc_word_arrays,
         append_signatures,
-        read_signature_artifact,
         write_signature_artifact,
     )
     from duckdb_parquet_parser_spark.sources.layout import _fs_read_text
 
     uri = f"file://{tmp_path}/sig_artifact_uri"
     write_signature_artifact(spark, sf_smoke, uri)
-    corpus = read_signature_artifact(spark, uri)
+    corpus = read_artifact(spark, SIGNATURES, uri)
     n_corpus = corpus.count()
     assert n_corpus > 0
 
@@ -394,11 +391,11 @@ def test_signature_artifact_roundtrip_over_file_uri(spark, sf_smoke, tmp_path):
         F.col("doc_id") % INCR_MOD == INCR_REM
     )
     append_signatures(spark, batch, uri)
-    assert read_signature_artifact(spark, uri).count() == n_corpus + batch.count()
-    meta = json.loads(_fs_read_text(spark, f"{uri}/{SIG_ARTIFACT_META}"))
+    assert read_artifact(spark, SIGNATURES, uri).count() == n_corpus + batch.count()
+    meta = json.loads(_fs_read_text(spark, f"{uri}/{ARTIFACT_META}"))
     assert meta["snapshots"] == 2
     # the rename left no temp debris behind
-    assert _fs_read_text(spark, f"{uri}/{SIG_ARTIFACT_META}.tmp") is None
+    assert _fs_read_text(spark, f"{uri}/{ARTIFACT_META}.tmp") is None
 
 
 def test_incremental_artifact_dir_is_per_user_and_pruned(sf_smoke):
@@ -408,11 +405,10 @@ def test_incremental_artifact_dir_is_per_user_and_pruned(sf_smoke):
     import os
     import stat
 
-    from duckdb_parquet_parser_spark.operators.dedup import (
-        _incremental_artifact_path,
-    )
+    from duckdb_parquet_parser_spark.cache import artifact_entry_path
+    from duckdb_parquet_parser_spark.operators.dedup import SIGNATURES
 
-    path = _incremental_artifact_path(sf_smoke)
+    path = artifact_entry_path(SIGNATURES.prefix, sf_smoke)
     base = os.path.dirname(path)
     assert os.path.basename(base) == f"sg_sig_{os.getuid()}"
     assert stat.S_IMODE(os.stat(base).st_mode) == 0o700
@@ -424,7 +420,7 @@ def test_incremental_artifact_dir_is_per_user_and_pruned(sf_smoke):
     other = os.path.join(base, "cafecafecafe_deadbeefdead")
     os.makedirs(other, exist_ok=True)
     try:
-        again = _incremental_artifact_path(sf_smoke)
+        again = artifact_entry_path(SIGNATURES.prefix, sf_smoke)
         assert again == path
         assert not os.path.exists(stale), "stale same-path artifact not pruned"
         assert os.path.exists(other), "different-path artifact must survive"
@@ -446,12 +442,12 @@ def test_artifact_root_override_end_to_end(spark, sf_smoke, tmp_path, monkeypatc
     import os
 
     from duckdb_parquet_parser_spark.cache import (
+        ARTIFACT_META,
         ARTIFACT_ROOT_ENV,
         artifact_entry_path,
         content_tags,
     )
     from duckdb_parquet_parser_spark.operators.dedup import (
-        SIG_ARTIFACT_META,
         q_ns_dedup_incremental,
         q_ns_dedup_incremental_persisted,
     )
@@ -466,7 +462,7 @@ def test_artifact_root_override_end_to_end(spark, sf_smoke, tmp_path, monkeypatc
     assert persisted.exceptAll(in_session).count() == 0
     assert in_session.exceptAll(persisted).count() == 0
 
-    meta_path = os.path.join(local, SIG_ARTIFACT_META)
+    meta_path = os.path.join(local, ARTIFACT_META)
     assert os.path.exists(meta_path)  # landed under the root, not $TMPDIR
     json.load(open(meta_path))  # sidecar is the validated contract
     mtime = os.path.getmtime(meta_path)

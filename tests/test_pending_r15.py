@@ -399,15 +399,15 @@ def test_hll_incremental_artifact_contract(spark, sf_smoke):
     import json
     import os
 
+    from duckdb_parquet_parser_spark.cache import ARTIFACT_META, artifact_entry_path
     from duckdb_parquet_parser_spark.operators.pending_r15 import (
-        HLL_ARTIFACT_META,
-        _hll_artifact_path,
+        HLL_REGISTERS,
         q_ns_hll_incremental,
     )
 
     r1 = sorted(map(tuple, q_ns_hll_incremental(spark, sf_smoke).collect()))
-    path = _hll_artifact_path(sf_smoke)
-    meta_file = os.path.join(path, HLL_ARTIFACT_META)
+    path = artifact_entry_path(HLL_REGISTERS.prefix, sf_smoke)
+    meta_file = os.path.join(path, ARTIFACT_META)
     assert os.path.exists(meta_file)
     mtime = os.path.getmtime(meta_file)
     r2 = sorted(map(tuple, q_ns_hll_incremental(spark, sf_smoke).collect()))
@@ -416,7 +416,7 @@ def test_hll_incremental_artifact_contract(spark, sf_smoke):
     # stale format version → loud rejection before any data read.
     # The tamper bypasses the Hadoop FS writer, so the LocalFS checksum
     # sidecar must go too or the read fails on the .crc, not the version
-    crc = os.path.join(path, f".{HLL_ARTIFACT_META}.crc")
+    crc = os.path.join(path, f".{ARTIFACT_META}.crc")
     meta = json.loads(open(meta_file).read())
     meta["hll_version"] = 999
     open(meta_file, "w").write(json.dumps(meta))
@@ -429,11 +429,7 @@ def test_hll_incremental_artifact_contract(spark, sf_smoke):
         # restore to the CURRENT engine version, not a literal — a
         # hardcoded 1 would poison the shared artifact across a future
         # version bump (review pass)
-        from duckdb_parquet_parser_spark.operators.pending_r15 import (
-            HLL_ARTIFACT_VERSION,
-        )
-
-        meta["hll_version"] = HLL_ARTIFACT_VERSION
+        meta["hll_version"] = HLL_REGISTERS.params["hll_version"]
         open(meta_file, "w").write(json.dumps(meta))
         if os.path.exists(crc):
             os.unlink(crc)

@@ -516,11 +516,12 @@ def test_media_cluster_job_budget(spark, name, budget):
         # pre-build it OUTSIDE the counted group (bench does the same in
         # its maintenance block: the ensure-write is the prior ingest
         # run's work, not this query's recurring budget)
-        from duckdb_parquet_parser_spark.operators.staged_r17_video import (
-            ensure_frames_artifact,
+        from duckdb_parquet_parser_spark.cache import ensure_artifact
+        from duckdb_parquet_parser_spark.operators.multimodal_synth import (
+            VIDEO_FRAMES,
         )
 
-        ensure_frames_artifact(spark, bench_sf)
+        ensure_artifact(spark, VIDEO_FRAMES, bench_sf)
     spark.catalog.clearCache()
     sc = spark.sparkContext
     group = f"media-cluster-budget-{name}"

@@ -14,12 +14,17 @@ from __future__ import annotations
 
 import pytest
 
+from duckdb_parquet_parser_spark.cache import (
+    _artifact_meta_path,
+    _fs_move_text_into_place,
+    artifact_entry_path,
+    read_artifact,
+    write_artifact,
+)
 from duckdb_parquet_parser_spark.operators.curation import (
+    COMPONENTS,
     ORACLES as CURATION_ORACLES,
-    _comp_artifact_path,
     q_ns_source_droprate,
-    read_components_artifact,
-    write_components_artifact,
 )
 from duckdb_parquet_parser_spark.operators.dedup import (
     ORACLES as DEDUP_ORACLES,
@@ -178,7 +183,7 @@ def test_droprate_persisted_artifact_contract(spark, sf_smoke, tmp_path):
     assert got == want and want
 
     # artifact reused on the second run: meta mtime unchanged
-    art = _comp_artifact_path(sf_smoke)
+    art = artifact_entry_path(COMPONENTS.prefix, sf_smoke)
     meta = os.path.join(art, "_sig_meta.json")
     m0 = os.stat(meta).st_mtime_ns
     again = {
@@ -190,20 +195,15 @@ def test_droprate_persisted_artifact_contract(spark, sf_smoke, tmp_path):
     # stale version → loud rejection before data (rewrite the sidecar
     # through the Hadoop path — a raw pathlib write would trip the
     # LocalFileSystem's .crc checksum instead of the version check)
-    from duckdb_parquet_parser_spark.operators.dedup import (
-        _artifact_meta_path,
-        _fs_move_text_into_place,
-    )
-
     bad = tmp_path / "comp_art"
-    write_components_artifact(spark, sf_smoke, f"file://{bad}")
+    write_artifact(spark, COMPONENTS, sf_smoke, f"file://{bad}")
     _fs_move_text_into_place(
         spark,
         _artifact_meta_path(f"file://{bad}"),
         json.dumps({"comp_version": 999}),
     )
     with pytest.raises(ValueError, match="version"):
-        read_components_artifact(spark, f"file://{bad}")
+        read_artifact(spark, COMPONENTS, f"file://{bad}")
 
 
 @pytest.mark.parametrize("seed", [414, 7381])

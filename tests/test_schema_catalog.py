@@ -152,3 +152,26 @@ def test_tree_catalog_leaf_rewrite_reinfers(spark, tmp_path):
     ).parquet(os.path.join(p, "part=p0"))
     second = read_parquet_cached_schema_tree(spark, p)
     assert sorted(second.columns) == ["b", "c", "part"]
+
+
+def test_memo_evicts_least_recently_used(spark, sf_smoke):
+    """A full memo evicts one entry at a time, least recently used
+    first: a key touched after the fill survives the next insert, so a
+    long session that overflows the memo keeps its hot tables' schemas."""
+    from duckdb_parquet_parser_spark.catalog import _SCHEMA_MEMO_MAX
+
+    _SCHEMA_MEMO.clear()
+    try:
+        region = table_path(sf_smoke, "region")
+        read_parquet_cached_schema(spark, region)
+        (touched,) = _SCHEMA_MEMO
+        schema = _SCHEMA_MEMO[touched]
+        for i in range(_SCHEMA_MEMO_MAX - 1):
+            _SCHEMA_MEMO[("filler", i)] = schema
+        read_parquet_cached_schema(spark, region)  # touch: memo hit
+        read_parquet_cached_schema(spark, table_path(sf_smoke, "nation"))
+        assert touched in _SCHEMA_MEMO
+        assert ("filler", 0) not in _SCHEMA_MEMO
+        assert len(_SCHEMA_MEMO) == _SCHEMA_MEMO_MAX
+    finally:
+        _SCHEMA_MEMO.clear()

@@ -1,6 +1,6 @@
-"""Staged r17 video frame-hash artifact (operators/staged_r17_video.py):
-write → validated read must round-trip the decode output exactly, reuse
-without rewrite, and reject version/stride mismatches before any data."""
+"""The video frame-hash artifact (multimodal_synth.VIDEO_FRAMES): write →
+validated read must round-trip the decode output exactly, reuse without
+rewrite, and reject version/stride mismatches before any data."""
 
 from __future__ import annotations
 
@@ -8,25 +8,30 @@ import json
 
 import pytest
 
+from duckdb_parquet_parser_spark.cache import (
+    ARTIFACT_ROOT_ENV,
+    _artifact_meta_path,
+    _fs_move_text_into_place,
+    ensure_artifact,
+    read_artifact,
+    write_artifact,
+)
 from duckdb_parquet_parser_spark.operators.multimodal import (
     VIDEO_FRAME_STRIDE,
     extract_video_frame_hashes,
 )
 from duckdb_parquet_parser_spark.operators.multimodal_synth import (
+    VIDEO_FRAMES,
     build_video_table,
-)
-from duckdb_parquet_parser_spark.operators.staged_r17_video import (
-    read_frames_artifact,
-    write_frames_artifact,
 )
 
 
 def test_frames_artifact_roundtrip_and_contract(spark, sf_smoke, tmp_path):
     uri = f"file://{tmp_path}/vframes"
-    write_frames_artifact(spark, sf_smoke, uri)
+    write_artifact(spark, VIDEO_FRAMES, sf_smoke, uri)
     got = {
         (r["doc_id"], r["frame_idx"], r["ahash"])
-        for r in read_frames_artifact(spark, uri).collect()
+        for r in read_artifact(spark, VIDEO_FRAMES, uri).collect()
     }
     want = {
         (r["doc_id"], r["frame_idx"], r["ahash"])
@@ -36,43 +41,38 @@ def test_frames_artifact_roundtrip_and_contract(spark, sf_smoke, tmp_path):
     }
     assert got == want and want
 
-    # stride mismatch → loud rejection before data
+    # stride mismatch → loud rejection before data (sidecars rewritten
+    # through the Hadoop path so the LocalFileSystem .crc stays consistent)
+    def tamper(**changes):
+        _fs_move_text_into_place(
+            spark,
+            _artifact_meta_path(uri),
+            json.dumps({**VIDEO_FRAMES.params, **changes}),
+        )
+
+    tamper(stride=VIDEO_FRAME_STRIDE + 1)
     with pytest.raises(ValueError, match="stride"):
-        read_frames_artifact(spark, uri, stride=VIDEO_FRAME_STRIDE + 1)
+        read_artifact(spark, VIDEO_FRAMES, uri)
 
-    # version bump → loud rejection (sidecar rewritten through the
-    # Hadoop path so the LocalFileSystem .crc stays consistent)
-    from duckdb_parquet_parser_spark.operators.dedup import (
-        _artifact_meta_path,
-        _fs_move_text_into_place,
-    )
-
-    _fs_move_text_into_place(
-        spark,
-        _artifact_meta_path(uri),
-        json.dumps({"frames_version": 999, "stride": VIDEO_FRAME_STRIDE}),
-    )
+    # version bump → loud rejection
+    tamper(frames_version=999)
     with pytest.raises(ValueError, match="version"):
-        read_frames_artifact(spark, uri)
+        read_artifact(spark, VIDEO_FRAMES, uri)
 
 
 def test_ensure_writes_once_then_reuses(spark, sf_smoke, tmp_path, monkeypatch):
-    """ensure_frames_artifact: first call writes (no sidecar yet), second
-    call reuses the SAME files — the droprate/incremental-persisted
-    ensure convention applied to media."""
+    """ensure_artifact: first call writes (no sidecar yet), second call
+    reuses the SAME files — the droprate/incremental-persisted ensure
+    convention applied to media."""
     import glob
     import os
 
-    import duckdb_parquet_parser_spark.operators.staged_r17_video as s17
-
-    uri_dir = str(tmp_path / "vframes_ensure")
-    monkeypatch.setattr(
-        s17, "frames_artifact_path", lambda sf_dir: uri_dir
-    )
-    got1 = s17.ensure_frames_artifact(spark, sf_smoke).collect()
-    files1 = sorted(glob.glob(os.path.join(uri_dir, "*.parquet")))
-    got2 = s17.ensure_frames_artifact(spark, sf_smoke).collect()
-    files2 = sorted(glob.glob(os.path.join(uri_dir, "*.parquet")))
+    monkeypatch.setenv(ARTIFACT_ROOT_ENV, str(tmp_path))
+    got1 = ensure_artifact(spark, VIDEO_FRAMES, sf_smoke).collect()
+    pattern = os.path.join(tmp_path, VIDEO_FRAMES.prefix, "*", "*.parquet")
+    files1 = sorted(glob.glob(pattern))
+    got2 = ensure_artifact(spark, VIDEO_FRAMES, sf_smoke).collect()
+    files2 = sorted(glob.glob(pattern))
     assert files1 and files1 == files2
     assert sorted(map(tuple, got1)) == sorted(map(tuple, got2))
 
@@ -90,16 +90,10 @@ def test_neardup_via_artifact_matches_live_decode(spark, sf_smoke, tmp_path, mon
         q_ns_mm_video_dedup_cluster,
     )
     from duckdb_parquet_parser_spark.operators.multimodal_synth import (
-        build_video_table,
         q_ns_mm_video_neardup,
     )
-    import duckdb_parquet_parser_spark.operators.staged_r17_video as s17
 
-    monkeypatch.setattr(
-        s17,
-        "frames_artifact_path",
-        lambda sf_dir: str(tmp_path / "vframes_q"),
-    )
+    monkeypatch.setenv(ARTIFACT_ROOT_ENV, str(tmp_path))
     live = video_neardup_pairs(build_video_table(spark, sf_smoke)).collect()
     via_artifact = q_ns_mm_video_neardup(spark, sf_smoke).collect()
     assert sorted(map(tuple, via_artifact)) == sorted(map(tuple, live))
