@@ -20,13 +20,12 @@ def collect_queries() -> tuple[dict[str, QueryFn], dict[str, str]]:
         dedup,
         embed_cluster,
         filters,
+        gif_media,
         media_landing,
         multimodal,
         multimodal_dedup,
         multimodal_synth,
         ngram_stats,
-        pending_r15,
-        pending_r16,
         png_media,
         positional,
         relational,
@@ -50,8 +49,7 @@ def collect_queries() -> tuple[dict[str, QueryFn], dict[str, str]]:
     oracles: dict[str, str] = {}
     for mod in (
         curation,
-        pending_r15,
-        pending_r16,
+        gif_media,
         png_media,
         embed_cluster,
         multimodal_dedup,
@@ -113,16 +111,13 @@ def collect_queries() -> tuple[dict[str, QueryFn], dict[str, str]]:
 # the freed slot funds an eighth registration);
 # (3) EIGHT registrations from the staged backlog, the COVERAGE r17
 # slate merged with VERDICT r16 #5's priority order:
-# ns_semdedup_prune + ns_cc_incremental (pending_r16 — the judge's
+# ns_semdedup_prune + ns_cc_incremental (the judge's
 # top-100 TB-leverage pair), ns_winnow_fingerprint + ns_winnow_pairs
 # (the winnowing pair, the judge's next pick), ns_hll_set_algebra +
-# ns_hll_incremental, ns_curation_lineage (the curate_epoch capstone),
+# ns_hll_incremental, ns_curation_lineage (the curation capstone),
 # and ns_mm_gif_features (VERDICT #7: a certified query on a
-# compressed codec). The BPE trio + ns_epoch_shard /
-# ns_weighted_sample / ns_span_scrub / ns_embed_rp_project /
-# ns_mixture_temperature / ns_embed_curation_lineage /
-# ns_bpe_pair_counts queue for r18+ at <= +2/round per the cadence-debt
-# bound.
+# compressed codec). The rest of the staged backlog was later deleted
+# rather than registered.
 # 41 + 1 + 8 = 50; the window is exactly full.
 #
 # Re-certification rule (refined round 10, unchanged): queries whose

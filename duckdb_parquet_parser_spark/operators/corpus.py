@@ -16,6 +16,11 @@ Scale notes:
   ordering anywhere.
 - ``ns_mixture_weights`` / ``ns_doclen_histogram``: single hash aggregations
   over (lang, source) / bucketed length — map-side partials, tiny outputs.
+- Sketches: HLL distinct counts (``ns_approx_distinct_hll``), their set
+  algebra across sources (``ns_hll_set_algebra``) and incremental
+  maintenance over a persisted register artifact (``ns_hll_incremental``),
+  count-min heavy hitters and a histogram quantile sketch — every sketch
+  is constant-size state built from map-side partials.
 """
 
 from __future__ import annotations
@@ -24,7 +29,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..cache import ArtifactKind, ensure_artifact
 from ..catalog import load_table
+# The HLL corpus/batch split IS dedup's split (imported, not re-declared:
+# a drifting second 10/7 pair would silently desync the two incremental
+# pipelines' notion of "the new batch")
+from .dedup import INCR_MOD as HLLI_MOD
+from .dedup import INCR_REM as HLLI_REM
 from .positional import file_order_running_total
 
 VOCAB_TOP_K = 100
@@ -755,3 +766,335 @@ ORACLES["ns_approx_distinct_hll"] = f"""
            round(({_HLL_FINAL_SQL} - n_exact) / n_exact, 4) AS rel_error
     FROM s JOIN ex USING (lang)
 """
+
+
+# ---------------------------------------------------------------------------
+# ns_hll_set_algebra
+# ---------------------------------------------------------------------------
+
+
+def q_ns_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sketch ALGEBRA over the per-source vocabularies: HLL registers
+    merge by register-wise MAX, so the union cardinality of two sources
+    costs one max over 2×64 rows — no data re-scan — and intersection
+    follows by inclusion-exclusion (est_a + est_b − est_union). This is
+    the property that makes sketches the 100 TB answer: per-partition
+    sketches combine associatively (map-side partials all the way up),
+    and CROSS-DATASET set questions (\"how much vocabulary do sources
+    share?\") are answered from stored constant-size state without
+    touching the data again. Exact baselines certify both estimates
+    (the CMS/HLL/quantile adjudication).
+
+    Determinism: registers are the certified ``ns_approx_distinct_hll``
+    machinery verbatim (shared, not copied); the final estimates are
+    doubles built from exact integers and INJECTED ln literals, so
+    est_a + est_b − est_union is bit-identical in both engines. The
+    pair×register join is a bounded BNLJ over literal-sized frames
+    (≤ #sources² × 64 rows — the quantile-sketch precedent).
+
+    Defined edge: a source pair whose EXACT intersection is empty has
+    no row in the per-pair intersection aggregate and therefore no
+    output row (inner join, identical on both sides) — the query
+    reports the algebra where there is overlap to estimate; an
+    all-pairs report would LEFT-join and zero-fill instead."""
+    df = load_table(spark, sf_dir, "documents")
+    words = df.filter(F.col("text").isNotNull()).select(
+        "source", F.explode(F.split("text", " ")).alias("word")
+    )
+    regs = _hll_source_registers(words)
+
+    scale = 2**HLL_RHO_CAP
+
+    def est_from(grouped):
+        return grouped.agg(
+            (
+                F.sum(
+                    F.pow(F.lit(2.0), HLL_RHO_CAP - F.col("mr")).cast("long")
+                )
+                + (HLL_BUCKETS - F.count(F.lit(1))) * F.lit(scale)
+            ).alias("ssum"),
+            (HLL_BUCKETS - F.count(F.lit(1))).alias("v"),
+        ).withColumn("est", F.expr(_HLL_FINAL_SQL))
+
+    per_source = est_from(regs.groupBy("source")).select(
+        "source", F.col("est").alias("est_single")
+    )
+    srcs = words.select("source").distinct()
+    pairs = (
+        srcs.select(F.col("source").alias("src_a"))
+        .crossJoin(srcs.select(F.col("source").alias("src_b")))
+        .filter(F.col("src_a") < F.col("src_b"))
+    )
+    merged = (
+        pairs.join(
+            regs,
+            (F.col("source") == F.col("src_a"))
+            | (F.col("source") == F.col("src_b")),
+        )
+        .groupBy("src_a", "src_b", "bucket")
+        .agg(F.max("mr").alias("mr"))
+    )
+    union_est = est_from(merged.groupBy("src_a", "src_b")).select(
+        "src_a", "src_b", F.col("est").alias("est_union")
+    )
+    dw = words.distinct()
+    exact_union = (
+        pairs.join(
+            dw,
+            (F.col("source") == F.col("src_a"))
+            | (F.col("source") == F.col("src_b")),
+        )
+        .groupBy("src_a", "src_b")
+        .agg(F.countDistinct("word").alias("n_exact_union"))
+    )
+    wa = dw.select(F.col("source").alias("src_a"), "word")
+    wb = dw.select(F.col("source").alias("src_b"), "word")
+    exact_int = (
+        wa.join(wb, "word")
+        .filter(F.col("src_a") < F.col("src_b"))
+        .groupBy("src_a", "src_b")
+        .agg(F.count(F.lit(1)).alias("n_exact_intersect"))
+    )
+    ea = per_source.select(
+        F.col("source").alias("src_a"), F.col("est_single").alias("est_a")
+    )
+    eb = per_source.select(
+        F.col("source").alias("src_b"), F.col("est_single").alias("est_b")
+    )
+    return (
+        union_est.join(exact_union, ["src_a", "src_b"])
+        .join(exact_int, ["src_a", "src_b"])
+        .join(ea, "src_a")
+        .join(eb, "src_b")
+        .select(
+            "src_a",
+            "src_b",
+            "n_exact_union",
+            F.round("est_union", 2).alias("hll_union"),
+            "n_exact_intersect",
+            F.round(
+                F.col("est_a") + F.col("est_b") - F.col("est_union"), 2
+            ).alias("hll_intersect"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# ns_hll_incremental — persisted mergeable sketch state
+# ---------------------------------------------------------------------------
+
+
+def _hll_source_registers(words: DataFrame) -> DataFrame:
+    """(source, bucket, mr) HLL registers — the certified
+    ns_approx_distinct_hll machinery keyed by source."""
+    return (
+        words.select("source", F.md5("word").alias("hx"))
+        .select(
+            "source",
+            F.expr(_HLL_BUCKET_SQL).alias("bucket"),
+            F.expr(_HLL_RHO_SQL).alias("rho"),
+        )
+        .groupBy("source", "bucket")
+        .agg(F.max("rho").alias("mr"))
+    )
+
+
+def _hll_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, word) over the non-null documents."""
+    docs = load_table(spark, sf_dir, "documents")
+    return docs.filter(F.col("text").isNotNull()).select(
+        "doc_id", "source", F.explode(F.split("text", " ")).alias("word")
+    )
+
+
+def _hll_corpus_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _hll_source_registers(
+        _hll_words(spark, sf_dir).filter(F.col("doc_id") % HLLI_MOD != HLLI_REM)
+    )
+
+
+#: The corpus slice's per-source HLL registers. The corpus/batch split is
+#: part of the artifact's meaning: registers sketched under another split
+#: do NOT cover this run's corpus slice. Column TYPES are checked too:
+#: unionByName would coerce a string ``mr`` and turn the register merge
+#: into a silent lexicographic max.
+HLL_REGISTERS = ArtifactKind(
+    name="HLL",
+    prefix="sg_hll",
+    columns={"source": "string", "bucket": "int", "mr": "int"},
+    params={
+        "hll_version": 1,
+        "buckets": HLL_BUCKETS,
+        "rho_cap": HLL_RHO_CAP,
+        "split_mod": HLLI_MOD,
+        "split_rem": HLLI_REM,
+    },
+    build=_hll_corpus_registers,
+)
+
+
+def q_ns_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """INCREMENTAL sketch-state maintenance, the production pattern the
+    sketch family exists for at 100 TB: run N persists the corpus's
+    per-source HLL registers as a versioned parquet artifact (sidecar
+    carries format version + sketch params — the
+    ``ns_dedup_incremental_persisted`` contract); run N+1 hashes ONLY
+    the new ~10% batch and MERGES its registers into the stored ones by
+    register-wise max. Because max is associative+commutative, the
+    merged state is EXACTLY the from-scratch state — not approximately:
+    the output's ``reg_fp`` column fingerprints the merged register
+    table, and the oracle computes its fingerprint from scratch over
+    the full corpus, so the hash comparison certifies
+    merge ≡ recompute bit-for-bit (the estimate column then inherits
+    the certified single-table HLL adjudication).
+
+    If no artifact exists for this exact table content, the corpus
+    slice is sketched and persisted first (that write IS the prior
+    run); on re-run only the batch is hashed. Scale: the artifact is
+    ≤ #sources × 64 rows regardless of corpus size — incremental
+    statistics cost O(batch) + O(state), never O(corpus)."""
+    stored = ensure_artifact(spark, HLL_REGISTERS, sf_dir)
+    words = _hll_words(spark, sf_dir)
+    batch_regs = _hll_source_registers(
+        words.filter(F.col("doc_id") % HLLI_MOD == HLLI_REM)
+    )
+    merged = (
+        stored.unionByName(batch_regs)
+        .groupBy("source", "bucket")
+        .agg(F.max("mr").alias("mr"))
+    )
+    scale = 2**HLL_RHO_CAP
+    per_src = merged.groupBy("source").agg(
+        (
+            F.sum(
+                F.pow(F.lit(2.0), HLL_RHO_CAP - F.col("mr")).cast("long")
+            )
+            + (HLL_BUCKETS - F.count(F.lit(1))) * F.lit(scale)
+        ).alias("ssum"),
+        (HLL_BUCKETS - F.count(F.lit(1))).alias("v"),
+        F.md5(
+            F.concat_ws(
+                ",",
+                F.sort_array(
+                    F.collect_list(F.concat_ws(":", "bucket", "mr"))
+                ),
+            )
+        ).alias("reg_fp"),
+    )
+    exact = words.groupBy("source").agg(
+        F.countDistinct("word").alias("n_exact")
+    )
+    return (
+        per_src.join(exact, "source")
+        .select(
+            "source",
+            "n_exact",
+            "reg_fp",
+            F.round(F.expr(_HLL_FINAL_SQL), 2).alias("hll_estimate"),
+        )
+    )
+
+
+def _hll_incremental_oracle() -> str:
+    """From-scratch registers over the FULL corpus — the oracle never
+    sees the artifact; fingerprint equality IS the merge≡recompute
+    certification."""
+    scale = 2**HLL_RHO_CAP
+    return f"""
+        WITH words AS (
+            SELECT source, unnest(string_split(text, ' ')) AS word
+            FROM documents WHERE text IS NOT NULL
+        ),
+        h AS (SELECT source, md5(word) AS hx FROM words),
+        reg AS (
+            SELECT source, {_HLL_BUCKET_SQL} AS bucket,
+                   {_HLL_RHO_SQL} AS rho
+            FROM h
+        ),
+        m AS (
+            SELECT source, bucket, max(rho) AS mr FROM reg GROUP BY 1, 2
+        ),
+        s AS (
+            SELECT source,
+                   sum(CAST(pow(2, {HLL_RHO_CAP} - mr) AS BIGINT))
+                   + ({HLL_BUCKETS} - count(*)) * {scale} AS ssum,
+                   {HLL_BUCKETS} - count(*) AS v,
+                   md5(array_to_string(list_sort(list(
+                       CAST(bucket AS VARCHAR) || ':' ||
+                       CAST(mr AS VARCHAR))), ',')) AS reg_fp
+            FROM m GROUP BY source
+        ),
+        ex AS (
+            SELECT source, CAST(count(DISTINCT word) AS BIGINT) AS n_exact
+            FROM words GROUP BY source
+        )
+        SELECT s.source, ex.n_exact, s.reg_fp,
+               round({_HLL_FINAL_SQL}, 2) AS hll_estimate
+        FROM s JOIN ex USING (source)
+    """
+
+
+def _hll_algebra_oracle() -> str:
+    scale = 2**HLL_RHO_CAP
+    ssum_v = (
+        f"sum(CAST(pow(2, {HLL_RHO_CAP} - mr) AS BIGINT))"
+        f" + ({HLL_BUCKETS} - count(*)) * {scale} AS ssum,"
+        f" {HLL_BUCKETS} - count(*) AS v"
+    )
+    return f"""
+        WITH words AS (
+            SELECT source, unnest(string_split(text, ' ')) AS word
+            FROM documents WHERE text IS NOT NULL
+        ),
+        h AS (SELECT source, md5(word) AS hx FROM words),
+        reg AS (
+            SELECT source, {_HLL_BUCKET_SQL} AS bucket, {_HLL_RHO_SQL} AS rho
+            FROM h
+        ),
+        m AS (
+            SELECT source, bucket, max(rho) AS mr FROM reg GROUP BY 1, 2
+        ),
+        srcs AS (SELECT DISTINCT source FROM words),
+        pairs AS (
+            SELECT a.source AS src_a, b.source AS src_b
+            FROM srcs a, srcs b WHERE a.source < b.source
+        ),
+        s1 AS (SELECT source, {ssum_v} FROM m GROUP BY source),
+        e1 AS (SELECT source, {_HLL_FINAL_SQL} AS est FROM s1),
+        mm AS (
+            SELECT src_a, src_b, bucket, max(mr) AS mr
+            FROM pairs JOIN m ON source = src_a OR source = src_b
+            GROUP BY 1, 2, 3
+        ),
+        su AS (SELECT src_a, src_b, {ssum_v} FROM mm GROUP BY 1, 2),
+        eu AS (SELECT src_a, src_b, {_HLL_FINAL_SQL} AS est_union FROM su),
+        dw AS (SELECT DISTINCT source, word FROM words),
+        xu AS (
+            SELECT src_a, src_b,
+                   CAST(count(DISTINCT word) AS BIGINT) AS n_exact_union
+            FROM pairs JOIN dw ON source = src_a OR source = src_b
+            GROUP BY 1, 2
+        ),
+        xi AS (
+            SELECT a.source AS src_a, b.source AS src_b,
+                   CAST(count(*) AS BIGINT) AS n_exact_intersect
+            FROM dw a JOIN dw b
+              ON a.word = b.word AND a.source < b.source
+            GROUP BY 1, 2
+        )
+        SELECT eu.src_a, eu.src_b, xu.n_exact_union,
+               round(est_union, 2) AS hll_union,
+               xi.n_exact_intersect,
+               round(ea.est + eb.est - est_union, 2) AS hll_intersect
+        FROM eu
+        JOIN xu USING (src_a, src_b)
+        JOIN xi USING (src_a, src_b)
+        JOIN e1 ea ON ea.source = eu.src_a
+        JOIN e1 eb ON eb.source = eu.src_b
+    """
+
+
+QUERIES["ns_hll_set_algebra"] = q_ns_hll_set_algebra
+QUERIES["ns_hll_incremental"] = q_ns_hll_incremental
+ORACLES["ns_hll_set_algebra"] = _hll_algebra_oracle()
+ORACLES["ns_hll_incremental"] = _hll_incremental_oracle()

@@ -19,6 +19,9 @@ Scale design (100 TB):
   into a shuffle+groupBy (54× row inflation at avg 54 words/doc).
 - SimHash: per-row bit computation from one ``transform(ws, md5)`` pass —
   32 ``filter``+``size`` counts over the md5 array, no explode/groupBy.
+- Winnowing (bottom): MOSS-style per-doc fingerprints — one doc-keyed
+  window exchange — and the overlap-pair miner over them (one equi-join
+  on the fingerprint, one pair aggregation).
 """
 
 from __future__ import annotations
@@ -1545,3 +1548,137 @@ ORACLES["ns_dedup_cluster_canonical"] = (
     ) WHERE rn = 1
 """
 )
+
+
+# ---------------------------------------------------------------------------
+# ns_winnow_fingerprint / ns_winnow_pairs
+# ---------------------------------------------------------------------------
+
+WINNOW_K = 3  # gram size under each fingerprint
+WINNOW_W = 4  # winnowing window (consecutive grams per window)
+WINNOW_MIN_SHARED = 5  # shared fingerprints ⇒ overlap pair
+
+
+def q_ns_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc winnowing fingerprints, as distinct (doc_id, fp) rows —
+    the MOSS-style overlap-detection index (Schleimer/Wilkerson/Aiken,
+    public): gram hash = first 48 md5 bits of the 3-gram string;
+    fingerprint = the min hash of each ``WINNOW_W``-gram window.
+    Set-of-values semantics sidestep the paper's rightmost-tie rule
+    (value ties select the same VALUE either way), keeping both engines
+    trivially aligned; density ~1/W of raw gram hashing with the
+    paper's guarantee intact: any shared token run of ≥ WINNOW_K +
+    WINNOW_W - 1 tokens shares ≥1 fingerprint.
+
+    Plan note — why a WINDOW and not per-row nested arrays: the first
+    build computed grams and window minima as nested higher-order
+    expressions (transform-inside-transform over element_at); codegen
+    does NOT common-subexpression the inner array, so every window
+    re-evaluated the whole gram chain — O(m²) md5 calls per doc, a
+    10-minute hang at sf0.1. The posexplode → sliding ``rowsBetween``
+    min is O(m), one hash exchange on doc_id (which the downstream
+    pair join re-uses as its own input anyway)."""
+    docs = scale_out(spark, load_table(spark, sf_dir, "documents"))
+    from .ngram_stats import _all_word_ngrams
+
+    occ = (
+        docs.filter(F.col("text").isNotNull())
+        .select(
+            "doc_id",
+            F.posexplode(
+                _all_word_ngrams(F.split("text", " "), WINNOW_K)
+            ).alias("gpos", "g"),
+        )
+        .withColumn(
+            "gh",
+            F.conv(F.substring(F.md5("g"), 1, 12), 16, 10).cast("long"),
+        )
+    )
+    wdoc = Window.partitionBy("doc_id")
+    wmin = (
+        Window.partitionBy("doc_id")
+        .orderBy("gpos")
+        .rowsBetween(0, WINNOW_W - 1)
+    )
+    return (
+        occ.withColumn("m", F.count(F.lit(1)).over(wdoc))
+        .withColumn("winmin", F.min("gh").over(wmin))
+        # window start positions only: j0 ∈ [0, m-W]; a short doc
+        # (m < W) keeps exactly its one clamped window at j0 = 0
+        .filter(
+            F.col("gpos")
+            <= F.greatest(F.col("m") - WINNOW_W, F.lit(0))
+        )
+        .select("doc_id", F.col("winmin").alias("fp"))
+        .distinct()
+    )
+
+
+def q_ns_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Overlap pairs: docs sharing ≥ WINNOW_MIN_SHARED winnowing
+    fingerprints — the cheap corpus-overlap miner the fingerprint index
+    exists for (the SimHash-pairs plan shape on winnowed minima: one
+    equi-join on fp, triangular dedup, one pair aggregation)."""
+    fps = q_ns_winnow_fingerprint(spark, sf_dir)
+    a = fps.select(F.col("doc_id").alias("doc_a"), "fp")
+    b = fps.select(F.col("doc_id").alias("doc_b"), "fp")
+    return (
+        a.join(b, "fp")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("shared_fps"))
+        .filter(F.col("shared_fps") >= WINNOW_MIN_SHARED)
+    )
+
+
+QUERIES["ns_winnow_fingerprint"] = q_ns_winnow_fingerprint
+QUERIES["ns_winnow_pairs"] = q_ns_winnow_pairs
+
+# hex→int arithmetic over the first 12 md5 hex digits of the gram string
+# (the rollhash oracle convention: from_hex is BLOB, so no direct cast)
+_W_GHASH = " + ".join(
+    f"(strpos('0123456789abcdef', substr(md5(g), {d + 1}, 1)) - 1)"
+    f" * {16 ** (11 - d)}"
+    for d in range(12)
+)
+
+_WINNOW_FP_CTES = f"""
+    WITH t AS (
+        SELECT doc_id, string_split(text, ' ') AS ws
+        FROM documents WHERE text IS NOT NULL
+    ),
+    g AS (
+        SELECT doc_id,
+               list_transform(
+                   list_transform(range(1, len(ws) - {WINNOW_K - 2}), i ->
+                       {" || ' ' || ".join(f"ws[i + {k}]" for k in range(WINNOW_K))}
+                   ),
+                   g -> CAST({_W_GHASH} AS BIGINT)
+               ) AS grams
+        FROM t
+    ),
+    f AS (
+        SELECT doc_id,
+               CASE WHEN len(grams) = 0 THEN CAST([] AS BIGINT[]) ELSE
+                   list_distinct(list_transform(
+                       range(1, greatest(len(grams) - {WINNOW_W - 1}, 1) + 1),
+                       j -> list_min(grams[j:j+{WINNOW_W - 1}])
+                   ))
+               END AS fps
+        FROM g
+    ),
+    fp AS (SELECT doc_id, unnest(fps) AS fp FROM f)
+"""
+
+ORACLES["ns_winnow_fingerprint"] = f"""
+        {_WINNOW_FP_CTES}
+        SELECT doc_id, CAST(fp AS BIGINT) AS fp FROM fp
+    """
+ORACLES["ns_winnow_pairs"] = f"""
+        {_WINNOW_FP_CTES}
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(count(*) AS BIGINT) AS shared_fps
+        FROM fp a JOIN fp b ON a.fp = b.fp AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+        HAVING count(*) >= {WINNOW_MIN_SHARED}
+    """

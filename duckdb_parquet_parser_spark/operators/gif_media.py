@@ -1,9 +1,9 @@
 """A SECOND real compressed format through the codec plug seam: a
 pure-stdlib GIF87a decoder (LZW, implemented from the public GIF87a/
 GIF89a specification, Appendix F) registered via
-``media_codecs.register_codec`` and differentially tested as the
-STAGED query ``ns_mm_gif_features`` (pending_r15 tranche — the PNG
-query ``ns_mm_png_features`` is the certified in-window sibling).
+``media_codecs.register_codec`` and served as the registered query
+``ns_mm_gif_features`` (the PNG query ``ns_mm_png_features`` is its
+sibling).
 
 Why a second format: PNG proved the seam carries real compressed bytes
 (DEFLATE); GIF proves the claim generalizes to a different entropy

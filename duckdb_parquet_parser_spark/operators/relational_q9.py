@@ -1,10 +1,8 @@
-"""TPC-H completers Q6 / Q9 / Q12 / Q14 — registered round 14 from the
-round-13 staging tranche (``pending_r14.py``), closing the classic-shape
+"""TPC-H completers Q6 / Q9 / Q12 / Q14, closing the classic-shape
 sweep: with these four the engine covers TPC-H Q1–Q22 except the shapes
-the fixture schema cannot express (noted per query below). Built and
-differentially tested (two SFs + randomized NULL/dangling-key fixtures)
-every round since round 13; registration is the rename the staging
-discipline promises — zero new executable risk.
+the fixture schema cannot express (noted per query below). Each is
+differentially tested at two SFs and on randomized NULL/dangling-key
+fixtures.
 
 - ``rel_profit_q9`` — Q9's product-profit report: per (nation,
   order-year), the profit on parts matching a name filter, where profit
@@ -208,22 +206,12 @@ def q_rel_promo_share_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# rel_promo_share_q14 REGISTERED in round 15, exactly as the COVERAGE.md
-# round-15 window plan scheduled: it completes the TPC-H sweep the r14
-# drop order interrupted (it stepped back when the PNG IHDR fix took its
-# head slot), has been differentially tested at two SFs + randomized
-# NULL/dangling-key fixtures every round since round 13, and fills the
-# 50th head slot next to the 49 must-rotate r12 certifications. The
-# STAGED dicts below stay (empty) so pending_r14.py's imports — and the
-# staging pattern the next tranche reuses — keep working unchanged.
 QUERIES = {
     "rel_profit_q9": q_rel_profit_q9,
     "rel_filter_agg_q6": q_rel_filter_agg_q6,
     "rel_priority_mix_q12": q_rel_priority_mix_q12,
     "rel_promo_share_q14": q_rel_promo_share_q14,
 }
-
-QUERIES_STAGED: dict = {}
 
 ORACLES = {
     "rel_profit_q9": f"""
@@ -291,5 +279,3 @@ ORACLES = {
           AND l_shipdate < TIMESTAMP '{Q14_HI}'
     """,
 }
-
-ORACLES_STAGED: dict = {}

@@ -5,6 +5,8 @@
 - Sign-LSH (random hyperplane) bucketing: the scale path. Hyperplanes are
   derived deterministically from md5 so the DuckDB oracle reproduces them
   bit-for-bit; bucket code = 16 sign bits of hyperplane dot products.
+- SemDeDup prune (bottom): per k-means cluster, drop the most
+  prototypical quarter (one window over the cluster key).
 
 Scale design (100 TB):
 - Top-k: query set broadcast (small), candidates scanned once, per-query
@@ -874,3 +876,74 @@ ORACLES = {
         SELECT vec_id, cluster, round(cos, 6) AS cos FROM a2
     """,
 }
+
+
+# ---------------------------------------------------------------------------
+# ns_semdedup_prune — semantic pruning over the k-means clusters
+# ---------------------------------------------------------------------------
+
+SEMDEDUP_DROP_PCT = 25  # drop the most-prototypical quarter per cluster
+
+
+def q_ns_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semantic prune over the certified k-means clusters: per cluster,
+    rank by prototypicality (cos DESC, vec_id ASC) and drop the integer
+    ``n * PCT // 100`` head. The straggler math is integer on both
+    engines; cos is the certified round-6 value, so rank ties are
+    deterministic.
+
+    SemDeDup/prototype-style pruning (Abbas et al. 2023 "SemDeDup",
+    Sorscher et al. 2022 "Beyond neural scaling laws": within semantic
+    clusters, the most prototypical examples are the most redundant):
+    the ``ns_kmeans_embed`` assignment is reused, not re-derived, and
+    the harder tail of each cluster is kept. Scale shape: the k-means
+    assignment is the priced pipeline (two Lloyd rounds, K×DIM partial
+    aggs); the prune adds ONE window over the cluster key, which never
+    sees the vectors, only (vec_id, cluster, cos)."""
+    assigned = q_ns_kmeans_embed(spark, sf_dir)
+    w_rank = Window.partitionBy("cluster").orderBy(
+        F.desc("cos"), F.asc("vec_id")
+    )
+    w_all = Window.partitionBy("cluster")
+    ranked = assigned.select(
+        "vec_id",
+        "cluster",
+        "cos",
+        F.row_number().over(w_rank).alias("proto_rank"),
+        F.count(F.lit(1)).over(w_all).alias("n_cluster"),
+    )
+    # integer floor division, spelled to match the oracle's `//`
+    n_drop = F.floor(
+        (F.col("n_cluster") * SEMDEDUP_DROP_PCT) / F.lit(100)
+    ).cast("long")
+    return ranked.select(
+        "vec_id",
+        "cluster",
+        "cos",
+        "proto_rank",
+        n_drop.alias("n_drop"),
+        (F.col("proto_rank") > n_drop).alias("kept"),
+    )
+
+
+QUERIES["ns_semdedup_prune"] = q_ns_semdedup_prune
+# the certified k-means oracle verbatim as the base CTE — one derivation,
+# two consumers, zero drift
+ORACLES["ns_semdedup_prune"] = f"""
+        WITH base AS ({ORACLES["ns_kmeans_embed"]}),
+        ranked AS (
+            SELECT vec_id, cluster, cos,
+                   CAST(row_number() OVER (
+                       PARTITION BY cluster
+                       ORDER BY cos DESC, vec_id
+                   ) AS INT) AS proto_rank,
+                   count(*) OVER (PARTITION BY cluster) AS n_cluster
+            FROM base
+        )
+        SELECT vec_id, cluster, cos, proto_rank,
+               CAST(n_cluster * {SEMDEDUP_DROP_PCT} // 100 AS BIGINT)
+                   AS n_drop,
+               proto_rank > (n_cluster * {SEMDEDUP_DROP_PCT} // 100)
+                   AS kept
+        FROM ranked
+    """

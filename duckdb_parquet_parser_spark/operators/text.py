@@ -1,5 +1,7 @@
 """Text-analysis operators — north-star extension (SURVEY.md §2.5):
-language-ID heuristic, quality scoring, token counting, fingerprinting.
+language-ID heuristic, quality scoring, token counting, fingerprinting,
+benchmark decontamination (the exact n-gram join and its bloom-filter
+pre-filter).
 
 All pure built-in column expressions (split/regexp/aggregate) — zero
 Python UDFs, so the whole pipeline stays inside whole-stage codegen and
@@ -11,7 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, scale_out
+from .corpus import _hex_digit_sql
 
 STOPWORDS = ("the", "a", "of", "and", "in")
 TOKEN_REGEX = "[a-z0-9]+"  # BPE-ish lowercase word/number pieces
@@ -222,8 +225,6 @@ def q_ns_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst fuses the filters into the scan and the whole job is one
     narrow pass plus a single hash-groupBy shuffle. The oracle replays
     the identical composition in SQL."""
-    from ..catalog import scale_out
-
     df = scale_out(spark, load_table(spark, sf_dir, "documents"))
     curated = df.filter(
         (langid_pred() == "en")
@@ -277,8 +278,6 @@ def q_ns_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-row-expensive stage, and on one input split it serializes on
     one core (measured 3.7 s single-task vs ~0.4 s spread at sf0.1); a
     real corpus scan already arrives in thousands of splits."""
-    from ..catalog import scale_out
-
     df = scale_out(spark, load_table(spark, sf_dir, "documents"))
     ws = F.split("text", " ")
     grams = df.select(
@@ -619,3 +618,241 @@ ORACLES = {
         FROM base b JOIN maxes m ON b.doc_id = m.doc_id
     """,
 }
+
+
+# ---------------------------------------------------------------------------
+# ns_bloom_decontam — bloom-filter membership pre-filter for decontamination
+# ---------------------------------------------------------------------------
+# The eval set's word n-grams set K md5-derived bits in an M-bit filter;
+# every corpus n-gram probes it. A doc's bloom-hit count can only
+# OVERcount its exact hit count (no false negatives — the one-sided bound
+# the CMS row certifies for frequencies). The filter is CONSTANT-size
+# (M bits, broadcast to every executor) regardless of eval-set size, the
+# corpus side streams map-only through it, and only the small
+# bloom-positive remnant pays the exact verification join
+# (``ns_contamination``). M is deliberately NARROW (the CMS-width
+# discipline): at M = 8192 the fixture eval set fills ~0.35 of the filter,
+# so false positives actually occur and the ``false_pos`` column
+# certifies the estimator; size M ∝ eval grams / ln2 · bits-per-element
+# for real benchmarks. (M = 2048 measured SATURATED on the fixture — 46/70
+# gram hits against 3 real ones; see ``_bloom_pos_sql``.)
+
+BLOOM_M = 8192  # filter bits — deliberately narrow (note above)
+BLOOM_K = 3  # hash functions
+
+
+def _bloom_hx_sql(i: int, col: str = "g") -> str:
+    """Portable SQL (Spark + DuckDB) for bloom hash *i*'s md5 of a gram."""
+    return f"md5(concat('bf{i}:', {col}))"
+
+
+def _bloom_pos_sql(hcol: str) -> str:
+    """Portable SQL: first four md5 hex digits of ``hcol`` → 0..65535,
+    mod BLOOM_M — the CMS bucket convention, four digits because
+    M = 8192 needs 13 bits. M tuned on the fixture (BENCH_NOTES-style
+    measurement, not guessed): ~1.2k distinct eval grams at sf0.01 give
+    fill ≈ 0.35 and FPR ≈ 4% — ~1k real false positives over the ~26k
+    corpus probes exercise the ``false_pos`` column while the filter
+    still rejects >90% of clean grams (the usefulness the pre-filter
+    exists for)."""
+    assert BLOOM_M <= 16**4
+    acc = _hex_digit_sql(hcol, 1)
+    for i in (2, 3, 4):
+        acc = f"({acc} * 16 + {_hex_digit_sql(hcol, i)})"
+    return f"({acc} % {BLOOM_M})"
+
+
+def _bloom_tables(spark: SparkSession, sf_dir: str):
+    """The shared filter-construction frames (ONE definition — the
+    profile query and the gram-level prefilter must build the SAME
+    filter or the lossless-composition test compares different
+    objects): corpus+eval gram stream, distinct eval grams, the K hash
+    columns, the position array, and the distinct set-bit table."""
+    df = scale_out(spark, load_table(spark, sf_dir, "documents"))
+    ws = F.split("text", " ")
+    grams = df.filter(F.col("text").isNotNull()).select(
+        "doc_id", F.explode(_word_ngrams(ws, CONTAM_N)).alias("g")
+    )
+    eval_grams = (
+        grams.filter(F.col("doc_id") % EVAL_MOD == 0).select("g").distinct()
+    )
+    with_h = [
+        F.expr(_bloom_hx_sql(i)).alias(f"h{i}") for i in range(BLOOM_K)
+    ]
+    positions = F.array(
+        *[F.expr(_bloom_pos_sql(f"h{i}")) for i in range(BLOOM_K)]
+    )
+    bits = (
+        eval_grams.select("g", *with_h)
+        .select(F.explode(positions).alias("bit_pos"))
+        .distinct()
+    )
+    return grams, eval_grams, with_h, positions, bits
+
+
+def q_ns_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-corpus-doc bloom-filter decontamination profile: distinct
+    eval-set n-grams set ``BLOOM_K`` md5 bits each in an ``BLOOM_M``-bit
+    filter; every distinct corpus n-gram probes it. Output per doc:
+    distinct grams, bloom hits, exact hits (the truth the filter
+    approximates), and the false-positive overcount — bloom_hits ≥
+    exact_hits BY CONSTRUCTION (a present gram's bits are all set), the
+    one-sided bound tests assert.
+
+    Scale shape: the bit table is ≤ M rows (constant, broadcast); the
+    corpus side is ONE narrow n-gram pass + a K-way posexplode against
+    the broadcast bits + one (doc, gram) partial-agg and one doc-level
+    agg — corpus grams never shuffle to a join, exactly how a 100 TB
+    decontamination pre-filter must behave. The exact-hit column joins
+    against the (small, broadcast) eval gram set only to CERTIFY the
+    filter; production keeps just the bloom verdict and routes the
+    positive remnant to ``ns_contamination``."""
+    grams, eval_grams, with_h, positions, bits = _bloom_tables(
+        spark, sf_dir
+    )
+    corpus = grams.filter(F.col("doc_id") % EVAL_MOD != 0)
+    # exact_hit attaches via a BROADCAST left join (eval grams are tiny)
+    # BEFORE the position explode, so it rides through the one
+    # (doc, gram) aggregation for free — a second corpus-sized
+    # (doc, gram) join to re-attach it would shuffle the gram table
+    # twice for nothing
+    base = corpus.join(
+        F.broadcast(eval_grams.withColumn("_ev", F.lit(1))), "g", "left"
+    ).select(
+        "doc_id", "g", F.col("_ev").isNotNull().alias("exact_hit"), *with_h
+    )
+    probe = base.select(
+        "doc_id",
+        "g",
+        "exact_hit",
+        F.explode(positions).alias("bit_pos"),
+    )
+    # a gram bloom-hits iff ALL K of its positions are set bits; the
+    # bit-table lookup is a broadcast LEFT join so missing positions
+    # count 0 instead of dropping the gram
+    marked = probe.join(
+        F.broadcast(bits.withColumn("_set", F.lit(1))), "bit_pos", "left"
+    )
+    per_gram = marked.groupBy("doc_id", "g", "exact_hit").agg(
+        F.sum(
+            F.when(F.col("_set").isNotNull(), 1).otherwise(0)
+        ).alias("n_set")
+    )
+    return (
+        per_gram.groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_grams"),
+            F.sum(
+                (F.col("n_set") == BLOOM_K).cast("long")
+            ).alias("bloom_hits"),
+            F.sum(F.col("exact_hit").cast("long")).alias("exact_hits"),
+        )
+        .withColumn(
+            "false_pos", F.col("bloom_hits") - F.col("exact_hits")
+        )
+    )
+
+
+def bloom_surviving_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """GRAM-level bloom prefilter: the (doc_id, g) corpus pairs whose
+    gram bloom-hits. Because membership has no false negatives, every
+    gram actually shared with the eval set survives — so downstream
+    exact joins over the survivors are LOSSLESS while only ~9% of the
+    gram stream (fixture measurement; FPR + true hits) reaches them.
+    Granularity matters: DOC-level positivity is useless here (a 50-gram
+    doc is positive if ANY gram hits ⇒ ~90% of docs), the per-gram
+    remnant is the thing the filter shrinks."""
+    grams, _eval_grams, with_h, positions, bits = _bloom_tables(
+        spark, sf_dir
+    )
+    probe = (
+        grams.filter(F.col("doc_id") % EVAL_MOD != 0)
+        .select("doc_id", "g", *with_h)
+        .select("doc_id", "g", F.explode(positions).alias("bit_pos"))
+    )
+    return (
+        probe.join(F.broadcast(bits), "bit_pos")
+        .groupBy("doc_id", "g")
+        .agg(F.count(F.lit(1)).alias("n_set"))
+        .filter(F.col("n_set") == BLOOM_K)
+        .select("doc_id", "g")
+    )
+
+
+def contamination_with_bloom_prefilter(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The production composition the filter exists for: run the EXACT
+    ``ns_contamination`` join over only the bloom-surviving grams.
+    Output-equal to ``q_ns_contamination`` (the join shape below mirrors
+    it line for line; the equality is pinned by a test). At 100 TB: the
+    corpus gram stream passes one broadcast probe map-side, and only the
+    surviving few percent enter the exact broadcast join + aggregation."""
+    survivors = bloom_surviving_grams(spark, sf_dir)
+    df = scale_out(spark, load_table(spark, sf_dir, "documents"))
+    ws = F.split("text", " ")
+    eval_grams = (
+        df.filter(
+            F.col("text").isNotNull() & (F.col("doc_id") % EVAL_MOD == 0)
+        )
+        .select(
+            F.col("doc_id").alias("eval_doc_id"),
+            F.explode(_word_ngrams(ws, CONTAM_N)).alias("g"),
+        )
+    )
+    return (
+        survivors.join(F.broadcast(eval_grams), "g")
+        .groupBy("doc_id", "eval_doc_id")
+        .agg(F.count(F.lit(1)).alias("shared_ngrams"))
+        .filter(F.col("shared_ngrams") >= CONTAM_MIN_SHARED)
+    )
+
+
+
+_BLOOM_POS = [_bloom_pos_sql(f"h{i}") for i in range(BLOOM_K)]
+
+QUERIES["ns_bloom_decontam"] = q_ns_bloom_decontam
+ORACLES["ns_bloom_decontam"] = f"""
+        WITH t AS (
+            SELECT doc_id, string_split(text, ' ') AS ws
+            FROM documents WHERE text IS NOT NULL
+        ),
+        grams AS (
+            SELECT DISTINCT doc_id, {_CONTAM_GRAM_EXPR} AS g
+            FROM t, (SELECT unnest(range(1, 4000)) AS i)
+            WHERE i + {CONTAM_N - 1} <= len(ws)
+        ),
+        eg AS (
+            SELECT DISTINCT g FROM grams WHERE doc_id % {EVAL_MOD} = 0
+        ),
+        eh AS (
+            SELECT g, {", ".join(f"md5(concat('bf{i}:', g)) AS h{i}" for i in range(BLOOM_K))}
+            FROM eg
+        ),
+        bits AS (
+            {" UNION ".join(f"SELECT {p} AS bit_pos FROM eh" for p in _BLOOM_POS)}
+        ),
+        corpus AS (
+            SELECT doc_id, g,
+                   {", ".join(f"md5(concat('bf{i}:', g)) AS h{i}" for i in range(BLOOM_K))}
+            FROM grams WHERE doc_id % {EVAL_MOD} <> 0
+        ),
+        verdicts AS (
+            SELECT doc_id, g,
+                   ({" AND ".join(f"{p} IN (SELECT bit_pos FROM bits)" for p in _BLOOM_POS)})
+                       AS bloom_hit,
+                   g IN (SELECT g FROM eg) AS exact_hit
+            FROM corpus
+        )
+        SELECT doc_id,
+               CAST(count(*) AS BIGINT) AS n_grams,
+               CAST(sum(CASE WHEN bloom_hit THEN 1 ELSE 0 END) AS BIGINT)
+                   AS bloom_hits,
+               CAST(sum(CASE WHEN exact_hit THEN 1 ELSE 0 END) AS BIGINT)
+                   AS exact_hits,
+               CAST(sum(CASE WHEN bloom_hit THEN 1 ELSE 0 END)
+                    - sum(CASE WHEN exact_hit THEN 1 ELSE 0 END) AS BIGINT)
+                   AS false_pos
+        FROM verdicts
+        GROUP BY doc_id
+    """

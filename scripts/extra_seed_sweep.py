@@ -77,14 +77,15 @@ def main() -> int:
         ("multimodal", mm.test_multimodal_queries_match_oracles_on_random_fixtures),
     ]
 
-    # The PENDING tranches sweep too (added late round 13): the staged
-    # queries' randomized differentials otherwise only ever see their
-    # pinned pytest seeds, and the sweeps are where the real finds come
-    # from (seeds 5003, 22, 932, 965...). Same test bodies pytest runs.
-    import test_pending_r14 as p14
-    import test_pending_r15 as p15
+    # The per-domain randomized differentials sweep too: otherwise they
+    # only ever see their pinned pytest seeds, and the sweeps are where
+    # the real finds come from (seeds 5003, 22, 932, 965...). Same test
+    # bodies pytest runs.
+    import test_curation as cur
+    import test_r16_fixes as r16f
     import test_randomized_fleet as fleet
     import test_relational_q9 as rq9
+    import test_semdedup as sem
 
     families += [
         ("tpch-completers", rq9.test_tpch_completers_on_random_fixtures),
@@ -92,32 +93,11 @@ def main() -> int:
         # scale — 100+ randomized parquet files per seed vs DuckDB's
         # parquet_metadata() glob (VERDICT r13 #7)
         ("fleet", fleet.test_fleet_audit_matches_parquet_metadata_on_many_files),
-        ("pending-docs", p14.test_pending_token_mixes_on_random_docs),
-        ("pending15-docs", p15.test_pending_r15_doc_queries_on_random_docs),
-        ("pending15-emb", p15.test_pending_r15_projection_on_random_embeddings),
-    ]
-
-    # round-14 additions: the r16 staged tranche (weighted sample over
-    # the docs family, semantic prune over the embeddings family)
-    import test_pending_r16 as p16
-
-    families += [
-        ("pending16-docs", p16.test_pending_r16_weighted_sample_on_random_docs),
-        ("pending16-emb", p16.test_pending_r16_semdedup_on_random_embeddings),
-        ("pending16-cc", p16.test_pending_r16_cc_incremental_on_random_docs),
-        ("pending16-lineage", p16.test_pending_r16_embed_lineage_on_random_embeddings),
-        ("pending16-bpe", p16.test_pending_r16_bpe_on_random_docs),
-    ]
-
-    # round-15 additions: the BPE merge-loop trainer (staged r17) vs
-    # its pure-Python reference trainer, and the staged r16 fixes
-    # (conditional-hint minhash verify, persisted-label droprate)
-    # against the certified rows' oracles — all over random unicode docs
-    import test_bpe_trainer as bpe
-    import test_r16_fixes as r16f
-
-    families += [
-        ("bpe-trainer", bpe.test_bpe_trainer_on_random_docs),
+        ("sketch-curation-docs", docs.test_sketch_and_curation_queries_on_random_docs),
+        ("semdedup-emb", sem.test_semdedup_on_random_embeddings),
+        ("cc-incremental", cur.test_cc_incremental_on_random_docs),
+        # the conditional-hint minhash verify and the persisted-label
+        # droprate against the certified rows' oracles
         ("r16-fixes", r16f.test_r16_fixes_on_random_docs),
     ]
 

@@ -31,7 +31,7 @@ from duckdb_parquet_parser_spark.operators.multimodal_synth import (
     VIDEO_FRAMES,
     q_ns_mm_video_neardup,
 )
-from duckdb_parquet_parser_spark.operators.pending_r15 import (
+from duckdb_parquet_parser_spark.operators.corpus import (
     HLL_REGISTERS,
     q_ns_hll_incremental,
 )

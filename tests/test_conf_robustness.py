@@ -1,5 +1,4 @@
-"""Config-robustness differential axis (new in round 16): certified
-query results must be INVARIANT to the runtime knobs a deployment
+"""Config-robustness differential axis: certified query results must be INVARIANT to the runtime knobs a deployment
 actually turns — AQE off, broadcast joins disabled, and a skewed
 shuffle-partition count.
 
@@ -35,12 +34,15 @@ the q5 broadcast snowflake (strategy flips wholesale with the
 threshold), rollup grouping sets (partial-agg reshaping), sequence
 packing and the positional stream (the two explicit prefix-sum-over-
 partitions designs — their correctness CLAIM is partition invariance),
-bloom decontamination (this round's registration), and TF-IDF top-k
-(rounded-grid ranking with deterministic tiebreak — the documented
-defense against plan-order float drift is exactly what this axis
-stresses). All outputs are integer/decimal/rounded by design, so rows
-compare exactly; nondeterministic-under-reordering output would be a
-finding, not flakiness.
+bloom decontamination, TF-IDF top-k (rounded-grid ranking with
+deterministic tiebreak — the documented defense against plan-order
+float drift is exactly what this axis stresses), the incremental
+duplicate clusters (their convergence ROUND COUNT may vary with
+partitioning, their labels must not) and the curation lineage (the
+composition of quality gate, bloom prefilter, span scrub, dedup window
+and token-budget running sum). All outputs are integer/decimal/rounded
+by design, so rows compare exactly; nondeterministic-under-reordering
+output would be a finding, not flakiness.
 """
 
 from __future__ import annotations
@@ -56,20 +58,6 @@ QUERIES = [
     "r10_positional_stream",
     "ns_bloom_decontam",
     "ns_tfidf_topterms",
-]
-
-#: The r17 registration slate's partition-sensitive rows, certified
-#: conf-invariant BEFORE they spend a window slot: ns_epoch_shard's
-#: entire claim is a deterministic global shuffle (a hash exchange
-#: whose OUTPUT must not depend on the exchange's partition count);
-#: ns_weighted_sample's is bit-identical u48/w priority keys with the
-#: K smallest winning regardless of which task sees them;
-#: ns_cc_incremental's convergence ROUND COUNT may vary with
-#: partitioning but its labels must not; ns_curation_lineage is the
-#: capstone composition all three feed.
-STAGED_QUERIES = [
-    "ns_epoch_shard",
-    "ns_weighted_sample",
     "ns_cc_incremental",
     "ns_curation_lineage",
 ]
@@ -81,31 +69,17 @@ PERTURBATIONS = {
 }
 
 
-def _all_queries():
-    """Registered surface plus the staged r17 slate (the pending dicts
-    are not driver-registered yet — resolved directly)."""
-    from duckdb_parquet_parser_spark.operators import collect_queries
-    from duckdb_parquet_parser_spark.operators.pending_r15 import (
-        QUERIES_PENDING_R15,
-    )
-    from duckdb_parquet_parser_spark.operators.pending_r16 import (
-        QUERIES_PENDING_R16,
-    )
-
-    queries, _ = collect_queries()
-    return {**QUERIES_PENDING_R15, **QUERIES_PENDING_R16, **queries}
-
-
 def _rows(spark, sf_dir, name):
     """Run query ``name`` fresh (memos cleared so a frame materialized
     under a PREVIOUS config can never answer for this one) and return
     its rows as a sorted list of tuples."""
+    from duckdb_parquet_parser_spark.operators import collect_queries
     from duckdb_parquet_parser_spark.operators.dedup import (
         clear_simhash_memos,
     )
 
     clear_simhash_memos()
-    df = _all_queries()[name](spark, sf_dir)
+    df = collect_queries()[0][name](spark, sf_dir)
     # NULL-safe canonical order (tuples mixing None with str/int don't
     # compare); equality between the sorted lists stays exact-valued
     return sorted(
@@ -121,7 +95,7 @@ def baselines(spark, sf_smoke):
     which would silently re-plan under the perturbed config)."""
     return {
         name: _rows(spark, sf_smoke, name)
-        for name in QUERIES + STAGED_QUERIES
+        for name in QUERIES
     }
 
 
@@ -132,7 +106,7 @@ def test_results_invariant_under_conf(spark, sf_smoke, baselines, pert):
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        for name in QUERIES + STAGED_QUERIES:
+        for name in QUERIES:
             got = _rows(spark, sf_smoke, name)
             assert got == baselines[name], (
                 f"{name} changed values under {pert}: "

@@ -168,3 +168,48 @@ def test_cert_ledger_forecast_names_parked_stale_only():
         if n not in head and certs.get(n, (0, "-"))[0] <= latest - 1
     ]
     assert forecast == expected
+
+
+def test_no_staging_modules_or_names():
+    """Every query is either registered or gone: no module under the
+    package is named ``pending_*``/``staged_*`` and no module-level name
+    carries ``PENDING``/``STAGED`` (the old parking dicts). Parsed with
+    ``ast`` so the check imports nothing. The ``r1``…``r10`` query
+    prefixes are the reference's capability ids and are not affected."""
+    import ast
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "duckdb_parquet_parser_spark",
+    )
+    bad = []
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            if f.startswith(("pending_", "staged_")):
+                bad.append(path)
+            names = []
+            for node in ast.parse(open(path).read()).body:
+                if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                ):
+                    names.append(node.name)
+                elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                    targets = getattr(node, "targets", None) or [node.target]
+                    names += [
+                        n.id
+                        for t in targets
+                        for n in ast.walk(t)
+                        if isinstance(n, ast.Name)
+                    ]
+                elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                    names += [a.asname or a.name for a in node.names]
+            bad += [
+                f"{path}: {n}"
+                for n in names
+                if "PENDING" in n.upper() or "STAGED" in n.upper()
+            ]
+    assert bad == [], bad

@@ -1,15 +1,14 @@
-"""Fixture-level calibration tripwire for the quality gates (VERDICT r15
-#7): the r15 curated-BPE work observed that the certified
-``ns_quality_logit`` keep threshold (``LOGIT_KEEP_THRESHOLD = 0``) keeps
-ZERO fixture docs — so every COMPOSITION that gates on quality
-(curate_epoch, ns_curation_lineage, ns_bpe_merges_curated) uses the
+"""Fixture-level calibration tripwire for the quality gates: the
+certified ``ns_quality_logit`` keep threshold
+(``LOGIT_KEEP_THRESHOLD = 0``) keeps ZERO fixture docs — so the
+composition that gates on quality (``ns_curation_lineage``) uses the
 pipeline-calibrated ``CURATE_MIN_LOGIT`` instead. This test pins that
 contract against the fixtures themselves: the calibrated gate must keep
 a non-trivial, non-total fraction at every fixture SF, so a future
 fixture regeneration can't silently make the ``keep`` flag (or the
 calibrated gate) vacuous — a gate that keeps everything or nothing
-stops exercising the drop paths of every composed pipeline while their
-differentials keep passing."""
+stops exercising the drop paths of the composed pipeline while its
+differential keeps passing."""
 
 from __future__ import annotations
 
@@ -17,9 +16,7 @@ import duckdb
 import pytest
 
 from duckdb_parquet_parser_spark.operators.ngram_stats import LOGIT_SQL
-from duckdb_parquet_parser_spark.operators.pending_r15 import (
-    CURATE_MIN_LOGIT,
-)
+from duckdb_parquet_parser_spark.operators.curation import CURATE_MIN_LOGIT
 
 SF_DIRS = [
     "/root/testdata/sf0.001",
@@ -47,5 +44,5 @@ def test_calibrated_gate_keeps_nontrivial_nontotal_fraction(sf_dir):
     assert 0 < kept < total, (
         f"CURATE_MIN_LOGIT={CURATE_MIN_LOGIT} keeps {kept}/{total} at "
         f"{sf_dir} — a vacuous gate; recalibrate CURATE_MIN_LOGIT for "
-        "the regenerated fixture (see pending_r15.curate_epoch)"
+        "the regenerated fixture (see curation.CURATE_MIN_LOGIT)"
     )

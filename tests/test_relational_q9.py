@@ -1,9 +1,7 @@
-"""TPC-H completers Q6/Q9/Q12/Q14 (operators/relational_q9.py),
-registered round 14 from the pending_r14 staging tranche. The
-query-vs-oracle differential now runs with the whole registered surface
-in tests/test_oracle_parity.py; this file keeps the shapes' OWN locks —
-the plan contracts and the randomized NULL/dangling-key fixtures they
-carried through staging."""
+"""TPC-H completers Q6/Q9/Q12/Q14 (operators/relational_q9.py). The
+query-vs-oracle differential runs with the whole registered surface in
+tests/test_oracle_parity.py; this file keeps the shapes' OWN locks —
+the plan contracts and the randomized NULL/dangling-key fixtures."""
 
 from __future__ import annotations
 
@@ -11,18 +9,11 @@ import pytest
 
 from duckdb_parquet_parser_spark.operators.relational_q9 import (
     ORACLES,
-    ORACLES_STAGED,
     QUERIES,
-    QUERIES_STAGED,
     q_rel_filter_agg_q6,
     q_rel_profit_q9,
 )
 from duckdb_parquet_parser_spark.testing import compare_query
-
-# registered + staged (Q14 stepped back to staging in round 14 when the
-# PNG IHDR fix took its head slot) — the differential covers all four
-ALL_QUERIES = {**QUERIES, **QUERIES_STAGED}
-ALL_ORACLES = {**ORACLES, **ORACLES_STAGED}
 
 
 def test_q6_predicates_reach_the_scan(spark, sf_smoke):
@@ -78,7 +69,5 @@ def test_tpch_completers_on_random_fixtures(spark, tmp_path, seed):
         "rel_promo_share_q14",
         "rel_profit_q9",
     ):
-        res = compare_query(
-            spark, sf_dir, name, ALL_QUERIES[name], ALL_ORACLES[name]
-        )
+        res = compare_query(spark, sf_dir, name, QUERIES[name], ORACLES[name])
         assert res.ok, res

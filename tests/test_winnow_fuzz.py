@@ -1,11 +1,11 @@
-"""Property fuzz for the winnowing scheme (operators/pending_r15.py):
+"""Property fuzz for the winnowing scheme (operators/dedup.py):
 a clean-room Python implementation of the DEFINITION (gram hash = first
 48 md5 bits of the gram string; fingerprints = distinct minima of each
 W-window, one clamped window for short docs) is checked against the
 DuckDB oracle SQL on randomized corpora, and the paper's guarantee —
 any shared token run of ≥ K + W - 1 tokens yields a shared fingerprint
 — is asserted on planted runs. The Spark side is tied to the same
-oracle by the parity tests in test_pending_r15.py, so agreement here
+oracle by the parity tests in test_winnow.py, so agreement here
 closes the triangle (Python ⇔ DuckDB ⇔ Spark).
 
 No Spark session: each example is a tiny parquet file + two DuckDB
@@ -22,8 +22,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from hypothesis import given, settings, strategies as st
 
-from duckdb_parquet_parser_spark.operators.pending_r15 import (
-    ORACLES_PENDING_R15,
+from duckdb_parquet_parser_spark.operators.dedup import (
+    ORACLES,
     WINNOW_K,
     WINNOW_W,
 )
@@ -73,7 +73,7 @@ def _oracle_fps(texts: list[str | None]) -> dict[int, set[int]]:
         )
         out: dict[int, set[int]] = {}
         for did, fp in con.execute(
-            ORACLES_PENDING_R15["ns_winnow_fingerprint"]
+            ORACLES["ns_winnow_fingerprint"]
         ).fetchall():
             out.setdefault(did, set()).add(fp)
         con.close()
