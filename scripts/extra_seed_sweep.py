@@ -82,6 +82,7 @@ def main() -> int:
     # the real finds come from (seeds 5003, 22, 932, 965...). Same test
     # bodies pytest runs.
     import test_curation as cur
+    import test_pending_r15 as p15
     import test_r16_fixes as r16f
     import test_randomized_fleet as fleet
     import test_relational_q9 as rq9
@@ -93,7 +94,7 @@ def main() -> int:
         # scale — 100+ randomized parquet files per seed vs DuckDB's
         # parquet_metadata() glob (VERDICT r13 #7)
         ("fleet", fleet.test_fleet_audit_matches_parquet_metadata_on_many_files),
-        ("sketch-curation-docs", docs.test_sketch_and_curation_queries_on_random_docs),
+        ("sketch-curation-docs", p15.test_pending_r15_doc_queries_on_random_docs),
         ("semdedup-emb", sem.test_semdedup_on_random_embeddings),
         ("cc-incremental", cur.test_cc_incremental_on_random_docs),
         # the conditional-hint minhash verify and the persisted-label

@@ -1,8 +1,8 @@
 """Curation-operator gates (operators/curation.py): every registered
-query's DuckDB differential at two SFs, the ``span_scrub`` helper's
-differential, and the structural invariants the hash alone doesn't
-explain — per-source caps, the scrub transform, the lineage's stages
-and incremental clusters."""
+query's DuckDB differential at two SFs and the structural invariants
+the hash alone doesn't explain — per-source caps, the lineage's stages
+and incremental clusters. The lineage's differentials and the
+``span_scrub`` helper's tests are in test_pending_r15.py."""
 
 from __future__ import annotations
 
@@ -10,23 +10,22 @@ import os
 
 import pytest
 from conftest import SF_CORRECT, SF_SMOKE
-from pyspark.sql import functions as F
 
-from duckdb_parquet_parser_spark.catalog import load_table
 from duckdb_parquet_parser_spark.operators.curation import (
     ORACLES,
     QUERIES,
     SOURCE_CAP,
-    SPAN_SCRUB_ORACLE,
     q_ns_cc_incremental,
     q_ns_curation_lineage,
     q_ns_source_cap,
-    span_scrub,
 )
 from duckdb_parquet_parser_spark.testing import compare_query
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
+# ns_curation_lineage's differential runs in test_pending_r15.py
+@pytest.mark.parametrize(
+    "name", sorted(n for n in QUERIES if n != "ns_curation_lineage")
+)
 @pytest.mark.parametrize(
     "sf_dir", [SF_SMOKE, SF_CORRECT]
 )
@@ -96,55 +95,6 @@ def test_skew_safe_keepers_equivalent_to_window_variant(spark, sf_smoke):
     assert w == {(doc, i + 1) for i, (_, doc) in enumerate(rows)}
 
 
-@pytest.mark.parametrize(
-    "sf_dir", [SF_SMOKE, SF_CORRECT]
-)
-def test_span_scrub_matches_oracle(spark, sf_dir):
-    res = compare_query(
-        spark, sf_dir, "span_scrub", span_scrub, SPAN_SCRUB_ORACLE
-    )
-    assert res.ok, res
-
-
-def test_span_scrub_semantics(spark, sf_correct):
-    """The transform's invariants beyond the hash: the scrubbed text is
-    an order-preserving subsequence of the original tokens; accounting
-    is exact; the fixture threshold scrubs a small-but-real fraction
-    (the measured 1.9%) without annihilating any sf0.01 doc."""
-    originals = {
-        r["doc_id"]: r["text"]
-        for r in load_table(spark, sf_correct, "documents")
-        .filter(F.col("text").isNotNull())
-        .collect()
-    }
-    rows = span_scrub(spark, sf_correct).collect()
-    assert len(rows) == len(originals)
-    scrubbed_total = sum(r["n_scrubbed"] for r in rows)
-    token_total = sum(r["n_tokens"] for r in rows)
-    assert 0.005 < scrubbed_total / token_total < 0.1
-    assert sum(1 for r in rows if r["n_scrubbed"] > 0) > 50
-    assert all(r["n_scrubbed"] < r["n_tokens"] for r in rows)  # sf0.01
-    for r in rows[:200]:
-        orig = originals[r["doc_id"]].split(" ")
-        kept = r["scrubbed_text"].split(" ") if r["scrubbed_text"] else []
-        assert len(kept) == r["n_tokens"] - r["n_scrubbed"], r["doc_id"]
-        it = iter(orig)
-        assert all(tok in it for tok in kept), r["doc_id"]  # subsequence
-
-
-def test_span_scrub_plan(spark, sf_smoke):
-    """Frequent grams broadcast into the occurrence join; no sort-merge
-    join, no cartesian; the corpus-sized exchanges are the two-level
-    doc-frequency aggregation and the per-doc cover aggregation."""
-    from duckdb_parquet_parser_spark.plans import formatted_plan
-
-    plan = formatted_plan(span_scrub(spark, sf_smoke))
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert plan.count("BroadcastHashJoin") >= 1
-    assert plan.count("Arguments: hashpartitioning") <= 3
-
-
 def test_lineage_stages_fire(spark, sf_correct):
     """The lineage's stages actually discriminate on the fixture (a
     never-firing stage certifies nothing). 'kept', 'quality',
@@ -152,7 +102,7 @@ def test_lineage_stages_fire(spark, sf_correct):
     'scrubbed_empty' fire at sf0.1 (16-token pure-boilerplate docs
     scrub to '' and near-identical docs collide on the scrubbed
     fingerprint there); 'null_text' is pinned by the randomized-docs
-    differential in test_randomized_docs.py."""
+    differential in test_pending_r15.py."""
     rows = q_ns_curation_lineage(spark, sf_correct).collect()
     stages = {r["stage"] for r in rows}
     assert {"kept", "quality", "contaminated", "budget"} <= stages

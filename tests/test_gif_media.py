@@ -1,6 +1,5 @@
 """Second real compressed format through the codec seam
-(operators/gif_media.py): the ``ns_mm_gif_features`` DuckDB
-differential at two SFs, LZW round-trip contracts (including the
+(operators/gif_media.py): LZW round-trip contracts (including the
 width-growth and 4096-entry-CLEAR paths the 8×8 fixtures can't reach),
 the hand-decodable KwKwK case, corrupt-stream loudness, the triad fuzz
 contract, and magic-prefix independence from the certified PNG corpus
@@ -10,7 +9,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from conftest import SF_CORRECT, SF_SMOKE
 
 from duckdb_parquet_parser_spark.operators.gif_media import (
     GIF87A_MAGIC,
@@ -24,23 +22,6 @@ from duckdb_parquet_parser_spark.operators.multimodal import average_hash
 from duckdb_parquet_parser_spark.operators.multimodal_synth import (
     image_hash_for_doc,
 )
-
-
-@pytest.mark.parametrize(
-    "sf_dir", [SF_SMOKE, SF_CORRECT]
-)
-def test_gif_features_match_oracle(spark, sf_dir):
-    from duckdb_parquet_parser_spark.operators.gif_media import (
-        ORACLES,
-        QUERIES,
-    )
-    from duckdb_parquet_parser_spark.testing import compare_query
-
-    res = compare_query(
-        spark, sf_dir, "ns_mm_gif_features",
-        QUERIES["ns_mm_gif_features"], ORACLES["ns_mm_gif_features"],
-    )
-    assert res.ok, res
 
 
 @pytest.mark.parametrize(

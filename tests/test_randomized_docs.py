@@ -232,43 +232,3 @@ def test_cc_family_exact_closure_on_random_fixtures(spark, tmp_path, seed):
     for name, sql in _EXACT_ORACLES.items():
         res = compare_query(spark, sf_dir, name, queries[name], sql)
         assert res.ok, res
-
-
-@pytest.mark.parametrize("seed", [66, 5152])
-def test_sketch_and_curation_queries_on_random_docs(spark, tmp_path, seed):
-    """Bloom decontamination, span scrub, winnowing, HLL set algebra,
-    the GIF corpus and the curation lineage under the randomized docs
-    generator: unicode grams, empty tokens after split, null texts —
-    md5-over-gram parity and the bloom filter's one-sided bound must
-    hold on ANY documents table."""
-    from duckdb_parquet_parser_spark.operators.curation import (
-        SPAN_SCRUB_ORACLE,
-        span_scrub,
-    )
-
-    sf_dir = _make_fixture(tmp_path, seed)
-    queries, oracles = collect_queries()
-    res = compare_query(
-        spark, sf_dir, "span_scrub", span_scrub, SPAN_SCRUB_ORACLE
-    )
-    assert res.ok, res
-    for name in (
-        "ns_bloom_decontam",
-        "ns_winnow_fingerprint",
-        "ns_winnow_pairs",
-        "ns_hll_set_algebra",
-        # payloads derive from doc_id alone, but the random doc
-        # population exercises the poison-mod interleaving
-        "ns_mm_gif_features",
-        # planted null texts fire the lineage's 'null_text' stage the
-        # fixed fixtures never reach
-        "ns_curation_lineage",
-    ):
-        res = compare_query(spark, sf_dir, name, queries[name], oracles[name])
-        assert res.ok, res
-    # the planted nulls must actually fire the lineage's first stage
-    lineage_stages = {
-        r["stage"]
-        for r in queries["ns_curation_lineage"](spark, sf_dir).collect()
-    }
-    assert "null_text" in lineage_stages

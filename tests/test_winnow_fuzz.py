@@ -5,7 +5,7 @@ W-window, one clamped window for short docs) is checked against the
 DuckDB oracle SQL on randomized corpora, and the paper's guarantee —
 any shared token run of ≥ K + W - 1 tokens yields a shared fingerprint
 — is asserted on planted runs. The Spark side is tied to the same
-oracle by the parity tests in test_winnow.py, so agreement here
+oracle by the parity tests in test_pending_r15.py, so agreement here
 closes the triangle (Python ⇔ DuckDB ⇔ Spark).
 
 No Spark session: each example is a tiny parquet file + two DuckDB
