@@ -28,43 +28,16 @@ def dsum(col: str | Column, alias: str) -> Column:
     return F.sum(c.cast(DEC)).cast("double").alias(alias)
 
 
-def dround(col: Column, scale: int = 6) -> Column:
-    return F.round(col, scale)
-
-
 def davg(col: str | Column, count_col: Column, alias: str, scale: int = 6) -> Column:
     """avg = round(double(decimal_sum) / count): deterministic both sides."""
     c = F.col(col) if isinstance(col, str) else col
     return F.round(F.sum(c.cast(DEC)).cast("double") / count_col, scale).alias(alias)
 
 
-def md5_hash(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(c)
-
-
 def words(col: str | Column) -> Column:
     """Whitespace tokenization (reference fixture text is space-separated)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(c, " ")
-
-
-def minhash_value(word_col: Column, seed: int) -> Column:
-    """One MinHash 'hash function': lexicographic min over md5(seed || ':' || w).
-
-    md5 hex strings compare identically in Spark and DuckDB, so
-    ``min(md5(seed:w))`` is a fully portable minhash — no hex→int needed.
-    """
-    return F.min(F.md5(F.concat(F.lit(f"{seed}:"), word_col)))
-
-
-def hex_digit_high_bit(hex_str: Column, pos: int) -> Column:
-    """Bit j of a word hash = high bit of the j-th md5 hex digit (≥ '8').
-
-    Gives 32 portable pseudo-random bits per word for SimHash without any
-    hex→integer conversion (which DuckDB 1.0 lacks a clean path for).
-    """
-    return (F.substring(hex_str, pos + 1, 1) >= "8").cast("int")
 
 
 def dot_product(a: Column, b: Column) -> Column:

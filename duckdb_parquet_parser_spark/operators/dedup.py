@@ -43,13 +43,6 @@ SIMHASH_BITS = 32
 HAMMING_MAX = 3
 
 
-def _doc_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = load_table(spark, sf_dir, "documents")
-    return df.select(
-        "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("w")
-    )
-
-
 def _doc_word_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, ws): the distinct-word set of each document as an array —
     the explode-free shape every array-native dedup stage starts from.
@@ -72,19 +65,6 @@ def q_ns_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("keep_doc_id"),
         )
     )
-
-
-def minhash_signatures(words: DataFrame) -> DataFrame:
-    """(doc_id, h0..h15): minhash signature, one aggregation pass.
-
-    Kept for the exploded-words shape; the hot path uses
-    :func:`minhash_signatures_from_arrays` (no shuffle at all).
-    """
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("w")))).alias(f"h{i}")
-        for i in range(N_HASHES)
-    ]
-    return words.groupBy("doc_id").agg(*aggs)
 
 
 def minhash_signatures_from_arrays(docs: DataFrame) -> DataFrame:
@@ -309,10 +289,10 @@ def _broadcast_threshold_bytes(spark: SparkSession) -> int:
     try:
         return int(raw)
     except ValueError:
-        return int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils
-            .byteStringAsBytes(raw)
-        )
+        # one lookup by full name: a package walk costs a class-path
+        # miss per name segment
+        java_utils = getattr(spark._jvm, "org.apache.spark.network.util.JavaUtils")
+        return int(java_utils.byteStringAsBytes(raw))
 
 
 def _wont_broadcast(df: DataFrame, spark: SparkSession) -> bool:
@@ -406,31 +386,6 @@ def _verify_jaccard_pairs(
         .withColumn("jaccard", F.round(inter / union, 6))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("doc_a", "doc_b", "jaccard")
-    )
-
-
-def verified_jaccard(words: DataFrame, pairs: DataFrame) -> DataFrame:
-    """Exact Jaccard for candidate pairs only (verification stage)."""
-    sizes = words.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    wa = words.select(F.col("doc_id").alias("doc_a"), "w")
-    wb = words.select(F.col("doc_id").alias("doc_b"), "w")
-    inter = (
-        pairs.join(wa, "doc_a")
-        .join(wb, ["doc_b", "w"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6
-            ),
-        )
     )
 
 

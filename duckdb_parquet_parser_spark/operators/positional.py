@@ -211,21 +211,6 @@ def with_positions(df: DataFrame, order_col: str, pos_col: str = "pos") -> DataF
     return df.withColumn(pos_col, (F.row_number().over(w) - 1).cast("long"))
 
 
-def positional_stream(df: DataFrame, column: str, order_col: str) -> DataFrame:
-    """(pos, len, value) for non-null strings; positions computed over the
-    UNFILTERED order (nulls occupy positions but are not emitted —
-    parquet_reader.cpp:417-453)."""
-    return (
-        with_positions(df, order_col)
-        .filter(F.col(column).isNotNull())
-        .select(
-            "pos",
-            F.octet_length(F.col(column)).cast("long").alias("len"),
-            F.col(column).alias("value"),
-        )
-    )
-
-
 def with_chunk_ids(
     df: DataFrame,
     column: str = "text",

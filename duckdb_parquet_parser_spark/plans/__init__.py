@@ -40,7 +40,3 @@ def assert_broadcast(df: DataFrame, n_broadcasts: int = 1) -> None:
         raise AssertionError(
             f"expected ≥{n_broadcasts} broadcast joins, found {found}; plan:\n{plan}"
         )
-
-
-def count_shuffles(df: DataFrame) -> int:
-    return formatted_plan(df).count("Exchange")

@@ -10,12 +10,17 @@ the same code is correct and fast on a multi-executor cluster at ~100 TB:
 - Arrow enabled for every pandas-UDF path (the only Python hot paths we
   allow; everything else stays JVM-side in whole-stage codegen).
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
+- No fixed per-op driver cost that does not depend on the data: the
+  compiled-class cache holds the registered query set, PySpark's
+  per-Column call-site capture is off, and PySpark's py4j helper classes
+  resolve without a class-path scan (the three constants below).
 """
 
 from __future__ import annotations
 
 import os
 
+from py4j.java_gateway import java_import
 from pyspark.sql import SparkSession
 
 
@@ -36,6 +41,34 @@ def env_positive_int(name: str, default: int) -> int:
 
 
 DEFAULT_SHUFFLE_PARTITIONS = env_positive_int("SPARK_GRAFT_SHUFFLE", 32)
+
+# Entries in Spark's LRU cache of compiled (Janino) classes; static, so
+# only sessions built here get it. Spark's default of 100 is smaller than
+# one workload's steady working set (165-190 generated classes per pass
+# of either perfbench workload), and a cyclic working set larger than an
+# LRU misses on every entry, so every pass recompiled all of them. One
+# round over all 157 registered queries at sf0.001 compiles 1,485
+# distinct classes; this holds them all with headroom.
+CODEGEN_CACHE_ENTRIES = 2048
+
+# PySpark's DataFrame debugging wraps every Column call in a Python stack
+# walk plus about nine py4j commands that record the call site for error
+# messages (Spark's own conf doc: "a non-trivial performance overhead").
+# Static conf. With it off, errors still name their cause (such as the
+# missing column); only their call-site context names a JVM frame in
+# place of the Python file and line.
+DATAFRAME_DEBUGGING = "false"
+
+# Classes PySpark looks up by short name on every Column operator,
+# ``_to_seq`` and lambda. py4j resolves a short name by trying it bare,
+# then the view's single imports, then each star import, and every miss
+# is a Class.forName scan of the whole class path; a single import ends
+# the walk at the first step after the bare try.
+PY4J_SINGLE_IMPORTS = (
+    "org.apache.spark.sql.functions",
+    "org.apache.spark.api.python.PythonUtils",
+    "org.apache.spark.sql.api.python.PythonSQLUtils",
+)
 
 # Set to a durable (HDFS / object-store) directory to make every
 # lineage-cutting materialization in the engine survive executor loss.
@@ -140,6 +173,8 @@ def get_spark(
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.python.sql.dataFrameDebugging.enabled", DATAFRAME_DEBUGGING)
         # managed-table home for bucketed layouts (sources/layout.py)
         .config(
             "spark.sql.warehouse.dir",
@@ -148,4 +183,7 @@ def get_spark(
             ),
         )
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    for name in PY4J_SINGLE_IMPORTS:
+        java_import(spark._jvm, name)
+    return spark

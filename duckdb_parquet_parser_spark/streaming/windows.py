@@ -23,7 +23,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.windows import sliding_agg, tumbling_agg
+from ..operators.windows import tumbling_agg
 from ..session import env_positive_int
 from .source import event_stream, stage_events
 
@@ -93,11 +93,6 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Complete-mode tumbling aggregation — batch-equivalent final state."""
     src = event_stream(spark, stage_events(spark, sf_dir), files_per_trigger=4)
     return _run_windowed_agg(tumbling_agg(src), spark)
-
-
-def streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    src = event_stream(spark, stage_events(spark, sf_dir), files_per_trigger=4)
-    return _run_windowed_agg(sliding_agg(src), spark)
 
 
 def streaming_tumbling_append(
