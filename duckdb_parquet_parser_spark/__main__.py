@@ -86,13 +86,14 @@ def regex_report(
     from pyspark.sql import functions as F
 
     from .operators.positional import scalable_chunk_ids
+    from .operators.scan import string_columns_only
     from .session import get_spark
 
     spark = get_spark(app_name="parser-cli")
     df = spark.read.parquet(path)
     if column not in df.columns:
         raise SystemExit(f"column {column!r} not in {df.columns}")
-    chunked = scalable_chunk_ids(df, column=column)
+    chunked = scalable_chunk_ids(string_columns_only(df, column), column=column)
     cond = F.col("value").rlike(pattern)
     if negate:
         cond = ~cond
@@ -124,13 +125,14 @@ def index_report(path: str, column: str, out=sys.stdout) -> None:
     from pyspark.sql import functions as F
 
     from .operators.positional import CHUNK_SIZE, byte_cost, scalable_chunk_ids
+    from .operators.scan import string_columns_only
     from .session import get_spark
 
     spark = get_spark(app_name="parser-cli")
     df = spark.read.parquet(path)
     if column not in df.columns:
         raise SystemExit(f"column {column!r} not in {df.columns}")
-    chunked = scalable_chunk_ids(df, column=column)
+    chunked = scalable_chunk_ids(string_columns_only(df, column), column=column)
     idx = (
         chunked.groupBy("chunk_id")
         .agg(

@@ -34,12 +34,6 @@ def davg(col: str | Column, count_col: Column, alias: str, scale: int = 6) -> Co
     return F.round(F.sum(c.cast(DEC)).cast("double") / count_col, scale).alias(alias)
 
 
-def words(col: str | Column) -> Column:
-    """Whitespace tokenization (reference fixture text is space-separated)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, " ")
-
-
 def dot_product(a: Column, b: Column) -> Column:
     """Left-to-right dot-product fold over two array<float> columns,
     per-element float→double promotion (matches DuckDB's sequential loop)."""

@@ -307,47 +307,33 @@ def q_ns_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the portable CASE/substr md5 SQL (the HLL convention), so the
     DuckDB oracle runs the identical sketch, value for value.
 
-    Scale shape: the sketch aggregates with map-side partials into
-    DEPTH×WIDTH = 64 rows TOTAL regardless of corpus size — constant
-    state, the whole point; the only unbounded aggregation is the exact
-    top-k, which exists here to certify the sketch (at production scale
-    the exact pass is the thing the sketch replaces). Top-k is
-    TakeOrderedAndProject, no global sort."""
+    Scale shape: the sketch aggregates into DEPTH×WIDTH = 64 rows TOTAL
+    regardless of corpus size — constant state, the whole point. Here it
+    is summed from the exact per-word counts, which exist to certify the
+    sketch and also give the top-k, so the corpus is scanned and
+    exploded once (at production scale the exact pass is the thing the
+    sketch replaces, and the registers aggregate straight off the word
+    stream). Top-k is TakeOrderedAndProject, no global sort."""
     df = load_table(spark, sf_dir, "documents")
     words = df.filter(F.col("text").isNotNull()).select(
         F.explode(F.split("text", " ")).alias("word")
     )
-    hxs = words.select(
-        "word", *[F.expr(_cms_hx_sql(i)).alias(f"hx{i}") for i in range(CMS_DEPTH)]
-    )
-    bucket_cols = [
-        F.expr(_cms_bucket_sql(f"hx{i}")).alias(f"b{i}") for i in range(CMS_DEPTH)
-    ]
-    regs = (
-        hxs.select(
-            F.posexplode(F.array(*bucket_cols)).alias("hrow", "bucket")
+    # ONE corpus pass: the exact word counts feed both the sketch and
+    # the top-k. Every occurrence of a word lands in the same counter
+    # of each row, so a counter is the sum of its distinct words' counts.
+    counts = words.groupBy("word").agg(F.count(F.lit(1)).alias("exact_count"))
+    buckets = F.posexplode(
+        F.array(
+            *[F.expr(_cms_bucket_sql(_cms_hx_sql(i))) for i in range(CMS_DEPTH)]
         )
+    ).alias("hrow", "bucket")
+    regs = (
+        counts.select("exact_count", buckets)
         .groupBy("hrow", "bucket")
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        .agg(F.sum("exact_count").alias("cnt"))
     )
-    top = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("exact_count"))
-        .orderBy(F.desc("exact_count"), "word")
-        .limit(CMS_TOP_K)
-    )
-    top_b = top.select(
-        "word",
-        "exact_count",
-        F.posexplode(
-            F.array(
-                *[
-                    F.expr(_cms_bucket_sql(_cms_hx_sql(i)))
-                    for i in range(CMS_DEPTH)
-                ]
-            )
-        ).alias("hrow", "bucket"),
-    )
+    top = counts.orderBy(F.desc("exact_count"), "word").limit(CMS_TOP_K)
+    top_b = top.select("word", "exact_count", buckets)
     return (
         top_b.join(regs, ["hrow", "bucket"])
         .groupBy("word", "exact_count")

@@ -11,8 +11,9 @@ Scale design (100 TB):
 - MinHash: signatures are computed per-row with array expressions
   (``transform``/``array_min`` over the distinct-word array) — NO explode,
   NO shuffle; the only shuffles are the band bucket-join (keyed by
-  (band_idx, band_hash) — the classic LSH join, AQE handles bucket skew)
-  and the candidate-verification joins, which are keyed by doc_id and
+  (band_idx, band_key) and salted triangularly so a hot bucket spreads
+  over ~N_SALT_BLOCKS tasks — :func:`lsh_candidate_pairs_salted`) and
+  the candidate-verification joins, which are keyed by doc_id and
   broadcast automatically when the doc-array side is small.
 - Verification: exact Jaccard via ``array_intersect`` on the two word
   arrays — one row per candidate pair, instead of exploding pairs×words
@@ -33,6 +34,7 @@ from pyspark.sql.window import Window
 from ..cache import ArtifactKind, append_artifact, ensure_artifact, write_artifact
 from ..catalog import load_table, scale_out
 from ..fsmeta import docs_fingerprint
+from .lsh import banded_pairs
 from .ngram_stats import LOGIT_SQL as _LOGIT_SQL_SRC
 
 N_HASHES = 16
@@ -81,166 +83,61 @@ def minhash_signatures_from_arrays(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "ws", *[sig(i) for i in range(N_HASHES)])
 
 
-def _bands_array():
-    """The banded-signature expression shared by every LSH candidate
-    generator: md5 over each band's ROWS_PER_BAND signature columns."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"h{b * ROWS_PER_BAND + r}")
-                        for r in range(ROWS_PER_BAND)
-                    ],
-                )
+def _minhash_bands(col=F.col) -> list:
+    """MinHash's N_BANDS band keys: md5 over each band's ROWS_PER_BAND
+    signature columns, read through ``col``."""
+    return [
+        F.md5(
+            F.concat_ws(
+                "|",
+                *[col(f"h{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
             )
-            for b in range(N_BANDS)
-        ]
-    )
-
-
-def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
-    """Band the signature (4 bands × 4 rows), bucket-join on band hash.
-
-    Cross-band dedup via ``distinct()`` — deliberately, after measuring the
-    alternatives at sf0.1 (which has a ~2.3k-doc near-dup mega-cluster, so
-    the bucket join is heavily skew-quadratic):
-
-    - distinct's map-side partial aggregation compresses the hot bucket's
-      pair stream (bands×pairs rows) BEFORE the shuffle, and its exchange
-      rebalances the pairs so exact-Jaccard verification parallelizes;
-    - a "first-matching-band" filter (keep the pair only on the first band
-      both docs share) avoids the aggregation but leaves the pair stream in
-      the band_hash partitioning — the mega-cluster's millions of pairs pin
-      to one task and verification runs 4× slower;
-    - the remaining scale risk is pair *generation* inside the hot bucket's
-      single join task (inherently quadratic in cluster size); the 100 TB
-      mitigation is triangular salting of the self-join (split hot buckets
-      into s blocks, join block pairs i ≤ j) — the r15 sf1 spot-check
-      measured exactly this demotion (BENCH_NOTES r15, CORRECTION), so as
-      of r16 the REGISTERED minhash queries use
-      :func:`lsh_candidate_pairs_salted`; this plain join stays library
-      surface for graphs without hot clusters.
-    """
-    bands = _bands_array()
-    banded = sigs.select(
-        "doc_id", F.posexplode(bands).alias("band_idx", "band_hash")
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+        for b in range(N_BANDS)
+    ]
+
+
+def _minhash_keyed(sigs: DataFrame) -> DataFrame:
+    """``sigs`` plus ``mh``: its N_BANDS md5 band keys as one array."""
+    return sigs.withColumn("mh", F.array(*_minhash_bands()))
+
+
+def _carried_minhash_bands(col) -> list:
+    """MinHash's band keys read back from the ``mh`` array, so the
+    first-shared-band gate compares stored md5s instead of hashing
+    again for every candidate row."""
+    return [col("mh")[b] for b in range(N_BANDS)]
+
+
+def _minhash_pairs(sigs: DataFrame, carry=(), **kwargs) -> DataFrame:
+    """:func:`~.lsh.banded_pairs` over MinHash's bands, carrying ``mh``
+    for the gate and dropping it from the output."""
+    return banded_pairs(
+        _minhash_keyed(sigs), _carried_minhash_bands, carry=["mh", *carry], **kwargs
+    ).drop("mh_a", "mh_b")
 
 
 N_SALT_BLOCKS = 8
 
 
-def _first_shared_band():
-    """Join-filter that keeps a banded pair row only at the pair's FIRST
-    shared band: band_idx ``b`` survives iff ``bands_a[i] != bands_b[i]``
-    for every ``i < b``. A pair sharing k bands is generated k times by a
-    banded equi-join; this gate makes exactly one row (the minimal shared
-    band) survive, replacing the ``distinct()`` that shuffled the whole
-    O(pairs) candidate stream just to drop cross-band duplicates (guide
-    §2.4 / §8 — both sides carry the 4-hash ``bands`` array, a few bytes
-    on the small banded-row shuffle instead of an exchange of the huge
-    pair stream). Band hashes are md5 over ``concat_ws`` — never null —
-    so the != comparisons are two-valued."""
-    cond = F.lit(True)
-    for i in range(N_BANDS - 1):
-        cond = cond & (
-            (F.col("a.band_idx") <= F.lit(i))
-            | (F.col("a.bands")[i] != F.col("b.bands")[i])
-        )
-    return cond
-
-
 def lsh_candidate_pairs_salted(
     sigs: DataFrame, n_blocks: int = N_SALT_BLOCKS, with_sizes: bool = False
 ) -> DataFrame:
-    """Triangular salted variant of :func:`lsh_candidate_pairs` — identical
-    output, skew-immune pair generation.
+    """MinHash's candidate pairs: :func:`~.lsh.banded_pairs` over the
+    N_BANDS × ROWS_PER_BAND bands of ``sigs``, triangularly salted
+    across ``n_blocks`` blocks so a hot near-dup bucket's pairs spread
+    over ~n_blocks tasks instead of one (the r15 sf1 spot-check measured
+    the unsalted bucket join demoting to sort-merge and pinning a hot
+    bucket on one task — BENCH_NOTES r15, CORRECTION). One row per
+    candidate pair, the same set as a ``distinct()`` over the plain band
+    join (tests/test_lsh.py).
 
-    The plain bucket self-join generates all of a bucket's pairs in the
-    single task owning its key, which is quadratic in the largest near-dup
-    cluster. Salting splits every bucket into ``n_blocks`` pseudo-random
-    blocks by doc hash and enumerates block pairs (i ≤ j) instead: the left
-    side replicates each row to every block ≥ its own, the join key gains
-    the target block, and each of a hot bucket's ~s²/2 block-pairs lands on
-    a different reducer. Pair volume is unchanged; the single-task ceiling
-    drops by ~n_blocks. (tests/test_dedup_scale.py asserts set-equality
-    with the unsalted join.)
-
-    r18 — cross-band dedup WITHOUT the ``distinct()`` exchange (guide
-    §2.4): a pair is generated once per shared band (the salting makes
-    it exactly once — each pair lives in exactly one block combination,
-    and same-block double orientation is filtered below), so the old
-    ``distinct()`` shuffled ~2× the candidate volume (13.3 M rows at
-    sf0.1) purely to drop cross-band duplicates. Both banded sides now
-    carry the full ``bands`` array (4 fixed-width hashes — bytes added
-    to the tiny 4N-row band shuffle, bytes REMOVED from the huge
-    pair-stream shuffle: the §8 lesson, decide on lightweight proxies)
-    and the join keeps a pair only at its FIRST shared band:
-    band_idx b survives iff bands_a[i] ≠ bands_b[i] for every i < b.
-    Exactly one row per candidate pair emerges — the same set
-    ``distinct()`` produced (set-equality + uniqueness pinned in
-    tests/test_dedup_scale.py) — and the pair stream flows to
-    verification without an exchange, already spread across reducers by
-    the salted join keys. Measured at sf0.1: pairs stage 1.7 → ~1.0 s;
-    at corpus scale this removes a full shuffle of the O(pairs) stream.
-
-    ``with_sizes=True`` (r18) additionally emits each pair's word-set
-    sizes ``(_na, _nb)`` — read off the ``nw`` column the signature
-    table carries — so the verify's size-ratio gate can reject pairs
-    BEFORE fetching their word arrays (:func:`_verify_jaccard_pairs`).
-    Default off: the bare (doc_a, doc_b) contract every existing
-    consumer and the plain-generator set-equality tests pin.
-    """
-    bands = _bands_array()
-    cols = ["doc_id"] + (["nw"] if with_sizes else [])
-    banded = sigs.select(
-        *cols,
-        bands.alias("bands"),
-        F.posexplode(bands).alias("band_idx", "band_hash"),
-    ).withColumn("block", F.pmod(F.xxhash64("doc_id"), F.lit(n_blocks)))
-    left = banded.withColumn(
-        "target", F.explode(F.sequence("block", F.lit(n_blocks - 1)))
-    )
-    right = banded
-    a, b = left.alias("a"), right.alias("b")
-    same_block = F.col("a.block") == F.col("b.block")
-    first_match = _first_shared_band()
-    a_first = F.col("a.doc_id") < F.col("b.doc_id")
-    sel = [
-        F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-        F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-    ]
-    if with_sizes:
-        sel += [
-            F.when(a_first, F.col("a.nw")).otherwise(F.col("b.nw")).alias("_na"),
-            F.when(a_first, F.col("b.nw")).otherwise(F.col("a.nw")).alias("_nb"),
-        ]
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.target") == F.col("b.block"))
-            & (F.col("a.doc_id") != F.col("b.doc_id")),
-        )
-        # same-block pairs would appear twice (x→y and y→x); keep one
-        .filter(~same_block | (F.col("a.doc_id") < F.col("b.doc_id")))
-        .filter(first_match)
-        .select(*sel)
+    ``with_sizes=True`` also emits each pair's word-set sizes
+    ``(nw_a, nw_b)``, read off the ``nw`` column the signature table
+    carries, so the verify's size-ratio gate can reject pairs BEFORE
+    fetching their word arrays (:func:`_verify_jaccard_pairs`)."""
+    return _minhash_pairs(
+        sigs, carry=["nw"] if with_sizes else [], n_blocks=n_blocks
     )
 
 
@@ -309,6 +206,33 @@ def _wont_broadcast(df: DataFrame, spark: SparkSession) -> bool:
     return est > thresh
 
 
+def _doc_word_sets(spark: SparkSession, sf_dir: str, side: str) -> DataFrame:
+    """(doc_<side>, ws_<side>, _n<side>): :func:`_doc_word_arrays` renamed
+    for one side of the verify joins, with the arrays, their sizes and
+    the renames computed BELOW the ``scale_out`` exchange. The join's
+    doc-array build side is then a bare exchange over that shuffle, with
+    no whole-stage-codegen stage of its own. AQE numbers codegen stages
+    in the order it creates query stages, which follows the order in
+    which their inputs finish. A codegen stage here would take its id
+    before or after the band join's build side, depending on whether
+    this shuffle or the signature cache finished first, and a steady
+    pass would recompile the band-side class under the other id
+    (tests/test_driver_overhead.py). The two sides differ only in alias
+    names, so they canonicalize equal and share one shuffle and one
+    broadcast."""
+    ws = F.array_distinct(F.split("text", " "))
+    return scale_out(
+        spark,
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("text").isNotNull())
+        .select(
+            F.col("doc_id").alias(f"doc_{side}"),
+            ws.alias(f"ws_{side}"),
+            F.size(ws).alias(f"_n{side}"),
+        ),
+    )
+
+
 def _verify_jaccard_pairs(
     spark: SparkSession, sf_dir: str, pairs: DataFrame, hinted: bool = True
 ) -> DataFrame:
@@ -348,35 +272,25 @@ def _verify_jaccard_pairs(
     1.85 M surviving intersects (−73%), verify stage 3.8 → ~1.5 s. The
     two conjuncts land in one Catalyst ``Filter`` whose ``And``
     short-circuits, so the intersect never runs on a size-rejected row
-    (plan-asserted in tests/test_dedup_scale.py)."""
-    docs = _doc_word_arrays(spark, sf_dir)
-    hint = hinted and _wont_broadcast(docs, spark)
+    (plan-asserted in tests/test_r18_fixes.py)."""
+    sets_a, sets_b = _doc_word_sets(spark, sf_dir, "a"), _doc_word_sets(spark, sf_dir, "b")
+    hint = hinted and _wont_broadcast(sets_a, spark)
     size_gate = F.lit(JACCARD_THRESHOLD - 1e-4)
-    if "_na" in pairs.columns and "_nb" in pairs.columns:
+    if "nw_a" in pairs.columns and "nw_b" in pairs.columns:
         # the pair stream carries its word-set sizes (candidate
         # generation with_sizes=True, r18): reject size-incompatible
         # pairs BEFORE the two doc-array joins — 73% of the stream at
         # sf0.1 never touches an array row; the post-join gate below
-        # stays as the invariant for size-less callers. _na/_nb come
+        # stays as the invariant for size-less callers. nw_a/nw_b come
         # from the same size(ws) the rescan recomputes, so the two
         # gates agree row-for-row.
         pairs = pairs.filter(
-            F.least("_na", "_nb") >= size_gate * F.greatest("_na", "_nb")
+            F.least("nw_a", "nw_b") >= size_gate * F.greatest("nw_a", "nw_b")
         ).select("doc_a", "doc_b")
-    sets_a = docs.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("ws").alias("ws_a"),
-        F.size("ws").alias("_na"),
-    )
-    sets_b = docs.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("ws").alias("ws_b"),
-        F.size("ws").alias("_nb"),
-    )
     if hint:
         sets_a = sets_a.hint("shuffle_hash")
         sets_b = sets_b.hint("shuffle_hash")
-    size_ok = F.least("_na", "_nb") >= F.lit(JACCARD_THRESHOLD - 1e-4) * F.greatest("_na", "_nb")
+    size_ok = F.least("_na", "_nb") >= size_gate * F.greatest("_na", "_nb")
     inter = F.size(F.array_intersect("ws_a", "ws_b"))
     union = F.col("_na") + F.col("_nb") - inter
     return (
@@ -393,8 +307,9 @@ def q_ns_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup pairs with exact-Jaccard verification.
 
     Shuffle census (the 100 TB budget): (1) the salted band bucket
-    self-join, (2) distinct over candidate pairs, (3) two doc_id-keyed
-    joins to fetch word arrays (broadcast when the doc-array relation is
+    self-join, whose first-shared-band gate makes the pair stream
+    unique without a shuffle of its own, (2) two doc_id-keyed joins to
+    fetch word arrays (broadcast when the doc-array relation is
     small; conditional ``shuffle_hash`` past the broadcast cliff —
     :func:`_verify_jaccard_pairs`). Signature computation itself is
     shuffle-free — see :func:`minhash_signatures_from_arrays` — and runs
@@ -403,15 +318,12 @@ def q_ns_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Landed r16: candidate generation is the SALTED triangular bucket
     join (:func:`lsh_candidate_pairs_salted`, set-equal to the plain
-    join by construction and pinned in tests/test_dedup_scale.py). The
-    r15 sf1 spot-check MEASURED the plain self-join's documented risk
-    into reality — one decade past bench SF it demotes broadcast→SMJ
-    and concentrates keyed pair generation on hot band buckets
-    (BENCH_NOTES r15, CORRECTION section) — while the salted row held
-    ~linear with no conf change and was faster at fixture scale too
-    (5.4 vs 7.1 s driver walls). The plain generator remains library
-    surface (:func:`lsh_candidate_pairs`) for graphs without hot
-    clusters; this query has run the salted plan since r16.
+    join and pinned in tests/test_lsh.py). The r15 sf1 spot-check
+    MEASURED the plain self-join's risk — one decade past bench SF it
+    demotes broadcast→SMJ and concentrates keyed pair generation on hot
+    band buckets (BENCH_NOTES r15, CORRECTION section) — while the
+    salted row held ~linear with no conf change and was faster at
+    fixture scale too (5.4 vs 7.1 s driver walls).
     """
     sigs = _cached_signatures(spark, sf_dir)
     pairs = lsh_candidate_pairs_salted(sigs, with_sizes=True)
@@ -420,6 +332,23 @@ def q_ns_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 INCR_MOD = 10
 INCR_REM = 7  # doc_id % INCR_MOD == INCR_REM → the "new batch" (~10%)
+
+
+def _is_new(doc_id):
+    """True for a doc of the new batch."""
+    return doc_id % INCR_MOD == INCR_REM
+
+
+def _verified_incremental(
+    spark: SparkSession, sf_dir: str, pairs: DataFrame
+) -> DataFrame:
+    """Verified batch pairs, tagged ``new_new`` or ``corpus_new``."""
+    kind = F.when(
+        _is_new(F.col("doc_a")) & _is_new(F.col("doc_b")), F.lit("new_new")
+    ).otherwise(F.lit("corpus_new"))
+    return _verify_jaccard_pairs(spark, sf_dir, pairs).select(
+        "doc_a", "doc_b", "jaccard", kind.alias("pair_kind")
+    )
 
 
 def q_ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -445,56 +374,8 @@ def q_ns_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new↔new duplicates (the drop-policy distinction: new↔new keeps one
     representative, corpus↔new drops the new copy)."""
     sigs = _cached_signatures(spark, sf_dir)
-    bands = _bands_array()
-    banded = sigs.select(
-        "doc_id",
-        "nw",
-        bands.alias("bands"),
-        F.posexplode(bands).alias("band_idx", "band_hash"),
-    )
-    is_new = F.col("doc_id") % INCR_MOD == INCR_REM
-    a = banded.alias("a")
-    b = banded.filter(is_new).alias("b")
-    a_new = F.col("a.doc_id") % INCR_MOD == INCR_REM
-    a_first = F.col("a.doc_id") < F.col("b.doc_id")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") != F.col("b.doc_id"))
-            # new↔new pairs appear in both orientations; keep one. A
-            # corpus doc only ever sits on the a side, so corpus↔new
-            # pairs are generated exactly once.
-            & (~a_new | (F.col("a.doc_id") < F.col("b.doc_id"))),
-        )
-        # exactly one row per (pair, shared band) survives the
-        # orientation filter above, so the first-shared-band gate makes
-        # the stream pair-unique — no distinct() exchange (r18, same
-        # proof as lsh_candidate_pairs_salted)
-        .filter(_first_shared_band())
-        # carry the word-set sizes so the verify's size gate fires
-        # before the array joins (r18, lsh_candidate_pairs_salted
-        # with_sizes convention)
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-            F.when(a_first, F.col("a.nw"))
-            .otherwise(F.col("b.nw"))
-            .alias("_na"),
-            F.when(a_first, F.col("b.nw"))
-            .otherwise(F.col("a.nw"))
-            .alias("_nb"),
-        )
-    )
-    kind = F.when(
-        (F.col("doc_a") % INCR_MOD == INCR_REM)
-        & (F.col("doc_b") % INCR_MOD == INCR_REM),
-        F.lit("new_new"),
-    ).otherwise(F.lit("corpus_new"))
-    return _verify_jaccard_pairs(spark, sf_dir, pairs).select(
-        "doc_a", "doc_b", "jaccard", kind.alias("pair_kind")
-    )
+    pairs = _minhash_pairs(sigs, carry=["nw"], right=_is_new(F.col("doc_id")))
+    return _verified_incremental(spark, sf_dir, pairs)
 
 
 # --- Two-snapshot incremental dedup: the persisted signature artifact -----
@@ -557,77 +438,25 @@ def q_ns_dedup_incremental_persisted(spark: SparkSession, sf_dir: str) -> DataFr
     right side only the batch — so the results match `ns_dedup_incremental`
     row for row and the same DuckDB oracle certifies both."""
     corpus_sigs = ensure_artifact(spark, SIGNATURES, sf_dir)
-    is_new = F.col("doc_id") % INCR_MOD == INCR_REM
     batch_sigs = minhash_signatures_from_arrays(
-        _doc_word_arrays(spark, sf_dir).filter(is_new)
+        _doc_word_arrays(spark, sf_dir).filter(_is_new(F.col("doc_id")))
     ).drop("ws")
-    bands = _bands_array()
-    banded_corpus = corpus_sigs.select(
-        "doc_id",
-        bands.alias("bands"),
-        F.posexplode(bands).alias("band_idx", "band_hash"),
+    # The batch is tagged with a literal, not re-tested on doc_id: the
+    # right side's filter folds to false on the corpus branch, so the
+    # optimizer drops that branch and the right side never scans the
+    # artifact.
+    sigs = corpus_sigs.withColumn("_new", F.lit(False)).unionByName(
+        batch_sigs.withColumn("_new", F.lit(True))
     )
-    banded_batch = batch_sigs.select(
-        "doc_id",
-        bands.alias("bands"),
-        F.posexplode(bands).alias("band_idx", "band_hash"),
-    )
-    a = banded_corpus.unionByName(banded_batch).alias("a")
-    b = banded_batch.alias("b")
-    a_new = F.col("a.doc_id") % INCR_MOD == INCR_REM
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") != F.col("b.doc_id"))
-            & (~a_new | (F.col("a.doc_id") < F.col("b.doc_id"))),
-        )
-        # pair-unique without distinct() — r18, same proof as the
-        # in-session variant above
-        .filter(_first_shared_band())
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_a"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_b"),
-        )
-    )
-    kind = F.when(
-        (F.col("doc_a") % INCR_MOD == INCR_REM)
-        & (F.col("doc_b") % INCR_MOD == INCR_REM),
-        F.lit("new_new"),
-    ).otherwise(F.lit("corpus_new"))
-    return _verify_jaccard_pairs(spark, sf_dir, pairs).select(
-        "doc_a", "doc_b", "jaccard", kind.alias("pair_kind")
-    )
-
-
-def simhash_bits(words: DataFrame) -> DataFrame:
-    """(doc_id, b0..b31): SimHash bit j = majority vote of md5-hex-digit-j
-    high bits over the doc's distinct words (±1 votes, >0 → 1).
-
-    Kept for the exploded-words shape; the hot path uses
-    :func:`simhash_docs` (per-row, shuffle-free).
-    """
-    h = F.md5("w")
-    aggs = [
-        (
-            F.sum(
-                F.when(F.substring(h, j + 1, 1) >= "8", 1).otherwise(-1)
-            )
-            > 0
-        )
-        .cast("int")
-        .alias(f"b{j}")
-        for j in range(SIMHASH_BITS)
-    ]
-    return words.groupBy("doc_id").agg(*aggs)
+    pairs = _minhash_pairs(sigs, right=F.col("_new"))
+    return _verified_incremental(spark, sf_dir, pairs)
 
 
 def simhash_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) computed per-row, shuffle-free: md5 each word once
     (one ``transform``), then bit j = (#words with high hex digit j) ×2 >
-    #words — the same ±1 majority vote as :func:`simhash_bits` without the
-    explode/groupBy round-trip."""
+    #words — the ±1 majority vote over the doc's distinct words, without
+    an explode/groupBy round-trip."""
     with_h = docs.withColumn(
         "hs", F.transform("ws", lambda w: F.md5(w))
     ).withColumn("nw", F.size("ws"))
@@ -655,8 +484,8 @@ def q_ns_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # without a memo the expensive signature frame is re-materialized per
 # query. At corpus scale the equivalent is writing the signature table /
 # verified-pair table to parquet once and reading it from both consumers;
-# here the memo holds the localCheckpoint handle instead (bands ≈
-# 40 B/doc ×2 rows, pairs = the verified near-dup edges — both tiny next
+# here the memo holds the localCheckpoint handle instead (signatures ≈
+# 16 B/doc, pairs = the verified near-dup edges — both tiny next
 # to the corpus). Lifecycle (ADVICE r7): the key folds in an mtime+size
 # fingerprint of the documents table, so an in-session rewrite of the
 # same path can never serve stale frames; every lookup evicts entries
@@ -664,7 +493,7 @@ def q_ns_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pinning checkpointed blocks in long-lived multi-session processes);
 # and `clear_simhash_memos()` drops everything explicitly — the bench
 # harness calls it before each timed row so every measurement is cold.
-_SIMHASH_BANDS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+_SIMHASH_SIGS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 _SIMHASH_PAIRS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 _CC_LABELS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
@@ -699,7 +528,7 @@ def _memo_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     # for the whole session even though no lookup can ever hit them again
     # (ADVICE r8). Stale same-app frames get a prompt unpersist; dead-app
     # frames have no live blocks to free.
-    for memo in (_SIMHASH_BANDS_MEMO, _SIMHASH_PAIRS_MEMO, _CC_LABELS_MEMO):
+    for memo in (_SIMHASH_SIGS_MEMO, _SIMHASH_PAIRS_MEMO, _CC_LABELS_MEMO):
         for k in list(memo):
             if k[0] != app_id:
                 del memo[k]
@@ -720,19 +549,19 @@ def clear_cc_labels_memo() -> None:
 
 
 def clear_simhash_memos() -> None:
-    """Drop every memoized band/pair frame and best-effort free their
+    """Drop every memoized signature/pair frame and best-effort free their
     checkpointed blocks (the blocks are reclaimed by the ContextCleaner
     once the frames are unreferenced; the explicit unpersist just makes
     it prompt). The bench harness calls this before each timed row so
     measurements are cold and order-independent."""
-    for memo in (_SIMHASH_BANDS_MEMO, _SIMHASH_PAIRS_MEMO, _CC_LABELS_MEMO):
+    for memo in (_SIMHASH_SIGS_MEMO, _SIMHASH_PAIRS_MEMO, _CC_LABELS_MEMO):
         for df in memo.values():
             _unpersist_memoized(df)
         memo.clear()
 
 
-def _simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, sim, band, key): the per-doc banded signature table,
+def _simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, sim): the per-doc 32-bit SimHash packed into a long,
     eagerly checkpointed, computed once per (session, sf_dir).
 
     Materializing the signature frame ONCE before the self-join is the
@@ -742,82 +571,47 @@ def _simhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived not-null filter on conv(simhash,…) was pushed into BOTH scans,
     so the full 32-bit signature expression (per-word md5 + 32 majority
     votes) ran FOUR times. Cutting lineage here makes every downstream
-    read see a 2|docs|-row table of (id, long, band, 16-char key) — at
-    corpus scale this is exactly the signature table a pipeline would
-    persist to parquet before bucket-joining it."""
+    read see a |docs|-row table of (id, long) — at corpus scale this is
+    exactly the signature table a pipeline would persist to parquet
+    before bucket-joining it."""
     from ..session import checkpoint_df
 
     key = _memo_key(spark, sf_dir)
-    cached = _SIMHASH_BANDS_MEMO.get(key)
+    cached = _SIMHASH_SIGS_MEMO.get(key)
     if cached is not None:
         return cached
-    bands = (
-        simhash_docs(_doc_word_arrays(spark, sf_dir))
-        .select(
-            "doc_id",
-            F.conv("simhash", 2, 10).cast("long").alias("sim"),
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.lit(1).alias("band"),
-                        F.substring("simhash", 1, 16).alias("key"),
-                    ),
-                    F.struct(
-                        F.lit(2).alias("band"),
-                        F.substring("simhash", 17, 16).alias("key"),
-                    ),
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", "sim", "bk.band", "bk.key")
+    sigs = simhash_docs(_doc_word_arrays(spark, sf_dir)).select(
+        "doc_id", F.conv("simhash", 2, 10).cast("long").alias("sim")
     )
-    bands = checkpoint_df(bands, eager=True)
-    _SIMHASH_BANDS_MEMO[key] = bands
-    return bands
+    sigs = checkpoint_df(sigs, eager=True)
+    _SIMHASH_SIGS_MEMO[key] = sigs
+    return sigs
+
+
+def _simhash_halves(col) -> list:
+    """SimHash's two bands: the high and low 16 bits of ``sim``
+    (simhash characters 1-16 and 17-32)."""
+    return [F.shiftright(col("sim"), 16), col("sim").bitwiseAND(F.lit(0xFFFF))]
 
 
 def q_ns_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs by SimHash: candidates share a 16-bit half (banding),
     verified by Hamming distance ≤ HAMMING_MAX."""
-    # OR-of-equalities would force a nested-loop join; exploding each doc
-    # into (band, 16-bit key) rows and doing ONE equi-join on (band, key)
-    # is the scale-safe plan.
+    # OR-of-equalities would force a nested-loop join; banding each doc
+    # into its two 16-bit halves and doing ONE equi-join on (band, key)
+    # is the scale-safe plan — :func:`~.lsh.banded_pairs`, unsalted.
     # Verification is bit_count(xor) on a packed long — one instruction per
-    # pair instead of 32 per-character comparisons — and the join/distinct
-    # shuffles an 8-byte long per side instead of a 32-char signature.
+    # pair instead of 32 per-character comparisons — and the join shuffles
+    # an 8-byte long per side instead of a 32-char signature.
     # (The join itself stays LAZY here so the returned plan is inspectable
     # — tests/test_plans.py asserts equi-join-only on it; the materialized
     # variant for graph consumers is _simhash_pairs_materialized.)
-    bands = _simhash_bands(spark, sf_dir)
-    a = bands.select(
-        "band", "key", F.col("doc_id").alias("doc_a"), F.col("sim").alias("sim_a")
-    )
-    b = bands.select(
-        "band", "key", F.col("doc_id").alias("doc_b"), F.col("sim").alias("sim_b")
-    )
-    # Cross-band dedup WITHOUT a distinct() exchange (r18, the
-    # lsh_candidate_pairs_salted finding applied here): a pair sharing
-    # BOTH 16-bit halves is generated twice by the (band, key) equi-join;
-    # keep it only at its FIRST shared band. The band-1 key is the high
-    # 16 bits of the packed signature both sides already carry
-    # (key₁ = substring(simhash, 1, 16) ⇒ conv = sim >> 16), so the gate
-    # is two shifts on columns in flight — no extra bytes, no shuffle —
-    # and the candidate stream is pair-unique by construction
-    # (uniqueness + set-equality pinned in tests/test_r18_fixes.py).
-    first_band = (F.col("band") == 1) | (
-        F.shiftright("sim_a", 16) != F.shiftright("sim_b", 16)
-    )
-    cand = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(first_band)
-        .select("doc_a", "doc_b", "sim_a", "sim_b")
-    )
-    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    sigs = _simhash_signatures(spark, sf_dir)
+    hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).cast("long")
     return (
-        cand.withColumn("hamming", hamming.cast("long"))
+        banded_pairs(sigs, _simhash_halves, carry=["sim"])
+        .select("doc_a", "doc_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= HAMMING_MAX)
-        .select("doc_a", "doc_b", "hamming")
     )
 
 

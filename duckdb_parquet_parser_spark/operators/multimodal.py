@@ -19,12 +19,13 @@ unless requested (binary column stays columnar in Parquet).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from .lsh import banded_pairs
 
 FEATURE_SCHEMA = (
     "doc_id long, n_bytes long, first_byte int, last_byte int"
@@ -602,37 +603,10 @@ def video_neardup_pairs(
         ).localCheckpoint(eager=True)
     else:
         frames = frames.select("doc_id", "frame_idx", "ahash")
-    band = F.posexplode(
-        F.array(
-            *[
-                F.shiftrightunsigned("ahash", 16 * b)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias(f"b{b}")
-                for b in range(AHASH_BANDS)
-            ]
-        )
-    ).alias("band_idx", "key")
-    banded = frames.select("doc_id", "frame_idx", "ahash", band)
-    a = banded.select(
-        "frame_idx", "band_idx", "key",
-        F.col("doc_id").alias("doc_a"), F.col("ahash").alias("hash_a"),
-    )
-    b = banded.select(
-        "frame_idx", "band_idx", "key",
-        F.col("doc_id").alias("doc_b"), F.col("ahash").alias("hash_b"),
-    )
-    hamming = F.bit_count(F.col("hash_a").bitwiseXOR(F.col("hash_b")))
+    # one row per (video pair, frame index) whose hashes are within
+    # hamming_max — the matched-frame count needs no distinct()
     matched = (
-        a.join(b, ["frame_idx", "band_idx", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        # first-shared-band gate instead of distinct() (r18): one row
-        # per (video pair, frame index) survives, from the hashes
-        # already in flight — the matched-frame count is identical and
-        # the candidate stream never shuffles for dedup (the count's
-        # own partial aggregation is the only exchange left)
-        .filter(_first_shared_band_gate("hash_a", "hash_b"))
-        .select("doc_a", "doc_b", "frame_idx", hamming.alias("hamming"))
-        .filter(F.col("hamming") <= hamming_max)
+        _hamming_pairs(frames, "ahash", hamming_max, keys=["frame_idx"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("matched_frames"))
     )
@@ -663,16 +637,27 @@ AHASH_BANDS = 4  # 4 × 16-bit bands over the 64-bit average hash
 AHASH_HAMMING_MAX = 3
 
 
-def _banded_hash_pairs(
-    sig: DataFrame, hash_col: str, hamming_max: int
+def _ahash_bands(hash_col: str):
+    """The ``AHASH_BANDS`` 16-bit bands of a 64-bit hash column, as a
+    band function for :func:`~.lsh.banded_pairs`."""
+    return lambda col: [
+        F.shiftrightunsigned(col(hash_col), 16 * b).bitwiseAND(F.lit(0xFFFF))
+        for b in range(AHASH_BANDS)
+    ]
+
+
+def _hamming_pairs(
+    sig: DataFrame, hash_col: str, hamming_max: int, keys: Sequence[str] = ()
 ) -> DataFrame:
-    """(doc_id, <hash_col>) → (doc_a, doc_b, hamming) pairs within
-    ``hamming_max`` of a 64-bit hash — the shared engine behind the
-    image and audio near-dup queries. Four 16-bit bands, ONE
-    (band_idx, key) equi-join, ``bit_count(xor)`` verification; recall
-    is EXACT for ``hamming_max ≤ AHASH_BANDS - 1`` by pigeonhole. The
-    caller materializes ``sig`` (localCheckpoint) so the Python hashing
-    runs once, not once per join side."""
+    """(doc_id, *keys, <hash_col>) → (doc_a, doc_b, *keys, hamming) pairs
+    within ``hamming_max`` of a 64-bit hash — the verify step shared by
+    the image, audio and video near-dup queries. Candidates come from
+    :func:`~.lsh.banded_pairs` over ``AHASH_BANDS`` 16-bit bands
+    (unsalted), verified by ``bit_count(xor)``; recall is EXACT for
+    ``hamming_max ≤ AHASH_BANDS - 1`` by pigeonhole. Hashes are non-null
+    by construction (undecodable payloads are filtered before banding).
+    The caller materializes ``sig`` so the Python hashing runs once, not
+    once per join side."""
     if hamming_max > AHASH_BANDS - 1:
         # Beyond the pigeonhole radius a pair can flip one bit in every
         # band and silently never surface — fail loudly instead of
@@ -681,55 +666,14 @@ def _banded_hash_pairs(
             f"hamming_max={hamming_max} exceeds the exact-recall radius "
             f"{AHASH_BANDS - 1} of {AHASH_BANDS}-band banding"
         )
-    band = F.posexplode(
-        F.array(
-            *[
-                F.shiftrightunsigned(hash_col, 16 * b)
-                .bitwiseAND(F.lit(0xFFFF))
-                .alias(f"b{b}")
-                for b in range(AHASH_BANDS)
-            ]
-        )
-    ).alias("band_idx", "key")
-    banded = sig.select("doc_id", hash_col, band)
-    a = banded.select(
-        "band_idx", "key",
-        F.col("doc_id").alias("doc_a"), F.col(hash_col).alias("hash_a"),
-    )
-    b = banded.select(
-        "band_idx", "key",
-        F.col("doc_id").alias("doc_b"), F.col(hash_col).alias("hash_b"),
-    )
-    hamming = F.bit_count(F.col("hash_a").bitwiseXOR(F.col("hash_b")))
+    hamming = F.bit_count(
+        F.col(f"{hash_col}_a").bitwiseXOR(F.col(f"{hash_col}_b"))
+    ).cast("int")
     return (
-        a.join(b, ["band_idx", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        # Cross-band dedup WITHOUT the distinct() exchange (r18, the
-        # dedup.py first-shared-band finding): a pair sharing k of the
-        # 4 bands surfaces k times; keep it only at its FIRST shared
-        # band — computable from the full hashes BOTH sides already
-        # carry, so the gate costs two shifts per earlier band and zero
-        # extra bytes, and the pair stream is pair-unique with no
-        # shuffle. Pinned vs the distinct() spelling in
-        # tests/test_r18_fixes.py.
-        .filter(_first_shared_band_gate("hash_a", "hash_b"))
-        .select("doc_a", "doc_b", hamming.cast("int").alias("hamming"))
+        banded_pairs(sig, _ahash_bands(hash_col), keys=keys, carry=[hash_col])
+        .select("doc_a", "doc_b", *keys, hamming.alias("hamming"))
         .filter(F.col("hamming") <= hamming_max)
     )
-
-
-def _first_shared_band_gate(hash_a: str, hash_b: str):
-    """Keep a banded pair row only at the pair's first shared 16-bit
-    band: band ``band_idx`` survives iff band i of the two hashes
-    differs for every i < band_idx. Hashes are non-null by construction
-    (undecodable payloads are filtered before banding), so the !=
-    comparisons are two-valued."""
-    cond = F.lit(True)
-    for i in range(AHASH_BANDS - 1):
-        ba = F.shiftrightunsigned(hash_a, 16 * i).bitwiseAND(F.lit(0xFFFF))
-        bb = F.shiftrightunsigned(hash_b, 16 * i).bitwiseAND(F.lit(0xFFFF))
-        cond = cond & ((F.col("band_idx") <= F.lit(i)) | (ba != bb))
-    return cond
 
 
 def image_neardup_pairs(
@@ -759,7 +703,7 @@ def image_neardup_pairs(
         .select("doc_id", "ahash")
         .localCheckpoint(eager=True)
     )
-    return _banded_hash_pairs(sig, "ahash", hamming_max)
+    return _hamming_pairs(sig, "ahash", hamming_max)
 
 
 AUDIO_FP_BLOCKS = 64  # one fingerprint bit per equal-length sample block
@@ -831,7 +775,7 @@ def audio_neardup_pairs(
         .select("doc_id", "fingerprint")
         .localCheckpoint(eager=True)
     )
-    return _banded_hash_pairs(sig, "fingerprint", hamming_max)
+    return _hamming_pairs(sig, "fingerprint", hamming_max)
 
 
 def q_ns_mm_meta(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,12 +6,13 @@ Round 10 certified near-duplicate PAIR detection for all three modalities
 ``ns_dedup_components`` + ``ns_dedup_cluster_canonical`` turn pairwise
 evidence into actual keep/drop decisions — no certified query resolved
 media pairs into clusters. This module closes that loop by composing the
-EXISTING machinery: the shared banded-Hamming pair engine
-(multimodal.py ``_banded_hash_pairs``) feeds the engine's one CC primitive
-``connected_components_converged`` + keep-best rank from dedup.py — zero new
-algorithmic surface, one new composition, which is exactly why it lives
-in its OWN module: dedup.py / multimodal.py / multimodal_synth.py were
-all driver-certified in round 10 with unchanged plans, and the
+EXISTING machinery: the shared banded-Hamming pair step
+(multimodal.py ``_hamming_pairs`` over lsh.py ``banded_pairs``) feeds
+the engine's one CC primitive ``connected_components_converged`` +
+keep-best rank from dedup.py — zero new algorithmic surface, one new
+composition, which is exactly why it lives in its OWN module: dedup.py /
+multimodal.py / multimodal_synth.py were all driver-certified in round
+10 with unchanged plans, and the
 changed-module re-certification rule (operators/__init__.py) must not
 force their 21 fresh certifications back into the 50-slot window for a
 pure composition that only IMPORTS them.
@@ -65,7 +66,7 @@ from .dedup import _CC_ROUND_CTES, CC_ROUNDS, connected_components_converged
 from .multimodal import (
     AHASH_HAMMING_MAX,
     VIDEO_MATCH_FRAC,
-    _banded_hash_pairs,
+    _hamming_pairs,
     extract_audio_fingerprints,
     extract_image_features,
     video_neardup_pairs,
@@ -115,7 +116,7 @@ def media_cluster_canonical(
     otherwise re-run the upstream Python decode.
     """
     sig = sig.localCheckpoint(eager=True)
-    pairs = _banded_hash_pairs(sig, hash_col, hamming_max)
+    pairs = _hamming_pairs(sig, hash_col, hamming_max)
     # edges_materialized=True here does NOT mean the pairs are
     # checkpointed — it skips one stage-job materializing them: the band
     # join reads the 16-byte/row checkpointed sig, so recomputing it

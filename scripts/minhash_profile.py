@@ -81,7 +81,7 @@ def main() -> None:
         from pyspark.sql import functions as F
 
         sigs = D._cached_signatures(spark, sf_dir)
-        bands = D._bands_array()
+        bands = F.array(*D._minhash_bands())
         banded = sigs.select(
             "doc_id", F.posexplode(bands).alias("band_idx", "band_hash")
         ).withColumn(

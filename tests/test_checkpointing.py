@@ -148,19 +148,19 @@ def test_memo_key_evicts_stale_same_app_entries(spark, sf_smoke, sf_correct):
     stale_rdd_ids = _cached_rdd_ids(spark) - before
     live = spark.range(5)
     other = spark.range(7)
-    dedup._SIMHASH_BANDS_MEMO.clear()
+    dedup._SIMHASH_SIGS_MEMO.clear()
     dedup._SIMHASH_PAIRS_MEMO.clear()
     try:
-        dedup._SIMHASH_BANDS_MEMO[(app, path, "stale-fingerprint")] = stale
-        dedup._SIMHASH_BANDS_MEMO[(app, path, live_fp)] = live
-        dedup._SIMHASH_BANDS_MEMO[(app, other_path, other_fp)] = other
+        dedup._SIMHASH_SIGS_MEMO[(app, path, "stale-fingerprint")] = stale
+        dedup._SIMHASH_SIGS_MEMO[(app, path, live_fp)] = live
+        dedup._SIMHASH_SIGS_MEMO[(app, other_path, other_fp)] = other
         dedup._SIMHASH_PAIRS_MEMO[("dead-app", path, live_fp)] = other
 
         key = dedup._memo_key(spark, sf_smoke)
         assert key == (app, path, live_fp)
-        assert (app, path, "stale-fingerprint") not in dedup._SIMHASH_BANDS_MEMO
-        assert (app, path, live_fp) in dedup._SIMHASH_BANDS_MEMO
-        assert (app, other_path, other_fp) in dedup._SIMHASH_BANDS_MEMO
+        assert (app, path, "stale-fingerprint") not in dedup._SIMHASH_SIGS_MEMO
+        assert (app, path, live_fp) in dedup._SIMHASH_SIGS_MEMO
+        assert (app, other_path, other_fp) in dedup._SIMHASH_SIGS_MEMO
         assert ("dead-app", path, live_fp) not in dedup._SIMHASH_PAIRS_MEMO
         # the stale entry's checkpointed blocks were promptly freed
         stale_tag = getattr(stale, "_graft_ckpt_rdd", None)
@@ -170,5 +170,5 @@ def test_memo_key_evicts_stale_same_app_entries(spark, sf_smoke, sf_correct):
             "eviction did not free the stale entry's checkpointed blocks"
         )
     finally:
-        dedup._SIMHASH_BANDS_MEMO.clear()
+        dedup._SIMHASH_SIGS_MEMO.clear()
         dedup._SIMHASH_PAIRS_MEMO.clear()

@@ -8,6 +8,8 @@ from __future__ import annotations
 import io
 import os
 
+import pytest
+
 from duckdb_parquet_parser_spark.__main__ import (
     dump_metadata,
     index_report,
@@ -63,6 +65,21 @@ def test_cli_index_report_totals(spark, sf_smoke):
     n = spark.read.parquet(path).filter("text IS NOT NULL").count()
     assert f"{n} values" in s
     assert "packed into" in s
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [["--index-column", "l_orderkey"], ["--regex-column", "l_orderkey", "--regex", "1"]],
+)
+def test_cli_rejects_non_string_column_by_name(spark, sf_smoke, flags):
+    """The value-chunk reports read string (BYTE_ARRAY) columns only, as
+    the reference's column_iterator does: a numeric column fails with
+    its name instead of producing a report over cast values."""
+    from duckdb_parquet_parser_spark.__main__ import main
+
+    path = os.path.join(sf_smoke, "lineitem.parquet")
+    with pytest.raises(TypeError, match="l_orderkey is bigint"):
+        main([path, *flags])
 
 
 def test_cli_audit_report_matches_walker(spark, sf_smoke):

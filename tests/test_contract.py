@@ -4,6 +4,9 @@ declared queries per round) or the bench harness contract."""
 
 from __future__ import annotations
 
+import ast
+import os
+
 from duckdb_parquet_parser_spark.operators import ROTATION_TAIL, collect_queries
 
 
@@ -213,3 +216,172 @@ def test_no_staging_modules_or_names():
                 if "PENDING" in n.upper() or "STAGED" in n.upper()
             ]
     assert bad == [], bad
+
+
+#: Package functions no package code calls, each with the caller that
+#: keeps it. Anything else unreferenced is dead code.
+EXTERNAL_API = {
+    "inspect.read_page_data": "R6 page-read API; tests/test_inspect_fuzz.py",
+    "inspect.read_pages_chunk": "R6 page-range API; tests/test_inspect_fuzz.py",
+    "testing.run_all": "oracle-parity harness; randomized tests, scripts",
+    "plans.assert_pushed_filter": "plan assertion helper; tests/test_plans.py",
+    "plans.assert_pruned_schema": "plan assertion helper; tests/test_plans.py",
+    "plans.assert_broadcast": "plan assertion helper; tests/test_plans.py",
+    "streaming.windows.streaming_tumbling_append": "watermark mode; tests/test_streaming.py",
+    "streaming.windows.dedup_within_watermark": "streaming dedup; tests/test_streaming.py",
+    "streaming.stateful.streaming_sessionize_watermark": "eviction mode; tests/test_streaming.py",
+    "operators.dedup.write_signature_artifact": "run-1 artifact write; perfbench",
+    "operators.dedup.append_signatures": "artifact append; perfbench",
+    "operators.dedup.clear_cc_labels_memo": "bench warm-shared protocol; bench.py",
+    "operators.dedup.clear_simhash_memos": "cold-measurement reset; perfbench, bench.py",
+    "operators.positional.with_chunk_ids": "chunk-id reference; tests/test_positional.py",
+    "operators.media_codecs.unregister_codec": "codec registry undo; tests/test_media_codecs.py",
+    "operators.curation.per_source_keepers": "kept-only source cap; tests/test_curation.py",
+    "operators.quantized_ann.knn_bruteforce_quantized": "int8 KNN; tests/test_quantized_ann.py",
+    "operators.similarity.embed_neardup_allpairs": "recall yardstick; tests/test_similarity.py",
+    "operators.similarity._pair_dot_impl": "pandas-UDF body; tests/test_similarity.py",
+    "operators.similarity.ann_lsh_topk": "bucketed top-k; tests/test_similarity.py",
+    "sources.layout.write_partitioned": "hive-partitioned write; tests/test_layout.py",
+    "sources.pywriter.write_reference_bytes": "byte-level writer; perfbench",
+}
+
+
+def _module_name(pkg_dir: str, path: str) -> str:
+    mod = os.path.relpath(path, pkg_dir)[: -len(".py")].replace(os.sep, ".")
+    return mod.removesuffix("__init__").rstrip(".")
+
+
+def _dotted(node: ast.expr) -> str | None:
+    """``a.b.c`` for a Name/Attribute chain, else None."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    return ".".join([node.id, *reversed(parts)])
+
+
+def unreferenced_functions(pkg_dir: str, pkg_name: str) -> set[str]:
+    """Top-level functions of the package at ``pkg_dir`` (imported as
+    ``pkg_name``) that no package code references, as ``module.function``.
+
+    A reference must resolve to the defining module: a bare name in that
+    module outside the function's own body, an import of the name from
+    that module (absolute or relative), or an attribute on a name bound
+    to that module (``dedup.f`` after ``from . import dedup``). A
+    same-named attribute on anything else, or a same-named local in
+    another module, does not count."""
+    trees, defs = {}, set()
+    for root, _, files in os.walk(pkg_dir):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path) as fh:
+                    trees[_module_name(pkg_dir, path)] = (ast.parse(fh.read()), f)
+    modules = set(trees)
+    for mod, (tree, _) in trees.items():
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.add(f"{mod}.{node.name}")
+
+    def absolute(mod: str, is_init: bool, node: ast.ImportFrom) -> str:
+        if not node.level:
+            name = node.module or ""
+            return name.removeprefix(pkg_name).lstrip(".") if (
+                name == pkg_name or name.startswith(pkg_name + ".")
+            ) else "\0" + name
+        base = mod.split(".") if mod else []
+        base = base if is_init else base[:-1]
+        base = base[: len(base) - (node.level - 1)]
+        return ".".join(p for p in [*base, node.module or ""] if p)
+
+    def qualify(mod: str, name: str) -> str:
+        return f"{mod}.{name}" if mod else name
+
+    refs = set()
+    for mod, (tree, fname) in trees.items():
+        bound = {}  # local name -> package module it is bound to
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                src = absolute(mod, fname == "__init__.py", node)
+                for al in node.names:
+                    target = qualify(src, al.name)
+                    refs.add(target)
+                    if target in modules:
+                        bound[al.asname or al.name] = target
+            elif isinstance(node, ast.Import):
+                for al in node.names:
+                    if al.name == pkg_name or al.name.startswith(pkg_name + "."):
+                        target = al.name.removeprefix(pkg_name).lstrip(".")
+                        if al.asname:
+                            bound[al.asname] = target
+                        else:
+                            bound[pkg_name] = ""
+        own = {
+            id(n): node.name
+            for node in tree.body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for n in ast.walk(node)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name) and own.get(id(node)) != node.id:
+                refs.add(qualify(mod, node.id))
+            elif isinstance(node, ast.Attribute):
+                base = _dotted(node.value)
+                if base is None:
+                    continue
+                head, _, rest = base.partition(".")
+                if head in bound:
+                    target = ".".join(p for p in [bound[head], rest] if p)
+                    if target in modules:
+                        refs.add(qualify(target, node.attr))
+    return defs - refs
+
+
+def test_every_package_function_is_referenced():
+    """Every top-level function in the package is referenced by package
+    code (a registered query is referenced by its module's ``QUERIES``)
+    or is named in ``EXTERNAL_API``. Parsed with ``ast``; nothing is
+    imported. Allowlist entries must still be unreferenced and exist,
+    so the list cannot go stale."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "duckdb_parquet_parser_spark",
+    )
+    unreferenced = unreferenced_functions(pkg, "duckdb_parquet_parser_spark")
+    assert sorted(unreferenced - set(EXTERNAL_API)) == []
+    assert sorted(set(EXTERNAL_API) - unreferenced) == []
+
+
+def test_reference_guard_ignores_same_named_attributes(tmp_path):
+    """A dead function named like a common attribute, local or keyword
+    elsewhere (``count``, ``run``) is still reported; one reached through
+    a module alias or a relative import is not."""
+    pkg = tmp_path / "pkg"
+    (pkg / "sub").mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "sub" / "__init__.py").write_text("")
+    (pkg / "sub" / "a.py").write_text(
+        "def count():\n    return count()\n\n"
+        "def run():\n    pass\n\n"
+        "def used_by_alias():\n    pass\n\n"
+        "def used_by_import():\n    pass\n\n"
+        "def used_here():\n    pass\n\n"
+        "VALUE = used_here()\n"
+    )
+    (pkg / "b.py").write_text(
+        "from .sub import a\n"
+        "from .sub.a import used_by_import\n\n"
+        "def main(df, run=1):\n"
+        "    df.count()\n"
+        "    count = run\n"
+        "    a.used_by_alias()\n"
+        "    return used_by_import, count, f(run=run)\n\n"
+        "def f(run):\n    return run\n"
+    )
+    assert unreferenced_functions(str(pkg), "pkg") == {
+        "sub.a.count",
+        "sub.a.run",
+        "b.main",
+    }

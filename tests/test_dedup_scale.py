@@ -5,12 +5,13 @@ from __future__ import annotations
 
 import pytest
 from cc_reference import reference_stop, union_find_labels
+from lsh_reference import reference_pairs
 from pyspark.sql import functions as F
 
 from duckdb_parquet_parser_spark.operators.dedup import (
     N_SALT_BLOCKS,
     _doc_word_arrays,
-    lsh_candidate_pairs,
+    _minhash_bands,
     lsh_candidate_pairs_salted,
     minhash_signatures_from_arrays,
 )
@@ -18,7 +19,7 @@ from duckdb_parquet_parser_spark.operators.dedup import (
 
 def test_salted_pairs_equal_plain_pairs(spark, sf_smoke):
     sigs = minhash_signatures_from_arrays(_doc_word_arrays(spark, sf_smoke))
-    plain = lsh_candidate_pairs(sigs)
+    plain = reference_pairs(sigs, _minhash_bands)
     salted = lsh_candidate_pairs_salted(sigs)
     assert plain.exceptAll(salted).count() == 0
     assert salted.exceptAll(plain).count() == 0
@@ -62,7 +63,9 @@ def test_incremental_dedup_equals_full_pairs_touching_batch(spark, sf_smoke):
 
     incr = q_ns_dedup_incremental(spark, sf_smoke).select("doc_a", "doc_b")
     full = _verify_jaccard_pairs(
-        spark, sf_smoke, lsh_candidate_pairs(_cached_signatures(spark, sf_smoke))
+        spark,
+        sf_smoke,
+        reference_pairs(_cached_signatures(spark, sf_smoke), _minhash_bands),
     ).select("doc_a", "doc_b")
     is_new = lambda c: F.col(c) % INCR_MOD == INCR_REM  # noqa: E731
     touching = full.filter(is_new("doc_a") | is_new("doc_b"))
@@ -90,6 +93,26 @@ def test_incremental_dedup_plan_never_self_joins_corpus(spark, sf_smoke):
     # the batch filter (doc_id % 10) = 7 is applied as a filter on one
     # join input, not as a post-join condition
     assert "% 10) = 7" in plan, plan[:2000]
+
+
+def test_persisted_incremental_scans_the_artifact_once(spark, sf_smoke):
+    """The band join's right side is the new batch alone: the batch
+    predicate must fold away on the corpus branch of the signature
+    union, not push a filter into a second scan of the corpus
+    artifact."""
+    from duckdb_parquet_parser_spark.operators.dedup import (
+        q_ns_dedup_incremental_persisted,
+    )
+
+    plan = (
+        q_ns_dedup_incremental_persisted(spark, sf_smoke)
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    # the artifact is the only parquet relation with signature columns
+    scans = [ln for ln in plan.splitlines() if "Relation [" in ln and ",h15#" in ln]
+    assert len(scans) == 1, plan
 
 
 def test_cluster_canonical_keeps_best_quality_member(spark, sf_smoke):

@@ -92,3 +92,26 @@ def test_missing_column_error_names_it(spark):
     df = spark.range(3)
     with pytest.raises(AnalysisException, match="no_such_column"):
         df.select(F.col("no_such_column") + 1).columns
+
+
+def test_verify_build_side_has_no_codegen_stage(spark, sf_smoke):
+    """AQE numbers codegen stages in the order it creates query stages,
+    and that order follows which inputs finish first. In the MinHash plan
+    the band join's build side waits on the signature cache and the
+    doc-array build side waits on the documents shuffle. If both held a
+    codegen stage, the band-side class would be compiled under a second
+    id whenever the shuffle finished first, and a steady round would
+    compile again. The doc-array side must be a bare exchange."""
+    queries, _ = collect_queries()
+    spark.catalog.clearCache()
+    df = queries["ns_dedup_minhash"](spark, sf_smoke)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = plan.split("\n+- == Initial Plan ==")[0].splitlines()
+    builds = [
+        lines[i + 1].lstrip(" :+-")
+        for i, line in enumerate(lines)
+        if line.lstrip(" :+-").startswith("BroadcastExchange")
+    ]
+    assert len(builds) == 2, builds
+    assert [b.startswith("*(") for b in builds] == [True, False], builds

@@ -11,15 +11,16 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from lsh_reference import reference_pairs
 from pyspark.sql import functions as F
 
 from duckdb_parquet_parser_spark.catalog import TABLES
 from duckdb_parquet_parser_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _cached_signatures,
+    _minhash_bands,
     _verify_jaccard_pairs,
     clear_simhash_memos,
-    lsh_candidate_pairs,
     lsh_candidate_pairs_salted,
 )
 
@@ -85,7 +86,8 @@ def test_salted_candidates_are_pair_unique_without_distinct(spark, sf_smoke):
     pairs = [(r.doc_a, r.doc_b) for r in rows]
     assert len(pairs) == len(set(pairs)), "duplicate candidate rows"
     plain = {
-        (r.doc_a, r.doc_b) for r in lsh_candidate_pairs(sigs).collect()
+        (r.doc_a, r.doc_b)
+        for r in reference_pairs(sigs, _minhash_bands).collect()
     }
     assert set(pairs) == plain
 
