@@ -37,5 +37,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    """Oracles retargeted to the gate's fixture dir: the r4/r7/r8 SQL
+    names the multi-row-group copy of its documents, built here on the
+    first call."""
+    from duckdb_parquet_parser_spark.testing import ORACLE_SF_DIR, retarget_oracle_sql
+
     _, oracles = collect_queries()
-    return oracles
+    return {n: retarget_oracle_sql(s, ORACLE_SF_DIR) for n, s in oracles.items()}

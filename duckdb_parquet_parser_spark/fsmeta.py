@@ -1,8 +1,8 @@
 """Table content fingerprints: the identity behind every content-keyed
 cache entry and memo in the engine.
 
-``docs_fingerprint`` fingerprints a fixture's documents table (os.stat
-for local paths, the Hadoop FS API for any other scheme);
+``table_fingerprint`` fingerprints one table of a fixture directory
+(os.stat for local paths, the Hadoop FS API for any other scheme);
 ``fs_content_fingerprint`` is the scheme-agnostic primitive it uses for
 remote paths. Both change whenever a file under the table is added,
 removed or rewritten, so a key built from them never answers for stale
@@ -31,7 +31,7 @@ def fs_content_fingerprint(spark: SparkSession, path: str) -> str:
 
     Resolution contract: Hadoop reports millisecond mtimes, so a
     same-size rewrite within one millisecond is invisible — strictly
-    coarser than ``os.stat``'s nanoseconds, so ``docs_fingerprint``
+    coarser than ``os.stat``'s nanoseconds, so ``table_fingerprint``
     keeps the os.stat walk for LOCAL directories and uses this only
     where os.stat cannot see at all (REVIEW_r14.md #2).
 
@@ -63,9 +63,9 @@ def fs_content_fingerprint(spark: SparkSession, path: str) -> str:
     return "|".join(parts)
 
 
-def docs_fingerprint(sf_dir: str) -> str:
-    """Cheap content fingerprint of the documents table: (mtime_ns, size)
-    of every file under documents.parquet (file or directory).
+def table_fingerprint(sf_dir: str, table: str = "documents") -> str:
+    """Cheap content fingerprint of one fixture table: (mtime_ns, size)
+    of every file under ``<table>.parquet`` (file or directory).
 
     A table on a NON-LOCAL scheme (hdfs://, s3a://, file://…) is
     fingerprinted through the Hadoop FS API — an os.stat walk returns an
@@ -84,9 +84,9 @@ def docs_fingerprint(sf_dir: str) -> str:
                 "SparkSession (Hadoop FS access)"
             )
         return fs_content_fingerprint(
-            spark, f"{sf_dir.rstrip('/')}/documents.parquet"
+            spark, f"{sf_dir.rstrip('/')}/{table}.parquet"
         )
-    path = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
+    path = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
     parts = []
     if os.path.isdir(path):
         for root, _, files in sorted(os.walk(path)):

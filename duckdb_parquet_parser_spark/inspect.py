@@ -25,6 +25,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .cache import derived_dir
 from .catalog import table_path
 
 # ---------------------------------------------------------------------------
@@ -53,8 +54,13 @@ def row_group_bounds(path: str, row_group: int) -> tuple[int, int]:
     return start, start + meta.row_group(row_group).num_rows
 
 
-MRG_ROOT = "/tmp/spark_graft_fixtures"
 MRG_ROWS_PER_GROUP = 200
+
+#: The multi-row-group copy the r4/r7/r8 oracles name. The driver gate
+#: runs the oracle SQL as given, so the path is a pinned literal;
+#: ``testing.retarget_oracle_sql`` swaps it for the copy of the fixture
+#: dir under test.
+ORACLE_MRG_PATH = "/tmp/spark_graft_fixtures/sf0.01/documents_mrg.parquet"
 
 
 def multi_rowgroup_documents(sf_dir: str) -> str:
@@ -62,16 +68,17 @@ def multi_rowgroup_documents(sf_dir: str) -> str:
     (the stock fixture has a single row group at small scale factors, which
     made any row-group-scoped read indistinguishable from a full-table
     read). Row order — and therefore file position — is preserved.
-    Idempotent per scale factor; lives under /tmp."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(MRG_ROOT, tag, "documents_mrg.parquet")
-    if not os.path.exists(out):
-        os.makedirs(os.path.dirname(out), exist_ok=True)
-        t = pq.read_table(table_path(sf_dir, "documents"))
-        tmp = f"{out}.{os.getpid()}.tmp"
-        pq.write_table(t, tmp, row_group_size=MRG_ROWS_PER_GROUP)
-        os.replace(tmp, out)  # atomic: concurrent creators converge
-    return out
+    Written once per content of the documents table (``cache.derived_dir``)."""
+
+    def build(tmp: str) -> None:
+        pq.write_table(
+            pq.read_table(table_path(sf_dir, "documents")),
+            os.path.join(tmp, "documents_mrg.parquet"),
+            row_group_size=MRG_ROWS_PER_GROUP,
+        )
+
+    out = derived_dir("sg_mrg", sf_dir, "documents", build)
+    return os.path.join(out, "documents_mrg.parquet")
 
 
 def row_group_stats(path: str) -> list[dict]:
@@ -717,8 +724,6 @@ def _oracle_path(table: str) -> str:
     return f"/root/testdata/sf0.01/{table}.parquet"
 
 
-_MRG_ORACLE_PATH = os.path.join(MRG_ROOT, "sf0.01", "documents_mrg.parquet")
-
 QUERIES = {
     "r1_rowgroup_meta": q_r1_rowgroup_meta,
     "r6_chunk_values": q_r6_chunk_values,
@@ -746,14 +751,14 @@ ORACLES = {
                path_in_schema AS column_name,
                CAST(total_compressed_size AS BIGINT) AS compressed_bytes,
                CAST(total_uncompressed_size AS BIGINT) AS uncompressed_bytes
-        FROM parquet_metadata('{_MRG_ORACLE_PATH}')
+        FROM parquet_metadata('{ORACLE_MRG_PATH}')
     """,
     "r8_page_index": f"""
         SELECT CAST(row_group_id AS INT) AS row_group,
                path_in_schema AS column_name,
                CAST(num_values AS BIGINT) AS data_values,
                CAST(data_page_offset AS BIGINT) AS first_data_page_offset
-        FROM parquet_metadata('{_MRG_ORACLE_PATH}')
+        FROM parquet_metadata('{ORACLE_MRG_PATH}')
     """,
     "r6_fleet_audit": """
         SELECT file_name,

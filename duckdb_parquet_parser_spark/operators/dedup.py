@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from ..cache import ArtifactKind, append_artifact, ensure_artifact, write_artifact
 from ..catalog import load_table, scale_out
-from ..fsmeta import docs_fingerprint
+from ..fsmeta import table_fingerprint
 from .lsh import banded_pairs
 from .ngram_stats import LOGIT_SQL as _LOGIT_SQL_SRC
 
@@ -272,7 +272,7 @@ def _verify_jaccard_pairs(
     1.85 M surviving intersects (−73%), verify stage 3.8 → ~1.5 s. The
     two conjuncts land in one Catalyst ``Filter`` whose ``And``
     short-circuits, so the intersect never runs on a size-rejected row
-    (plan-asserted in tests/test_r18_fixes.py)."""
+    (plan-asserted in tests/test_lsh.py)."""
     sets_a, sets_b = _doc_word_sets(spark, sf_dir, "a"), _doc_word_sets(spark, sf_dir, "b")
     hint = hinted and _wont_broadcast(sets_a, spark)
     size_gate = F.lit(JACCARD_THRESHOLD - 1e-4)
@@ -519,7 +519,7 @@ def _memo_key(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
 
     app_id = spark.sparkContext.applicationId
     path = os.path.abspath(sf_dir)
-    fp = docs_fingerprint(sf_dir)
+    fp = table_fingerprint(sf_dir)
     # Evict (a) entries left by stopped sessions — their checkpointed
     # blocks are gone with the old executors and must not pin memory or
     # answer — and (b) same-session entries for this PATH whose documents

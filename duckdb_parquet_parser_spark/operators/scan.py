@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..catalog import load_table
+from ..inspect import ORACLE_MRG_PATH
 
 
 def schema_dataframe(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -132,16 +133,6 @@ def q_f3_string_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Materialize the sf0.01 fixture at import time (guarded) so the oracle's
-# pinned path exists no matter which side the driver evaluates first.
-try:
-    from ..inspect import multi_rowgroup_documents as _mrg
-
-    _R4_FIXTURE_SF001 = _mrg("/root/testdata/sf0.01")
-except Exception:  # pragma: no cover — driver env without the fixture dir
-    _R4_FIXTURE_SF001 = "/tmp/spark_graft_fixtures/sf0.01/documents_mrg.parquet"
-
-
 QUERIES = {
     "r2_schema": q_r2_schema,
     "r2_counts": q_r2_counts,
@@ -169,12 +160,12 @@ ORACLES = {
     "r3_full_column_scan": "SELECT l_quantity FROM lineitem",
     # bounds derived from the fixture's own footer (parquet_metadata), so
     # the oracle discriminates row-group scoping instead of degenerating to
-    # a full-table read. Path pinned to the driver's sf0.01 gate; the local
-    # harness retargets it per sf (testing.retarget_oracle_sql).
+    # a full-table read. The pinned path is swapped for the copy of the
+    # sf dir that runs (testing.retarget_oracle_sql).
     "r4_rowgroup_scan": f"""
         WITH rg AS (
             SELECT DISTINCT row_group_id, row_group_num_rows
-            FROM parquet_metadata('{_R4_FIXTURE_SF001}')
+            FROM parquet_metadata('{ORACLE_MRG_PATH}')
         ),
         bounds AS (
             SELECT
@@ -187,7 +178,7 @@ ORACLES = {
         pos AS (
             SELECT doc_id, text,
                    row_number() OVER (ORDER BY doc_id) - 1 AS p
-            FROM read_parquet('{_R4_FIXTURE_SF001}')
+            FROM read_parquet('{ORACLE_MRG_PATH}')
         )
         SELECT doc_id, text FROM pos, bounds WHERE p >= lo AND p < hi
     """,

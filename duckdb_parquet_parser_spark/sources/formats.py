@@ -15,23 +15,14 @@ inference is a full extra pass at 100 TB.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import scratch_path
 from ..catalog import load_table
 
 _COLS = ["doc_id", "text", "lang", "source", "n_chars"]
-
-
-def _tmp(sf_dir: str, name: str) -> str:
-    """Scratch sink path keyed by the sf tag: two processes certifying
-    DIFFERENT scale factors concurrently (driver gate + a local test run)
-    must not overwrite each other's round-trip directories — an unkeyed
-    path produced interleaved row sets under exactly that race."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return os.path.join(tempfile.gettempdir(), f"{name}_{tag}")
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,18 +89,18 @@ def json_roundtrip(df: DataFrame, path: str) -> DataFrame:
 
 
 def q_src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp(sf_dir, "sg_src_csv")
+    out = scratch_path(sf_dir, "sg_src_csv")
     return csv_roundtrip(_docs(spark, sf_dir), out).select(*_COLS)
 
 
 def q_src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = _tmp(sf_dir, "sg_src_json")
+    out = scratch_path(sf_dir, "sg_src_json")
     return json_roundtrip(_docs(spark, sf_dir), out).select(*_COLS)
 
 
 def q_src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC write + read-back (Spark's second columnar format, built in)."""
-    out = _tmp(sf_dir, "sg_src_orc")
+    out = scratch_path(sf_dir, "sg_src_orc")
     df = _docs(spark, sf_dir)
     df.write.mode("overwrite").orc(out)
     return spark.read.schema(df.schema).orc(out).select(*_COLS)
@@ -124,7 +115,7 @@ def q_src_partitioned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter on the partition column. At scale this is THE layout lever —
     the pruned scan lists and reads a single directory, not the table
     (PartitionFilters asserted in tests/test_plans.py)."""
-    out = _tmp(sf_dir, "sg_src_part_events")
+    out = scratch_path(sf_dir, "sg_src_part_events")
     ev = load_table(spark, sf_dir, "events").select(*PART_COLS)
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     return (

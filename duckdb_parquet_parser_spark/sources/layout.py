@@ -16,18 +16,11 @@ These are the two levers that matter most at 100 TB:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-
-WAREHOUSE = os.path.join(tempfile.gettempdir(), "spark_graft_warehouse")
-
-
-def _sf_tag(sf_dir: str) -> str:
-    return os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
 
 
 def write_partitioned(
@@ -192,25 +185,28 @@ def compact_files(
     )
 
 
-def clustered_documents(spark: SparkSession, sf_dir: str, n_files: int = 8) -> str:
+CLUSTERED_FILES = 8
+
+
+def clustered_documents(spark: SparkSession, sf_dir: str) -> str:
     """Range-clustered copy of the documents table (clustered on doc_id into
-    ~``n_files`` files with disjoint min/max ranges), built once per SF dir
-    and reused — the one-time table-maintenance pass that makes footer-stat
-    file skipping possible."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    out = os.path.join(
-        tempfile.gettempdir(), f"sg_docs_clustered_{_sf_tag(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+    ~``CLUSTERED_FILES`` files with disjoint min/max ranges), written once
+    per content of the table (``cache.derived_dir``) — the one-time
+    table-maintenance pass that makes footer-stat file skipping possible."""
+    from ..cache import derived_dir  # cache imports this module
+
+    def build(tmp: str) -> None:
+        src = os.path.join(sf_dir, "documents.parquet")
         total = os.path.getsize(src)
         compact_files(
             spark,
             src,
-            out,
-            target_file_bytes=max(1, -(-total // n_files)),
+            tmp,
+            target_file_bytes=max(1, -(-total // CLUSTERED_FILES)),
             cluster_col="doc_id",
         )
-    return out
+
+    return derived_dir("sg_docs_clustered", sf_dir, "documents", build)
 
 
 def prune_files_by_stats(
@@ -289,7 +285,7 @@ def q_f1_clustered_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1 data skipping, realized: range-cluster documents on doc_id
     (one-time maintenance), then serve a selective range predicate by
     footer-stat file pruning + the residual pushed filter. The scan lists
-    only the overlapping files (~1 of ``n_files``; asserted in
+    only the overlapping files (~1 of ``CLUSTERED_FILES``; asserted in
     tests/test_layout.py); row-group pruning inside the kept files comes
     free from the pushed predicate."""
     out = clustered_documents(spark, sf_dir)
@@ -329,17 +325,18 @@ def zvalue(a, b, bits_a: int = 13, bits_b: int = 10):
     return z
 
 
-def zordered_documents(
-    spark: SparkSession, sf_dir: str, n_files: int = 16
-) -> str:
-    """Documents re-clustered on z(doc_id, n_chars) into ``n_files`` files
-    (built once per SF dir). Each file covers a contiguous z range — a
-    small rectangle-union in (doc_id, n_chars) space — so range predicates
-    on EITHER column skip most files via footer min/max."""
-    out = os.path.join(
-        tempfile.gettempdir(), f"sg_docs_zorder_{_sf_tag(sf_dir)}"
-    )
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
+ZORDER_FILES = 16
+
+
+def zordered_documents(spark: SparkSession, sf_dir: str) -> str:
+    """Documents re-clustered on z(doc_id, n_chars) into ``ZORDER_FILES``
+    files, written once per content of the table (``cache.derived_dir``).
+    Each file covers a contiguous z range — a small rectangle-union in
+    (doc_id, n_chars) space — so range predicates on EITHER column skip
+    most files via footer min/max."""
+    from ..cache import derived_dir  # cache imports this module
+
+    def build(tmp: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         # Bit widths come from the build-time column maxima (one footer-
         # cheap agg during one-time maintenance), so larger SFs keep full
@@ -361,12 +358,13 @@ def zordered_documents(
             "zval", zvalue(F.col("doc_id"), F.col("n_chars"), bits_a, bits_b)
         )
         (
-            docs.repartitionByRange(n_files, "zval")
+            docs.repartitionByRange(ZORDER_FILES, "zval")
             .sortWithinPartitions("zval")
             .write.mode("overwrite")
-            .parquet(out)
+            .parquet(tmp)
         )
-    return out
+
+    return derived_dir("sg_docs_zorder", sf_dir, "documents", build)
 
 
 ZPRUNE_LO, ZPRUNE_HI = 480, 553  # n_chars band — the NON-primary dimension
@@ -473,7 +471,9 @@ def q_src_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly — the plan has NO Exchange on either side (asserted in
     tests/test_layout.py). At 100 TB this turns every repeated join on the
     key into a map-side merge: the shuffle is paid once at write time."""
-    tag = _sf_tag(sf_dir)
+    from ..cache import dir_tag  # cache imports this module
+
+    tag = dir_tag(sf_dir)
     ot, ct = f"sg_orders_bkt_{tag}", f"sg_customer_bkt_{tag}"
     write_bucketed(
         load_table(spark, sf_dir, "orders").select(

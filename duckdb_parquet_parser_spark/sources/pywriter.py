@@ -586,13 +586,11 @@ def q_w4_pywriter_roundtrip(spark, sf_dir: str):
     mismatch. Driver-side byte assembly is the point (parity artifact
     with parquet_writer.cpp); the scale write path stays
     df.write.parquet (sources/writer.py)."""
-    import tempfile
-
     import pyarrow.parquet as pq
 
+    from ..cache import scratch_path
     from ..catalog import table_path
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
     t = pq.read_table(table_path(sf_dir, "documents"), columns=["doc_id", "lang", "text"])
     cols = [t.column(c).to_pylist() for c in ("doc_id", "lang", "text")]
     specs = [
@@ -600,7 +598,7 @@ def q_w4_pywriter_roundtrip(spark, sf_dir: str):
         ColumnSpec("lang", "byte_array", converted_type=0),  # UTF8
         ColumnSpec("text", "byte_array", converted_type=0),
     ]
-    path = os.path.join(tempfile.gettempdir(), f"sg_w4_pywriter_{tag}.parquet")
+    path = scratch_path(sf_dir, "sg_w4_pywriter") + ".parquet"
     tmp = f"{path}.{os.getpid()}.tmp"
     w = ReferenceParquetWriter(tmp, specs)
     half = max(1, len(cols[0]) // 2)  # two row groups, reference-style

@@ -24,6 +24,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import scratch_path
 from ..catalog import load_table
 
 REFERENCE_PAGE_SIZE = 1024  # parquet_writer.hpp:34-35
@@ -89,10 +90,7 @@ def q_w1_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write documents with reference knobs → read back → full contents.
     Oracle = the source table: proves lossless write+read."""
     df = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return round_trip(
-        df, os.path.join(tempfile.gettempdir(), f"sg_w1_docs_{tag}")
-    ).select(
+    return round_trip(df, scratch_path(sf_dir, "sg_w1_docs")).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
 
@@ -109,8 +107,7 @@ def q_w1_roundtrip_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     (column_reader.cpp:13-15); this engine reads and writes them all.
     Oracle = the source table again — lossless through compression."""
     df = load_table(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(tempfile.gettempdir(), f"sg_w1_docs_zstd_{tag}")
+    path = scratch_path(sf_dir, "sg_w1_docs_zstd")
     df.write.mode("overwrite").option("compression", "zstd").parquet(path)
     return spark.read.parquet(path).select(
         "doc_id", "text", "lang", "source", "n_chars"

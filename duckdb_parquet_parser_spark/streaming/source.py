@@ -14,38 +14,35 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..cache import derived_dir
 from ..catalog import load_table
 
-STAGE_ROOT = "/tmp/spark_graft_streaming"
 N_STAGE_FILES = 8
 
 
-def stage_events(spark: SparkSession, sf_dir: str, n_files: int = N_STAGE_FILES) -> str:
-    """Write `events` as ``n_files`` time-range-partitioned parquet files
-    (idempotent per sf_dir; staging happens once and is reused)."""
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, tag, "events")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+def stage_events(spark: SparkSession, sf_dir: str) -> str:
+    """`events` re-laid as ``N_STAGE_FILES`` time-range-partitioned parquet
+    files, written once per content of the table (``cache.derived_dir``)."""
+
+    def build(tmp: str) -> None:
         (
             load_table(spark, sf_dir, "events")
-            .repartitionByRange(n_files, "ts")
+            .repartitionByRange(N_STAGE_FILES, "ts")
             .sortWithinPartitions("ts")
             .write.mode("overwrite")
-            .parquet(out)
+            .parquet(tmp)
         )
         # The file source dequeues by modification time; parallel writers
         # produce ~tied mtimes, i.e. arbitrary arrival order. Re-stamp the
         # part files (name order == ts-range order after repartitionByRange)
         # so arrival follows event time and a short watermark never drops
         # an on-time file — the shape of a well-behaved production feed.
-        parts = sorted(
-            f for f in os.listdir(out) if f.startswith("part-")
-        )
-        base = int(os.path.getmtime(os.path.join(out, parts[0])))
+        parts = sorted(f for f in os.listdir(tmp) if f.startswith("part-"))
+        base = int(os.path.getmtime(os.path.join(tmp, parts[0])))
         for i, f in enumerate(parts):
-            os.utime(os.path.join(out, f), (base + i, base + i))
-    return out
+            os.utime(os.path.join(tmp, f), (base + i, base + i))
+
+    return derived_dir("sg_events_staged", sf_dir, "events", build)
 
 
 def event_stream(

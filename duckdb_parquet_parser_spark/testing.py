@@ -8,13 +8,13 @@ from __future__ import annotations
 import datetime as _dt
 import hashlib
 import math
-import os
 from dataclasses import dataclass
 
 import duckdb
 import pandas as pd
 
 from .catalog import TABLES, table_path
+from .inspect import ORACLE_MRG_PATH, multi_rowgroup_documents
 
 
 # The driver runs the correctness gate at exactly this scale factor, and
@@ -22,14 +22,16 @@ from .catalog import TABLES, table_path
 # (parquet_metadata etc.) pin the sf0.01 path. Locally, run_all retargets
 # those pins to whatever sf_dir is under test so parity holds at any scale.
 ORACLE_SF_DIR = "/root/testdata/sf0.01"
-ORACLE_FIXTURE_DIR = "/tmp/spark_graft_fixtures/sf0.01"
 
 
 def retarget_oracle_sql(sql: str, sf_dir: str) -> str:
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    return sql.replace(ORACLE_SF_DIR, sf_dir.rstrip("/")).replace(
-        ORACLE_FIXTURE_DIR, f"/tmp/spark_graft_fixtures/{tag}"
-    )
+    """Point an oracle's pinned paths at ``sf_dir``: its tables, and the
+    multi-row-group copy of its documents (built on first use, and only
+    for the oracles that read it)."""
+    sql = sql.replace(ORACLE_SF_DIR, sf_dir.rstrip("/"))
+    if ORACLE_MRG_PATH in sql:
+        sql = sql.replace(ORACLE_MRG_PATH, multi_rowgroup_documents(sf_dir))
+    return sql
 
 
 def duckdb_connection(sf_dir: str) -> "duckdb.DuckDBPyConnection":

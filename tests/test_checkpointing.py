@@ -134,14 +134,14 @@ def test_memo_key_evicts_stale_same_app_entries(spark, sf_smoke, sf_correct):
     stale (same path, different fingerprint) must be evicted — and its
     blocks freed — on the next lookup for that path; entries for OTHER
     paths and live entries for this path must survive."""
-    from duckdb_parquet_parser_spark.fsmeta import docs_fingerprint
+    from duckdb_parquet_parser_spark.fsmeta import table_fingerprint
     from duckdb_parquet_parser_spark.operators import dedup
 
     app = spark.sparkContext.applicationId
     path = os.path.abspath(sf_smoke)
     other_path = os.path.abspath(sf_correct)
-    live_fp = docs_fingerprint(sf_smoke)
-    other_fp = docs_fingerprint(sf_correct)
+    live_fp = table_fingerprint(sf_smoke)
+    other_fp = table_fingerprint(sf_correct)
 
     before = _cached_rdd_ids(spark)
     stale = checkpoint_df(spark.range(10).withColumn("v", F.col("id")), eager=True)

@@ -12,9 +12,9 @@ import os
 import duckdb
 import pytest
 
+from duckdb_parquet_parser_spark.cache import TEMP_INFIX
 from duckdb_parquet_parser_spark.operators.media_landing import (
     _file_uri,
-    _landing_dir,
     land_media_parquet,
     q_ns_mm_ingest_parquet,
 )
@@ -76,7 +76,7 @@ def test_stale_fingerprint_landing_pruned(spark, sf_smoke, tmp_path):
     path_tag = os.path.basename(out).split("_")[0]
     stale = os.path.join(base, f"{path_tag}_deadbeefdead")
     os.makedirs(stale, exist_ok=True)
-    _landing_dir(sf_smoke)
+    land_media_parquet(spark, sf_smoke)
     assert not os.path.exists(stale)
     assert os.path.exists(out)  # the live entry survives
 
@@ -88,7 +88,7 @@ def test_dead_source_landing_pruned(spark, sf_smoke, tmp_path):
     os.makedirs(dead, exist_ok=True)
     with open(os.path.join(dead, "_source.txt"), "w") as f:
         f.write(str(tmp_path / "vanished"))
-    _landing_dir(sf_smoke)
+    land_media_parquet(spark, sf_smoke)
     assert not os.path.exists(dead)
     assert os.path.exists(out)
 
@@ -101,7 +101,7 @@ def test_fresh_markerless_sibling_survives(spark, sf_smoke):
     fresh = os.path.join(base, "aaaabbbbcccc_ddddeeeeffff")
     os.makedirs(fresh, exist_ok=True)
     try:
-        _landing_dir(sf_smoke)
+        land_media_parquet(spark, sf_smoke)
         assert os.path.exists(fresh)
     finally:
         # ignore_errors: if the prune regresses and eats `fresh`, the
@@ -112,7 +112,7 @@ def test_fresh_markerless_sibling_survives(spark, sf_smoke):
 
 
 def test_crashed_landing_temp_pruned_after_grace(spark, sf_smoke, tmp_path):
-    """A `.landing.` temp dir with a LIVE-source marker inside is a
+    """A build temp dir with a LIVE-source marker inside is a
     crashed publish (the rename never happened) — it must age out like
     the marker-less case, not be immunized by its marker (code review
     r11: the leak was a full parquet copy per crash, kept forever)."""
@@ -120,12 +120,12 @@ def test_crashed_landing_temp_pruned_after_grace(spark, sf_smoke, tmp_path):
 
     out = land_media_parquet(spark, sf_smoke)
     base = os.path.dirname(out)
-    crashed = os.path.join(base, "beefbeefbeef_cafecafecafe.landing.99999")
+    crashed = os.path.join(base, f"beefbeefbeef_cafecafecafe{TEMP_INFIX}99999")
     os.makedirs(crashed, exist_ok=True)
     with open(os.path.join(crashed, "_source.txt"), "w") as f:
         f.write(os.path.abspath(sf_smoke))  # source IS alive
     try:
-        _landing_dir(sf_smoke)
+        land_media_parquet(spark, sf_smoke)
         assert os.path.exists(crashed)  # fresh: concurrent-landing grace
         old = time.time() - 7200
         # Age EVERYTHING inside: the grace check is the recursive newest
@@ -134,7 +134,7 @@ def test_crashed_landing_temp_pruned_after_grace(spark, sf_smoke, tmp_path):
         # signal that distinguishes a crash from a slow live write.
         os.utime(os.path.join(crashed, "_source.txt"), (old, old))
         os.utime(crashed, (old, old))
-        _landing_dir(sf_smoke)
+        land_media_parquet(spark, sf_smoke)
         assert not os.path.exists(crashed)  # aged out despite live marker
     finally:
         import shutil
@@ -153,7 +153,7 @@ def test_slow_live_landing_survives_stale_toplevel_mtime(spark, sf_smoke):
 
     out = land_media_parquet(spark, sf_smoke)
     base = os.path.dirname(out)
-    slow = os.path.join(base, "abadc0deabad_feedf00dfeed.landing.4242")
+    slow = os.path.join(base, f"abadc0deabad_feedf00dfeed{TEMP_INFIX}4242")
     nested = os.path.join(slow, "_temporary", "0")
     os.makedirs(nested, exist_ok=True)
     with open(os.path.join(nested, "part-00000"), "w") as f:
@@ -162,7 +162,7 @@ def test_slow_live_landing_survives_stale_toplevel_mtime(spark, sf_smoke):
     os.utime(os.path.join(slow, "_temporary"), (old, old))
     os.utime(slow, (old, old))  # top-level looks abandoned
     try:
-        _landing_dir(sf_smoke)
+        land_media_parquet(spark, sf_smoke)
         assert os.path.exists(slow), "live slow landing was reaped"
     finally:
         import shutil

@@ -651,9 +651,8 @@ def test_media_dir_staging_race_rules(tmp_path):
     import os
     import time
 
+    from duckdb_parquet_parser_spark.cache import GRACE_SECONDS, TEMP_INFIX
     from duckdb_parquet_parser_spark.operators.multimodal_synth import (
-        _STAGING_GRACE_SECONDS,
-        _media_dir,
         stage_media_dir,
     )
 
@@ -662,18 +661,18 @@ def test_media_dir_staging_race_rules(tmp_path):
     assert os.path.exists(os.path.join(out, "_source.txt"))
     base = os.path.dirname(out)
 
-    fresh = os.path.join(base, "cafe000000f0_aaaaaaaaaaaa.staging.999")
+    fresh = os.path.join(base, f"cafe000000f0_aaaaaaaaaaaa{TEMP_INFIX}999")
     os.makedirs(fresh, exist_ok=True)
-    old = os.path.join(base, "cafe000000f0_bbbbbbbbbbbb.staging.998")
+    old = os.path.join(base, f"cafe000000f0_bbbbbbbbbbbb{TEMP_INFIX}998")
     os.makedirs(old, exist_ok=True)
-    past = time.time() - _STAGING_GRACE_SECONDS - 60
+    past = time.time() - GRACE_SECONDS - 60
     os.utime(old, (past, past))
     dead = os.path.join(base, "cafe000000f0_cccccccccccc")
     os.makedirs(dead, exist_ok=True)
     with open(os.path.join(dead, "_source.txt"), "w") as f:
         f.write(str(tmp_path / "gone"))
     try:
-        again = _media_dir(sf)
+        again = stage_media_dir(sf)
         assert again == out and os.path.exists(os.path.join(out, "_source.txt"))
         assert os.path.exists(fresh), "fresh in-flight staging was reaped"
         assert not os.path.exists(old), "crashed old staging not reaped"
@@ -695,29 +694,28 @@ def test_crashed_staging_with_marker_pruned_after_grace(tmp_path):
     import shutil
     import time
 
+    from duckdb_parquet_parser_spark.cache import GRACE_SECONDS, TEMP_INFIX
     from duckdb_parquet_parser_spark.operators.multimodal_synth import (
-        _STAGING_GRACE_SECONDS,
-        _media_dir,
         stage_media_dir,
     )
 
     sf = "/root/testdata/sf0.001"
     out = stage_media_dir(sf)
     base = os.path.dirname(out)
-    crashed = os.path.join(base, "dead0000beef_0f0f0f0f0f0f.staging.777")
+    crashed = os.path.join(base, f"dead0000beef_0f0f0f0f0f0f{TEMP_INFIX}777")
     os.makedirs(crashed, exist_ok=True)
     with open(os.path.join(crashed, "doc_0.bin"), "wb") as f:
         f.write(b"\x00" * 16)  # partial corpus copy
     with open(os.path.join(crashed, "_source.txt"), "w") as f:
         f.write(os.path.abspath(sf))  # source IS alive — must not immunize
     try:
-        _media_dir(sf)
+        stage_media_dir(sf)
         assert os.path.exists(crashed), "fresh crash candidate reaped early"
-        past = time.time() - _STAGING_GRACE_SECONDS - 60
+        past = time.time() - GRACE_SECONDS - 60
         for name in os.listdir(crashed):
             os.utime(os.path.join(crashed, name), (past, past))
         os.utime(crashed, (past, past))
-        _media_dir(sf)
+        stage_media_dir(sf)
         assert not os.path.exists(crashed), (
             "crashed marked staging leaked past the grace age"
         )
